@@ -49,6 +49,11 @@ final case class PipelineReport(stages: Seq[StageReport]) {
   *
   * The composition stays LAZY: ops contribute expressions to one logical
   * plan; only statistic-collection sub-jobs and the final action execute.
+  * Each sanitizer pass after an op is handed the frame that op consumed —
+  * always the previous sanitizer's output, the carried-forward one after a
+  * skipped op — so it skips the columns the op passed through untouched
+  * ([[graft.ops.Sanitize]]'s settled-attribute rule) and issues no job at
+  * all when the op changed nothing it would clean.
   */
 object Pipeline {
   def run(df: DataFrame, config: PipelineConfig): (DataFrame, PipelineReport) = {
@@ -57,7 +62,7 @@ object Pipeline {
       case ((cur, reports), op) =>
         Try(op(cur)) match {
           case Success(res) =>
-            val next = if (config.sanitize) Sanitize.transform(res.df) else res.df
+            val next = if (config.sanitize) Sanitize.transform(res.df, cur) else res.df
             val metrics = if (config.collectMetrics) res.metrics() else Map.empty[String, Any]
             (next, reports :+ StageReport(op.name, ok = true, res.updates, None, metrics))
           case Failure(e) =>

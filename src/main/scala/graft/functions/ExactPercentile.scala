@@ -635,43 +635,37 @@ object ExactPercentile {
     * session's function registry so expression code can reach it via
     * `call_function`. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_percentile",
-      (args: Seq[Expression]) => {
-        val bound = if (args.length >= 3) {
-          args(2).eval() match {
-            case i: Int => i
-            // a bound past Int.MaxValue means "never spill" — clamp, don't
-            // truncate (toInt would silently install a ~2^31-wrapped bound)
-            case l: Long => math.min(l, Int.MaxValue.toLong).toInt
-            case s: Short => s.toInt
-            case b: Byte => b.toInt
-            case other => throw new IllegalArgumentException(
-              s"maxDistinct must be a foldable integer, got $other")
-          }
-        } else confMaxDistinct
-        ExactPercentile(args.head, args(1), bound)
-      },
-      "scala_udf")
+    SessionFunctions.registerOnce(spark, "graft_percentile") { args =>
+      val bound = if (args.length >= 3) {
+        args(2).eval() match {
+          case i: Int => i
+          // a bound past Int.MaxValue means "never spill" — clamp, don't
+          // truncate (toInt would silently install a ~2^31-wrapped bound)
+          case l: Long => math.min(l, Int.MaxValue.toLong).toInt
+          case s: Short => s.toInt
+          case b: Byte => b.toInt
+          case other => throw new IllegalArgumentException(
+            s"maxDistinct must be a foldable integer, got $other")
+        }
+      } else confMaxDistinct
+      ExactPercentile(args.head, args(1), bound)
+    }
 
   /** Idempotently register
     * `graft_median_absdev(col, devP [, maxDistinct])` — the one-pass
     * median + deviation-percentile aggregate ([[MedianAbsDev]]). */
   def registerMedianAbsDev(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_median_absdev",
-      (args: Seq[Expression]) => {
-        val bound = if (args.length >= 3) {
-          args(2).eval() match {
-            case i: Int => i
-            case l: Long => math.min(l, Int.MaxValue.toLong).toInt
-            case s: Short => s.toInt
-            case b: Byte => b.toInt
-            case other => throw new IllegalArgumentException(
-              s"maxDistinct must be a foldable integer, got $other")
-          }
-        } else confMaxDistinct
-        MedianAbsDev(args.head, args(1), bound)
-      },
-      "scala_udf")
+    SessionFunctions.registerOnce(spark, "graft_median_absdev") { args =>
+      val bound = if (args.length >= 3) {
+        args(2).eval() match {
+          case i: Int => i
+          case l: Long => math.min(l, Int.MaxValue.toLong).toInt
+          case s: Short => s.toInt
+          case b: Byte => b.toInt
+          case other => throw new IllegalArgumentException(
+            s"maxDistinct must be a foldable integer, got $other")
+        }
+      } else confMaxDistinct
+      MedianAbsDev(args.head, args(1), bound)
+    }
 }

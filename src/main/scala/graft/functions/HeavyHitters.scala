@@ -181,12 +181,9 @@ case class MisraGriesTerms(
 object HeavyHitters {
   /** Session registration, the [[ExactPercentile.register]] pattern. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters",
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "graft_heavy_hitters(termCol, k) takes exactly 2 arguments")
-        MisraGriesTerms(args.head, args(1))
-      },
-      "scala_udf")
+    SessionFunctions.registerOnce(spark, "graft_heavy_hitters") { args =>
+      require(args.length == 2,
+        "graft_heavy_hitters(termCol, k) takes exactly 2 arguments")
+      MisraGriesTerms(args.head, args(1))
+    }
 }

@@ -109,12 +109,9 @@ object MediaKernels {
   /** Register `graft_jpeg_sof(content)` (same per-session pattern as
     * [[VectorKernels.register]]). Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_sof",
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          s"graft_jpeg_sof takes 1 arg, got ${args.length}")
-        JpegSofPacked(args(0))
-      },
-      "scala_udf")
+    SessionFunctions.registerOnce(spark, "graft_jpeg_sof") { args =>
+      require(args.length == 1,
+        s"graft_jpeg_sof takes 1 arg, got ${args.length}")
+      JpegSofPacked(args(0))
+    }
 }

@@ -199,49 +199,34 @@ object TextKernels {
   /** Register the text kernels in the session registry (same
     * `call_function` route as [[VectorKernels.register]]). Idempotent. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"graft_shingles takes (text, k), got ${args.length}")
-        ShingleSet(args(0), foldInt(args(1), "k"))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_vote",
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"graft_simhash_vote takes (hashes, bits), got ${args.length}")
-        SimhashVote(args(0), foldInt(args(1), "bits"))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition",
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          s"graft_repetition takes (text), got ${args.length}")
-        RepetitionStruct(args(0))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_probe_mask",
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          s"graft_probe_mask takes (text), got ${args.length}")
-        ProbeMask(args(0))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rep_keep",
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          s"graft_rep_keep takes (text, 4 thresholds), got ${args.length}")
-        RepetitionKeep(args(0), foldDouble(args(1), "maxDupWordFrac"),
-          foldDouble(args(2), "maxTopBigramCharFrac"),
-          foldDouble(args(3), "maxTopTrigramCharFrac"),
-          foldDouble(args(4), "maxDupFivegramCharFrac"))
-      },
-      "scala_udf")
+    SessionFunctions.registerOnce(spark, "graft_shingles") { args =>
+      require(args.length == 2,
+        s"graft_shingles takes (text, k), got ${args.length}")
+      ShingleSet(args(0), foldInt(args(1), "k"))
+    }
+    SessionFunctions.registerOnce(spark, "graft_simhash_vote") { args =>
+      require(args.length == 2,
+        s"graft_simhash_vote takes (hashes, bits), got ${args.length}")
+      SimhashVote(args(0), foldInt(args(1), "bits"))
+    }
+    SessionFunctions.registerOnce(spark, "graft_repetition") { args =>
+      require(args.length == 1,
+        s"graft_repetition takes (text), got ${args.length}")
+      RepetitionStruct(args(0))
+    }
+    SessionFunctions.registerOnce(spark, "graft_probe_mask") { args =>
+      require(args.length == 1,
+        s"graft_probe_mask takes (text), got ${args.length}")
+      ProbeMask(args(0))
+    }
+    SessionFunctions.registerOnce(spark, "graft_rep_keep") { args =>
+      require(args.length == 5,
+        s"graft_rep_keep takes (text, 4 thresholds), got ${args.length}")
+      RepetitionKeep(args(0), foldDouble(args(1), "maxDupWordFrac"),
+        foldDouble(args(2), "maxTopBigramCharFrac"),
+        foldDouble(args(3), "maxTopTrigramCharFrac"),
+        foldDouble(args(4), "maxDupFivegramCharFrac"))
+    }
   }
 }
 

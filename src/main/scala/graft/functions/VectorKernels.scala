@@ -659,59 +659,41 @@ object VectorKernels {
     * `call_function` (same pattern as [[ExactPercentile.register]]).
     * Idempotent. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"graft_dot takes 2 args, got ${args.length}")
-        DotProduct(args(0), args(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"graft_cosine takes 2 args, got ${args.length}")
-        CosineSim(args(0), args(1))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_ok",
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          s"graft_vec_ok takes 1 arg, got ${args.length}")
-        ArrayFullyDefined(args(0))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sig_agree",
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_sig_agree takes (a, b, numHashes, minFrac), got ${args.length}")
-        SignatureAgreement(args(0), args(1),
-          foldInt(args(2), "numHashes"), foldDouble(args(3), "minFrac"))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_jaccard",
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_sorted_jaccard takes (a, b, threshold), got ${args.length}")
-        SortedJaccard(args(0), args(1), foldDouble(args(2), "threshold"))
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_signature",
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"graft_signature takes (vec, dim, planes), got ${args.length}")
-        def int(e: Expression, what: String): Int = e.eval() match {
-          case i: Int => i
-          case other => throw new IllegalArgumentException(
-            s"$what must be a foldable int, got $other")
-        }
-        HyperplaneSignature(args(0), int(args(1), "dim"),
-          int(args(2), "planes"))
-      },
-      "scala_udf")
+    SessionFunctions.registerOnce(spark, "graft_dot") { args =>
+      require(args.length == 2, s"graft_dot takes 2 args, got ${args.length}")
+      DotProduct(args(0), args(1))
+    }
+    SessionFunctions.registerOnce(spark, "graft_cosine") { args =>
+      require(args.length == 2,
+        s"graft_cosine takes 2 args, got ${args.length}")
+      CosineSim(args(0), args(1))
+    }
+    SessionFunctions.registerOnce(spark, "graft_vec_ok") { args =>
+      require(args.length == 1,
+        s"graft_vec_ok takes 1 arg, got ${args.length}")
+      ArrayFullyDefined(args(0))
+    }
+    SessionFunctions.registerOnce(spark, "graft_sig_agree") { args =>
+      require(args.length == 4,
+        s"graft_sig_agree takes (a, b, numHashes, minFrac), got ${args.length}")
+      SignatureAgreement(args(0), args(1),
+        foldInt(args(2), "numHashes"), foldDouble(args(3), "minFrac"))
+    }
+    SessionFunctions.registerOnce(spark, "graft_sorted_jaccard") { args =>
+      require(args.length == 3,
+        s"graft_sorted_jaccard takes (a, b, threshold), got ${args.length}")
+      SortedJaccard(args(0), args(1), foldDouble(args(2), "threshold"))
+    }
+    SessionFunctions.registerOnce(spark, "graft_signature") { args =>
+      require(args.length == 3,
+        s"graft_signature takes (vec, dim, planes), got ${args.length}")
+      def int(e: Expression, what: String): Int = e.eval() match {
+        case i: Int => i
+        case other => throw new IllegalArgumentException(
+          s"$what must be a foldable int, got $other")
+      }
+      HyperplaneSignature(args(0), int(args(1), "dim"),
+        int(args(2), "planes"))
+    }
   }
 }

@@ -32,15 +32,28 @@ final case class MissingValues(
       case "drop_rows" => df.na.drop("any")
       case "drop_rows_threshold" =>
         df.na.drop(minNonNulls = (threshold * df.columns.length).toInt)
+      // Both drop strategies count nulls only where the schema allows one
+      // and issue no job when no column does.
       case "drop_columns" =>
-        val (counts, _) = Stats.nullCounts(df, df.columns.toSeq)
-        df.drop(counts.filter(_._2 > 0).keys.toSeq: _*)
+        val cand = nullableColsOfType(df, _ => true)
+        if (cand.isEmpty) df
+        else {
+          val (counts, _) = Stats.nullCounts(df, cand)
+          df.drop(counts.filter(_._2 > 0).keys.toSeq: _*)
+        }
       case "drop_columns_threshold" =>
-        // keep cols with >= int(threshold * nrows) non-null values
-        val (counts, n) = Stats.nullCounts(df, df.columns.toSeq)
-        val bad = counts.filter { case (_, nulls) =>
-          (n - nulls) < (threshold * n).toLong }.keys.toSeq
-        df.drop(bad: _*)
+        // keep cols with >= int(threshold * nrows) non-null values; a
+        // non-nullable column holds all n, so only threshold > 1 drops it
+        val cand =
+          if (threshold <= 1.0) nullableColsOfType(df, _ => true)
+          else df.columns.toSeq
+        if (cand.isEmpty) df
+        else {
+          val (counts, n) = Stats.nullCounts(df, cand)
+          val bad = counts.filter { case (_, nulls) =>
+            (n - nulls) < (threshold * n).toLong }.keys.toSeq
+          df.drop(bad: _*)
+        }
       case "fill_mean"   => fillCentral(df, useMean = true)
       case "fill_median" => fillCentral(df, useMean = false)
       case "fill_mode"   => fillMode(df)
@@ -69,10 +82,14 @@ final case class MissingValues(
   /** fill_mean / fill_median: numeric → mean|median with the reference's
     * fallback chain mean→median→0 (`missingValues.py:100-107`, `:131-134`);
     * string → mode, "Unknown" when the column has no non-null value
-    * (`:115-116`). One stats job + one mode job + one projection. */
+    * (`:115-116`). Only NULLABLE columns are fitted and filled: one stats
+    * job + one mode job + one projection over those. Behind the pipeline's
+    * sanitizer every numeric and string column is non-nullable, so the op
+    * then returns its input unchanged with zero jobs. */
   private def fillCentral(df: DataFrame, useMean: Boolean): DataFrame = {
-    val numCols = colsOfType(df, isNumeric)
-    val strCols = colsOfType(df, isString)
+    val numCols = nullableColsOfType(df, isNumeric)
+    val strCols = nullableColsOfType(df, isString)
+    if (numCols.isEmpty && strCols.isEmpty) return df
     val stats = Stats.numeric(df, numCols,
       Stats.Need(moments = useMean, median = true))
     val modes = Stats.modes(df, strCols)
@@ -92,9 +109,11 @@ final case class MissingValues(
 
   /** fill_mode: every column → its mode (`missingValues.py:149-157`).
     * String columns with no mode get "Unknown"; an all-null numeric column
-    * is left null (the reference would corrupt the dtype there). */
+    * is left null (the reference would corrupt the dtype there). Only
+    * nullable columns are fitted; none → the input, with zero jobs. */
   private def fillMode(df: DataFrame): DataFrame = {
-    val targets = df.columns.filter(c => isAtomic(df.schema(c).dataType)).toSeq
+    val targets = nullableColsOfType(df, isAtomic)
+    if (targets.isEmpty) return df
     val modes = Stats.modes(df, targets)
     val proj = df.columns.map { c =>
       val dt = df.schema(c).dataType

@@ -17,7 +17,9 @@ import graft.util.Exprs._
   *    Normalizer); zero-norm rows left unchanged
   *
   * Pre-pass fills nulls with the column median (`normalisation.py:86-94`).
-  * One stats job + one projection, column-count independent.
+  * One stats job + one projection, column-count independent; standard and
+  * minmax add the median's percentile job only when a target column is
+  * nullable.
   */
 object Normalize {
   /** Per-column scaling statistics (reference `get_scaling_statistics`,
@@ -122,13 +124,17 @@ final case class Normalize(
       df: DataFrame): (OpResult, Map[String, Stats.Num]) = {
     val cols = if (columns.nonEmpty) columns else colsOfType(df, isNumeric)
     if (cols.isEmpty) return (OpResult(df, Seq("no numeric columns")), Map.empty)
+    // the median pre-fill needs its percentile job only when a target can
+    // hold a null; without it standard/minmax run one codegen'd stats job
+    val fill = cols.exists(c => df.schema(c).nullable)
     val stats = Stats.numeric(fitDf, cols, method match {
-      case "standard" => Stats.Need(moments = true, median = true)
-      case "minmax" => Stats.Need(extremes = true, median = true)
+      case "standard" => Stats.Need(moments = true, median = fill)
+      case "minmax" => Stats.Need(extremes = true, median = fill)
       case "robust" => Stats.Need(quantiles = true)
       case _ => Stats.Need(median = true)
     })
-    // median pre-fill (normalisation.py:86-94)
+    // median pre-fill (normalisation.py:86-94); a no-op coalesce on a
+    // non-nullable column, whose unfetched median reads as 0
     def filled(c: String): Column =
       coalesce(col(c).cast(DoubleType), lit(stats(c).median.getOrElse(0.0)))
 

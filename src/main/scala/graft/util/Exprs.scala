@@ -107,6 +107,11 @@ object Exprs {
   def colsOfType(df: DataFrame, pred: DataType => Boolean): Seq[String] =
     df.schema.fields.filter(f => pred(f.dataType)).map(_.name).toSeq
 
+  /** [[colsOfType]] restricted to columns whose analyzed schema allows a
+    * null: a non-nullable column needs no null fill, count or drop. */
+  def nullableColsOfType(df: DataFrame, pred: DataType => Boolean): Seq[String] =
+    df.schema.fields.filter(f => f.nullable && pred(f.dataType)).map(_.name).toSeq
+
   def isNumeric(dt: DataType): Boolean = dt.isInstanceOf[NumericType]
   def isString(dt: DataType): Boolean = dt == StringType
   def isAtomic(dt: DataType): Boolean = dt match {

@@ -144,4 +144,14 @@ class ApproxPercentileSpec extends SparkSpec {
       assert(math.abs(med - 2499.5) <= 80.0, s"median=$med")
     } finally spark.conf.unset(graft.functions.ExactPercentile.MaxDistinctKey)
   }
+
+  test("a second register keeps the first builder: the bound is read per build") {
+    // the test above relies on this too: it registers before setting the conf
+    val reg = spark.sessionState.functionRegistry
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_percentile")
+    graft.functions.ExactPercentile.register(spark)
+    val first = reg.lookupFunctionBuilder(id)
+    graft.functions.ExactPercentile.register(spark)
+    assert(first.isDefined && (reg.lookupFunctionBuilder(id).get eq first.get))
+  }
 }

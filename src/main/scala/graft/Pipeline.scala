@@ -3,6 +3,7 @@ package graft
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.DataFrame
 import graft.ops._
+import graft.util.Parallelize
 
 /** Pipeline configuration — the typed analogue of the reference's JSON
   * operations dict (`/root/reference/main.py:240-331`,
@@ -54,10 +55,16 @@ final case class PipelineReport(stages: Seq[StageReport]) {
   * skipped op — so it skips the columns the op passed through untouched
   * ([[graft.ops.Sanitize]]'s settled-attribute rule) and issues no job at
   * all when the op changed nothing it would clean.
+  *
+  * A request small enough to be one input split is planned as a single
+  * partition first ([[graft.util.Parallelize.singleSplit]]), so each fit
+  * job, the dedup and the caller's final action run as one stage with no
+  * exchange; a larger input is planned as it comes.
   */
 object Pipeline {
   def run(df: DataFrame, config: PipelineConfig): (DataFrame, PipelineReport) = {
-    val start = if (config.sanitize) Sanitize.transform(df) else df
+    val in = Parallelize.singleSplit(df)
+    val start = if (config.sanitize) Sanitize.transform(in) else in
     val (out, stages) = config.ops.foldLeft((start, Vector.empty[StageReport])) {
       case ((cur, reports), op) =>
         Try(op(cur)) match {

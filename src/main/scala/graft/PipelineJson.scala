@@ -24,7 +24,9 @@ import graft.ops._
   * }}}
   *
   * The parser is a minimal recursive-descent JSON reader (no third-party
-  * deps are resolvable in this build — build.sbt note).
+  * deps are resolvable in this build — build.sbt note). Any malformed
+  * body fails with an `IllegalArgumentException` whose message ends with
+  * the offset of the fault.
   */
 object PipelineJson {
 
@@ -54,7 +56,7 @@ object PipelineJson {
     }
     def value(): J = {
       skipWs()
-      require(!eof, "unexpected end of input")
+      require(!eof, s"unexpected end of input at $pos")
       s.charAt(pos) match {
         case '{' => obj()
         case '[' => arr()
@@ -75,7 +77,7 @@ object PipelineJson {
       val b = Map.newBuilder[String, J]
       while (true) {
         skipWs(); val k = str(); expect(':'); b += (k -> value()); skipWs()
-        require(!eof, "unterminated object")
+        require(!eof, s"unterminated object at $pos")
         s.charAt(pos) match {
           case ',' => pos += 1
           case '}' => pos += 1; return JObj(b.result())
@@ -90,7 +92,7 @@ object PipelineJson {
       val b = List.newBuilder[J]
       while (true) {
         b += value(); skipWs()
-        require(!eof, "unterminated array")
+        require(!eof, s"unterminated array at $pos")
         s.charAt(pos) match {
           case ',' => pos += 1
           case ']' => pos += 1; return JArr(b.result())
@@ -103,11 +105,12 @@ object PipelineJson {
       expect('"')
       val sb = new StringBuilder
       while (true) {
-        require(!eof, "unterminated string")
+        require(!eof, s"unterminated string at $pos")
         val c = s.charAt(pos); pos += 1
         c match {
           case '"' => return sb.toString
           case '\\' =>
+            require(!eof, s"unterminated escape at ${pos - 1}")
             val e = s.charAt(pos); pos += 1
             e match {
               case '"' => sb += '"'
@@ -119,9 +122,13 @@ object PipelineJson {
               case 'b' => sb += '\b'
               case 'f' => sb += '\f'
               case 'u' =>
-                sb += Integer.parseInt(s.substring(pos, pos + 4), 16).toChar
+                val hex = s.slice(pos, pos + 4)
+                require(hex.length == 4 && hex.forall(Character.digit(_, 16) >= 0),
+                  s"bad unicode escape at ${pos - 2}")
+                sb += Integer.parseInt(hex, 16).toChar
                 pos += 4
-              case other => throw new IllegalArgumentException(s"bad escape \\$other")
+              case other =>
+                throw new IllegalArgumentException(s"bad escape \\$other at ${pos - 2}")
             }
           case other => sb += other
         }
@@ -131,7 +138,10 @@ object PipelineJson {
     private def num(): JNum = {
       val start = pos
       while (!eof && "+-0123456789.eE".indexOf(s.charAt(pos)) >= 0) pos += 1
-      JNum(s.substring(start, pos).toDouble)
+      require(pos > start, s"unexpected '${s.charAt(start)}' at $start")
+      s.substring(start, pos).toDoubleOption
+        .map(JNum(_))
+        .getOrElse(throw new IllegalArgumentException(s"bad number at $start"))
     }
   }
 

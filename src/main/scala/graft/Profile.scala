@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Parallelize
 
 /** Dataset profiler (reference S4, `/root/reference/pipeline.py:411-496`,
   * SURVEY.md §2.1): shape, per-column dtype + missing count + content
@@ -12,9 +13,15 @@ import org.apache.spark.sql.types._
   * (`pipeline.py:429-450`): NULL ∪ empty ∪ whitespace-only ∪ sentinel
   * tokens; for non-string columns NULL (∪ NaN for floating).
   *
-  * Cost: ONE aggregation job for all per-column counts, byte estimates and
-  * the row count + duplicate count (distinct-count shuffle) + `limit(n)`
-  * sample — independent of column count, linear in data size.
+  * Cost: three actions, independent of column count and linear in data
+  * size — ONE aggregate for all per-column counts, byte estimates and the
+  * row count, a `dropDuplicates().count()` for the duplicate count, and a
+  * `limit(n)` sample. Under AQE that is 6 jobs over a multi-partition
+  * input: the aggregate is a map-stage job plus a result job, the distinct
+  * count a map-stage job for the dedup exchange, one for the count's gather
+  * and a result job, the sample one job. A one-split input is planned as a
+  * single partition ([[graft.util.Parallelize.singleSplit]]), so no
+  * exchange is planned and the profile is 3 single-stage jobs.
   */
 object Profile {
   /** Sentinel strings the reference treats as missing (`pipeline.py:437-441`). */
@@ -49,7 +56,8 @@ object Profile {
   final case class DatasetProfile(rows: Long, cols: Int, duplicateRows: Long,
       estBytes: Long, columns: Seq[ColumnProfile], sample: Seq[Map[String, Any]])
 
-  def apply(df: DataFrame, sampleRows: Int = 5): DatasetProfile = {
+  def apply(input: DataFrame, sampleRows: Int = 5): DatasetProfile = {
+    val df = Parallelize.singleSplit(input)
     val cs = df.columns.toSeq
     val aggs = cs.map(c => count(when(missingPredicate(df, c), 1)).as(s"${c}__miss")) ++
       cs.map(c => byteSizeAgg(df, c).as(s"${c}__bytes")) :+

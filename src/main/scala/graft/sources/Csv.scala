@@ -37,7 +37,11 @@ object Csv {
 
   /** Write a single headered CSV (the reference writes one file; Spark
     * writes a directory of part files — coalesce(1) only when a single
-    * file is required, as here for contract parity; drop it at scale). */
+    * file is required, as here for contract parity; drop it at scale).
+    * The coalesce is narrow: the write's last stage runs as one task,
+    * after any exchange the plan already has. A frame from
+    * [[graft.Pipeline.run]] over a one-split request is already one
+    * partition with no exchange, so its write is one single-stage job. */
   def write(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
     out.write.mode("overwrite").option("header", "true").csv(path)

@@ -3,25 +3,38 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Scale-adaptive parallelism for CPU-heavy per-row kernels (r21,
-  * guide §2: derive partitioning from input size, don't hard-code either
-  * the local or the cluster shape).
+/** Size gates that choose a frame's partitioning from the optimizer's
+  * size estimate (`optimizedPlan.stats.sizeInBytes`) instead of
+  * hard-coding either the local or the cluster shape (r21).
+  * Both gates read the conf of the frame's own session and log their
+  * FIRES/skips decision, and both leave a frame too large to qualify
+  * untouched, so a 100 TB plan never changes shape.
   *
-  * A narrow plan inherits the scan's split count, and a split exists only
-  * per `spark.sql.files.maxPartitionBytes` of input — so a small table
-  * feeds an expensive per-row kernel (minhash/winnow signatures, k-gram
+  * [[bySize]] widens an under-parallel input. A narrow plan inherits the
+  * scan's split count, and a split exists only per
+  * `spark.sql.files.maxPartitionBytes` of input — so a small table feeds
+  * an expensive per-row kernel (minhash/winnow signatures, k-gram
   * explosion) with fewer tasks than the session has cores: measured at
   * sf0.1/32 cores, the whole minhash signature pass ran as 6 tasks (26
-  * cores idle), the substring-dedup gram pipeline as 3.
-  *
-  * [[bySize]] hash-repartitions on the row id to the default parallelism
-  * ONLY when the optimizer's size estimate proves the scan cannot reach
-  * it (estimated bytes < cores × maxPartitionBytes). The condition makes
-  * the shuffle self-limiting: it can only fire when the whole input is
-  * smaller than one split per core — data a 100 TB run's scan splits
-  * thousands of ways never qualifies, so production plans are unchanged
+  * cores idle), the substring-dedup gram pipeline as 3. The gate
+  * hash-repartitions on the row id to the default parallelism ONLY when
+  * the estimate proves the scan cannot reach it (estimated bytes < cores ×
+  * maxPartitionBytes). The condition makes the shuffle self-limiting: it
+  * can only fire when the whole input is smaller than one split per core,
   * and no heavy payload gains a shuffle (§2.4). Hash-on-id is
   * deterministic under retries (no round-robin, no rand — SPARK-38388).
+  *
+  * [[singleSplit]] narrows a one-split input. A frame whose estimate is at
+  * most `spark.sql.files.openCostInBytes` is no bigger than the cost Spark
+  * charges for opening one file, so Spark never splits a file that small
+  * and the whole frame is one split's worth of work. `coalesce(1)` then
+  * costs no useful parallelism and declares `SinglePartition`, which
+  * satisfies every distribution an aggregate, sort or join requires —
+  * `EnsureRequirements` plans no gather or hash exchange above it, and
+  * under AQE each global aggregate, distinct count or dedup over the frame
+  * runs as one single-stage job instead of a map-stage job plus a result
+  * job. The cleaning entry points ([[graft.Pipeline.run]],
+  * [[graft.Profile.apply]]) apply it to the raw request.
   */
 object Parallelize {
 
@@ -47,6 +60,18 @@ object Parallelize {
     log.info(s"bySize gate ${if (fire) "FIRES" else "skips"}: est=$estBytes" +
       s" vs $target x $splitBytes")
     if (fire) df.repartition(target, key)
+    else df
+  }
+
+  /** `df.coalesce(1)` when the size estimate is at most one file open
+    * cost (see object doc); `df` itself otherwise. */
+  def singleSplit(df: DataFrame): DataFrame = {
+    val openCost = df.sparkSession.sessionState.conf.filesOpenCostInBytes
+    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val fire = estBytes <= BigInt(openCost)
+    log.info(s"singleSplit gate ${if (fire) "FIRES" else "skips"}: est=$estBytes" +
+      s" vs $openCost")
+    if (fire) df.coalesce(1)
     else df
   }
 

@@ -50,6 +50,16 @@ class ConfigSpec extends SparkSpec {
     assert(o.fields("c") == JNull)
   }
 
+  test("malformed json fails with a positioned IllegalArgumentException") {
+    // each input with the offset its error must name
+    for ((bad, at) <- Seq("\"abc\\" -> 4, "\"\\u12" -> 1, "[1,]" -> 3,
+        "{\"a\": @}" -> 6, "{\"a\": \"\\uZZZZ\"}" -> 7, "[1e+-]" -> 1)) {
+      val e = intercept[IllegalArgumentException](PipelineJson.parseJson(bad))
+      assert(e.getMessage.endsWith(s" at $at"), s"$bad: ${e.getMessage}")
+      intercept[IllegalArgumentException](PipelineJson.parse(bad))
+    }
+  }
+
   test("a parsed config runs the pipeline end to end") {
     val df = Seq[(java.lang.Long, java.lang.Double, String)](
       (1L, 1.0, "A B"), (2L, null, "c"), (2L, null, "c"), (3L, 100.0, "d"))

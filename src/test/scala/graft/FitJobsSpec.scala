@@ -76,8 +76,42 @@ class FitJobsSpec extends SparkSpec {
   }
 
   test("the nine-operator pipeline stays within its fit-job budget") {
-    // A small dirty fixture in the shape the reference's web app cleans:
-    // mixed-format numbers and dates, planted nulls, duplicate rows, typos.
+    FitJobsSpec.withDirtyCsv { path =>
+      val cfg = FitJobsSpec.nineOps
+      assert(cfg.ops.length == 9)
+      val df = Csv.read(spark, path) // reads the header: not counted
+      val ((out, report), n) = jobs(Pipeline.run(df, cfg))
+      assert(report.errors.isEmpty, report.errors)
+      assert(out.count() == 40)
+      assert(out.where(col("extendedprice").isNull).count() == 0)
+      // Budget under the test session (local[4], AQE on): 56 jobs before
+      // the fits became need-based, 30 after, 11 once a one-split request
+      // is planned as a single partition. Lower it when a fit goes away;
+      // raising it is a declared regression.
+      assert(n <= JobBudget, s"Pipeline.run issued $n jobs, budget $JobBudget")
+    }
+  }
+
+  test("profiling a one-split csv stays within its job budget") {
+    FitJobsSpec.withDirtyCsv { path =>
+      val df = Csv.read(spark, path)
+      val (p, n) = jobs(Profile(df))
+      assert(p.rows == 44 && p.duplicateRows == 4)
+      // one single-stage job each for the aggregate, the distinct count
+      // and the sample; 6 when each exchange costs a map-stage job
+      assert(n <= ProfileJobBudget, s"Profile issued $n jobs, budget $ProfileJobBudget")
+    }
+  }
+
+  private val JobBudget = 11
+  private val ProfileJobBudget = 3
+}
+
+object FitJobsSpec {
+  /** Runs `body` on the path of a small dirty CSV in the shape the
+    * reference's web app cleans: 40 distinct rows plus 4 duplicates, with
+    * mixed-format numbers and dates, planted nulls and typos. */
+  def withDirtyCsv[T](body: String => T): T = {
     val lines = (0 until 40).map { i =>
       val qty = if (i % 3 == 0) s"${i % 7 + 1}.0" else s"${i % 7 + 1}"
       val price = if (i % 11 == 4) "" else f"${100.0 + i * 13.7}%.2f"
@@ -89,42 +123,32 @@ class FitJobsSpec extends SparkSpec {
       Seq(i.toString, qty, price, flag, Seq("AIR", "MAIL")(i % 2), dept, date,
         comment).mkString(",")
     }
-    val body = ("row_id,quantity,extendedprice,returnflag,shipmode,dept,shipdate,comment" +:
+    val text = ("row_id,quantity,extendedprice,returnflag,shipmode,dept,shipdate,comment" +:
       (lines ++ lines.take(4))).mkString("\n")
     val dir = java.nio.file.Files.createTempDirectory("fitjobs")
     val path = dir.resolve("in.csv")
-    java.nio.file.Files.writeString(path, body + "\n")
-    val cfg = PipelineJson.parse(
-      """{"data_type_conversion": {"enabled": true},
-        | "text_cleaning": {"enabled": true, "columns": ["comment", "dept"],
-        |                   "operations": ["lowercase", "remove_extra_spaces"]},
-        | "datetime_parsing": {"enabled": true, "columns": ["shipdate"]},
-        | "missing_values": {"enabled": true, "strategy": "fill_median"},
-        | "duplicates": {"enabled": true},
-        | "outliers": {"enabled": true, "method": "iqr", "action": "cap",
-        |              "threshold": 3.0, "columns": ["extendedprice"]},
-        | "spelling_correction": {"enabled": true, "method": "common_typos",
-        |                         "columns": ["comment", "dept"]},
-        | "encoding": {"enabled": true, "method": "label",
-        |              "columns": ["returnflag", "shipmode"]},
-        | "normalization": {"enabled": true, "method": "minmax",
-        |                   "columns": ["quantity", "extendedprice"]}}""".stripMargin)
-    assert(cfg.ops.length == 9)
-    try {
-      val df = Csv.read(spark, path.toString) // reads the header: not counted
-      val ((out, report), n) = jobs(Pipeline.run(df, cfg))
-      assert(report.errors.isEmpty, report.errors)
-      assert(out.count() == 40)
-      assert(out.where(col("extendedprice").isNull).count() == 0)
-      // Budget under the test session (local[4], AQE on): 56 jobs before
-      // the fits became need-based, 30 after. Lower it when a fit goes
-      // away; raising it is a declared regression.
-      assert(n <= JobBudget, s"Pipeline.run issued $n jobs, budget $JobBudget")
-    } finally {
+    java.nio.file.Files.writeString(path, text + "\n")
+    try body(path.toString)
+    finally {
       java.nio.file.Files.deleteIfExists(path)
       java.nio.file.Files.deleteIfExists(dir)
     }
   }
 
-  private val JobBudget = 30
+  /** All nine operators, configured for [[withDirtyCsv]]'s columns. */
+  def nineOps: PipelineConfig = PipelineJson.parse(
+    """{"data_type_conversion": {"enabled": true},
+      | "text_cleaning": {"enabled": true, "columns": ["comment", "dept"],
+      |                   "operations": ["lowercase", "remove_extra_spaces"]},
+      | "datetime_parsing": {"enabled": true, "columns": ["shipdate"]},
+      | "missing_values": {"enabled": true, "strategy": "fill_median"},
+      | "duplicates": {"enabled": true},
+      | "outliers": {"enabled": true, "method": "iqr", "action": "cap",
+      |              "threshold": 3.0, "columns": ["extendedprice"]},
+      | "spelling_correction": {"enabled": true, "method": "common_typos",
+      |                         "columns": ["comment", "dept"]},
+      | "encoding": {"enabled": true, "method": "label",
+      |              "columns": ["returnflag", "shipmode"]},
+      | "normalization": {"enabled": true, "method": "minmax",
+      |                   "columns": ["quantity", "extendedprice"]}}""".stripMargin)
 }

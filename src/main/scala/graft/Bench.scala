@@ -154,17 +154,29 @@ object Bench {
     (elapsedS, lastSteal, !quiet)
   }
 
+  /** Default history file name for a run: keyed by the sf directory's
+    * name AND the core count. Histories min-merge cold first runs, so a
+    * run on fewer cores must neither read nor lower another host
+    * shape's floors. */
+  private[graft] def historyFileName(sfDir: String, cpus: String): String =
+    s"bench_history_${new java.io.File(sfDir).getName}_c$cpus.json"
+
   /** Per-query seconds from a history or results-file JSON text we wrote
     * (targeted regex — only q_-prefixed keys can match a query name).
-    * `requireSf` rejects a results file recorded at a different sf.
+    * `requireSf` rejects a results file recorded at a different sf, and
+    * `requireCpus` one recorded on a different core count (or with no
+    * `cpus` field).
     * Entries named in the file's "failed" list are EXCLUDED: a results
     * file records a crashed query's elapsed-to-crash in its queries map,
     * and a failure time must never become a re-time baseline (min-only
     * history updates could never recover from it). */
   private[graft] def parseQueryTimes(txt: String,
-      requireSf: Option[String]): Map[String, Double] = {
-    val sfOk = requireSf.forall(sf =>
-      "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt).exists(_.group(1) == sf))
+      requireSf: Option[String],
+      requireCpus: Option[String] = None): Map[String, Double] = {
+    def field(name: String) =
+      ("\"" + name + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt).map(_.group(1))
+    val sfOk = requireSf.forall(sf => field("sf").contains(sf))
+    val cpusOk = requireCpus.forall(c => field("cpus").contains(c))
     // Codec guard (r19 ADVICE): a file that self-declares a non-default
     // shuffle codec (SPARK_GRAFT_CODEC=zstd runs) must never seed an lz4
     // baseline — zstd's tighter spill compression makes the pair monsters
@@ -174,7 +186,7 @@ object Bench {
     // written by lz4 runs, see main()) pass.
     val codecOk = "\"codec\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
       .forall(_.group(1) == "lz4")
-    if (!sfOk || !codecOk) Map.empty
+    if (!sfOk || !cpusOk || !codecOk) Map.empty
     else {
       val crashed: Set[String] =
         "\"failed\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
@@ -387,12 +399,12 @@ object Bench {
 
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // Reference times for the contention re-time below: the best-known
-    // per-query seconds at this sf, persisted IN THE REPO (so it survives
-    // across rounds even when each round gets a fresh results path) and
-    // seeded/updated after every run. Falls back to a previous same-sf
-    // results file. We wrote both formats, so a targeted regex is a safe
-    // parse; only q_-prefixed keys can match a query name.
-    val sfBase = new java.io.File(sfDir).getName
+    // per-query seconds at this sf and core count, persisted IN THE REPO
+    // (so it survives across rounds even when each round gets a fresh
+    // results path) and seeded/updated after every run. Falls back to a
+    // previous results file of the same sf and core count. We wrote both
+    // formats, so a targeted regex is a safe parse; only q_-prefixed keys
+    // can match a query name.
     // The default history path is repo-root-anchored, not CWD-relative:
     // running Bench from another directory must not silently read an
     // empty baseline (disabling the contention re-time) and strand a new
@@ -409,16 +421,17 @@ object Bench {
           s"[bench] no build.sbt above $cwd; bench history is CWD-relative")
         cwd
       }
-      new java.io.File(root, s"bench_history_$sfBase.json").getPath
+      new java.io.File(root, historyFileName(sfDir, cpus)).getPath
     })
     val prev: Map[String, Double] = {
-      def parse(path: String, requireSf: Option[String]) =
+      def parse(path: String, requireSf: Option[String],
+          requireCpus: Option[String] = None) =
         try parseQueryTimes(
           java.nio.file.Files.readString(java.nio.file.Paths.get(path)),
-          requireSf)
+          requireSf, requireCpus)
         catch { case _: Throwable => Map.empty[String, Double] }
       val h = parse(histFile, None)
-      if (h.nonEmpty) h else parse(outFile, Some(sfDir))
+      if (h.nonEmpty) h else parse(outFile, Some(sfDir), Some(cpus))
     }
 
     val loadBefore = loadAvg()
@@ -652,7 +665,7 @@ object Bench {
         // non-lz4 files as baselines, so a zstd run's faster spill times
         // can never min-merge into the lz4 cold history
         s""""codec":"$codec",""" +
-        s""""persistent_rdds_end":$rddsLeft,"sf":"$sfDir"}"""
+        s""""persistent_rdds_end":$rddsLeft,"cpus":"$cpus","sf":"$sfDir"}"""
     }
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fileJson)
     catch { case e: Throwable =>

@@ -1002,11 +1002,10 @@ object SparkEntry {
     // the oracle's list_filter(x <> '') (r18 ADVICE).
     "q_bpe_tokens" -> ((s, dir) => {
       val d = tbl(s, dir, "documents").where(bpeDocFilter)
-      graft.text.Bpe.withKernels(s, graft.text.Bpe.DemoMerges) { (_, cnt) =>
-        d.select(col("doc_id"),
-          TextAnalysis.nonEmptyTokenCount(col("text")).as("n_ws"),
-          cnt(col("text")).as("n_bpe")).orderBy("doc_id")
-      }
+      d.select(col("doc_id"),
+        TextAnalysis.nonEmptyTokenCount(col("text")).as("n_ws"),
+        graft.text.Bpe.tokenCount(col("text"), graft.text.Bpe.DemoMerges)
+          .as("n_bpe")).orderBy("doc_id")
     }),
 
     // the token arrays themselves on a doc sample — pins the actual
@@ -1018,12 +1017,11 @@ object SparkEntry {
     // space join is injective on the token sequence.
     "q_bpe_encode" -> ((s, dir) => {
       val d = tbl(s, dir, "documents")
-      graft.text.Bpe.withKernels(s, graft.text.Bpe.DemoMerges) { (enc, _) =>
-        d.where(col("doc_id") % 50 === 0 && bpeDocFilter)
-          .select(col("doc_id"),
-            array_join(enc(col("text")), " ").as("toks"))
-          .orderBy("doc_id")
-      }
+      d.where(col("doc_id") % 50 === 0 && bpeDocFilter)
+        .select(col("doc_id"), array_join(
+          graft.text.Bpe.tokens(col("text"), graft.text.Bpe.DemoMerges),
+          " ").as("toks"))
+        .orderBy("doc_id")
     }),
 
     // BPE-token chunk windows (8 tokens, overlap 2): boundaries fall
@@ -1114,13 +1112,11 @@ object SparkEntry {
         tbl(s, dir, "documents").where(col("doc_id") % 50 === 0)
           .select("doc_id", "text"),
         "text", "bg_text")
-      graft.text.WordPiece.withKernels(s,
-        graft.text.WordPiece.vocabFromMerges(graft.text.BpeLearn1k.Merges)) {
-        (enc, _) =>
-          bg.select(col("doc_id"),
-            array_join(enc(col("bg_text")), " ").as("pieces"))
-            .orderBy("doc_id")
-      }
+      bg.select(col("doc_id"), array_join(
+          graft.text.WordPiece.pieces(col("bg_text"),
+            graft.text.WordPiece.vocabFromMerges(graft.text.BpeLearn1k.Merges)),
+          " ").as("pieces"))
+        .orderBy("doc_id")
     }),
 
     // TOKENIZER FAMILY #3 (r20): unigram-LM (SentencePiece) inference —
@@ -1151,13 +1147,11 @@ object SparkEntry {
         tbl(s, dir, "documents").where(col("doc_id") % 50 === 0)
           .select("doc_id", "text"),
         "text", "bg_text")
-      graft.text.Unigram.withKernels(s,
-        graft.text.Unigram.pieceCosts(graft.text.BpeLearn1k.Merges)) {
-        (enc, _) =>
-          bg.select(col("doc_id"),
-            array_join(enc(col("bg_text")), " ").as("pieces"))
-            .orderBy("doc_id")
-      }
+      bg.select(col("doc_id"), array_join(
+          graft.text.Unigram.pieces(col("bg_text"),
+            graft.text.Unigram.pieceCosts(graft.text.BpeLearn1k.Merges)),
+          " ").as("pieces"))
+        .orderBy("doc_id")
     }),
 
     // LIKELIHOOD-TRAINED unigram vocabulary (r20): Viterbi-EM cost
@@ -1271,14 +1265,13 @@ object SparkEntry {
     // embedding cosine between consecutive vectors (exact, double fold)
     "q_cosine_pairs" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
-      graft.functions.VectorKernels.register(s)
       val a = e.select(col("vec_id").as("id_a"),
         Similarity.toDoubleArr(col("embedding")).as("va"))
       val b = e.select(col("vec_id").as("id_b"),
         Similarity.toDoubleArr(col("embedding")).as("vb"))
       a.join(b, col("id_b") === col("id_a") + 1)
         .select(col("id_a"),
-          round(call_function("graft_cosine", col("va"), col("vb")), 6)
+          round(graft.functions.VectorKernels.cosine(col("va"), col("vb")), 6)
             .as("sim"))
         .orderBy("id_a")
     }),
@@ -1614,15 +1607,12 @@ object SparkEntry {
     // bounded typed-imperative buffer runs per group; no window, no
     // per-group job loop)
     "q_group_median" -> ((s, dir) => {
-      graft.functions.ExactPercentile.register(s)
       tbl(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
-          round(call_function("graft_percentile",
-            col("l_extendedprice").cast(DoubleType), lit(0.5)), 6)
+          round(graft.util.Exprs.pctl(col("l_extendedprice"), 0.5), 6)
             .as("med_price"),
-          round(call_function("graft_percentile",
-            col("l_quantity").cast(DoubleType), lit(0.5)), 6)
+          round(graft.util.Exprs.pctl(col("l_quantity"), 0.5), 6)
             .as("med_qty"),
           count(lit(1)).as("n_rows"))
         .orderBy("l_returnflag")

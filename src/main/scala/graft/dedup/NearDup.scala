@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.{TextKernels, VectorKernels}
+
 /** Deduplication for LLM training corpora (SURVEY.md §7.6; BASELINE.json
   * north star): exact, MinHash+LSH near-dup, SimHash, n-gram Jaccard.
   *
@@ -46,11 +48,8 @@ object NearDup {
     * q_ngram_jaccard at sf0.1 as a Scala UDF); the r15 expression form
     * drops the UDF's converter boxing and keeps the projection in one
     * WholeStageCodegen span, bit-identical output. */
-  def shingles(c: Column, k: Int = 5): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.TextKernels.register)
-    call_function("graft_shingles", normalize(c), lit(k))
-  }
+  def shingles(c: Column, k: Int = 5): Column =
+    TextKernels.shingles(normalize(c), k)
 
   /** Distinct word n-gram shingles — more discriminative than character
     * shingles on small-vocabulary text and ~10× smaller sets; the standard
@@ -274,7 +273,6 @@ object NearDup {
       threshold: Double = 0.7, maxBucket: Int = 0,
       pairFilter: DataFrame => DataFrame = identity,
       bucketBatches: Int = 1): DataFrame = {
-    graft.functions.VectorKernels.register(df.sparkSession)
     require(numHashes % bands == 0)
     require(bucketBatches >= 1 && bucketBatches <= 4096,
       s"bucketBatches must be in [1, 4096], got $bucketBatches")
@@ -334,14 +332,14 @@ object NearDup {
           col("__sh").as("sh_b")), "id_b")
         // graft_sig_agree (functions/SignatureAgreement, r14): codegen twin
         // of prefilterUdf — no per-pair Seq boxing on the candidate mass
-        .where(call_function("graft_sig_agree", col("sig_a"), col("sig_b"),
-          lit(numHashes), lit(threshold - 0.15)))
+        .where(VectorKernels.sigAgree(col("sig_a"), col("sig_b"),
+          numHashes, threshold - 0.15))
         .select(col("id_a"), col("id_b"),
           // graft_sorted_jaccard (functions/SortedJaccard, r14): a merge
           // over the two SORTED gram-hash arrays (ophSignatures emits
           // TreeSet order), O(|A|+|B|) with no allocation, in place
-          call_function("graft_sorted_jaccard", col("sh_a"), col("sh_b"),
-            lit(threshold)).as("jaccard"))
+          VectorKernels.sortedJaccard(col("sh_a"), col("sh_b"), threshold)
+            .as("jaccard"))
         .where(col("jaccard").isNotNull)
       (out, staged)
     }
@@ -927,8 +925,6 @@ object NearDup {
     * would re-evaluate it per bit (64 hashes per token). */
   def simhash(c: Column, bits: Int = 64,
       tokenHash: Column => Column = xxhash64(_)): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.TextKernels.register)
     val hs = transform(split(normalize(c), " "), t => tokenHash(t))
     // the ±1 vote fold runs as the SimhashVote codegen kernel (r15; was
     // a Scala UDF, and before that a declarative aggregate+zip_with that
@@ -936,7 +932,7 @@ object NearDup {
     // 56-bit signatures of q_simhash at sf0.1). Token HASHES stay
     // expressions (md5/xxhash64 oracle parity); bit order matches the
     // old shiftright/shiftleft formulation exactly.
-    call_function("graft_simhash_vote", hs, lit(bits))
+    TextKernels.simhashVote(hs, bits)
   }
 
   /** 56-bit token hash computable IDENTICALLY by an external SQL engine:
@@ -990,7 +986,6 @@ object NearDup {
       planes: Int = 0, bands: Int = 4,
       maxBucket: Int = 0, bucketBatches: Int = 1): DataFrame = {
     import graft.sim.Similarity._
-    graft.functions.VectorKernels.register(df.sparkSession)
     require(bucketBatches >= 1 && bucketBatches <= 4096,
       s"bucketBatches must be in [1, 4096], got $bucketBatches")
     val resolvedPlanes =
@@ -1009,7 +1004,7 @@ object NearDup {
       .select(col(idCol).as("__id"), col("__v"))
     val sigDf = vecDf
       .withColumn("__sig",
-        call_function("graft_signature", col("__v"), lit(dim), lit(resolvedPlanes)))
+        VectorKernels.signature(col("__v"), dim, resolvedPlanes))
       .select("__id", "__sig")
       .cache()
     // resolving the auto guard counts sigDf — which just materializes the
@@ -1036,7 +1031,7 @@ object NearDup {
         .select(col("id_a"), col("id_b"),
           // codegen cosine kernel (graft.functions.CosineSim): bit-identical
           // to the cosineUdf fold, minus the per-row Seq boxing
-          round(call_function("graft_cosine", col("va"), col("vb")), 6)
+          round(VectorKernels.cosine(col("va"), col("vb")), 6)
             .as("cosine"))
         .where(col("cosine") >= threshold)
       (out, staged)

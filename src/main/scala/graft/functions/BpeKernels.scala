@@ -1,14 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Byte-pair-encoding apply kernels — the token accounting behind the
   * BPE twins of chunking / sequence packing / budget sampling
   * ([[graft.text.Bpe]]). Whitespace pre-tokenization (the
@@ -46,10 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object BpeKernels {
 
-  /** A compiled, immutable merge list plus the per-executor word memo.
-    * Shipped to executors once per plan via `addReferenceObj` — the
-    * [[BloomMightContainLong]] route for runtime-data kernels. */
-  final class MergeTable(merges: Seq[(String, String)]) extends Serializable {
+  /** A compiled, immutable merge list ([[SubwordTable]] supplies the
+    * word memo and the document kernels). */
+  final class MergeTable(merges: Seq[(String, String)])
+      extends SubwordTable("bpe") {
     require(merges.forall { case (l, r) => l.nonEmpty && r.nonEmpty },
       "BPE merge constituents must be non-empty")
     val left: Array[String] = merges.map(_._1).toArray
@@ -57,26 +48,8 @@ object BpeKernels {
     val merged: Array[String] = merges.map { case (l, r) => l + r }.toArray
     def size: Int = left.length
 
-    /** Word → BPE token memo. Bounded: at 2^16 entries the map is
-      * cleared, not capped — output never depends on cache state, and a
-      * clear under a pathological vocabulary is cheaper than an LRU.
-      * ConcurrentHashMap because codegen references are shared across a
-      * stage's tasks within one executor JVM. */
-    @transient private lazy val memo =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[String]](1024)
-    private val MaxMemo = 1 << 16
-
-    def tokensOf(word: String): Array[String] = {
-      val hit = memo.get(word)
-      if (hit != null) return hit
-      val toks = applyMerges(word)
-      if (memo.size >= MaxMemo) memo.clear()
-      memo.put(word, toks)
-      toks
-    }
-
     /** Rank-order apply over one word (no memo). */
-    private def applyMerges(word: String): Array[String] = {
+    protected def segment(word: String): Array[String] = {
       var toks: Array[String] = {
         // split into code points so astral chars stay whole tokens
         val cps = word.codePoints().toArray
@@ -113,107 +86,4 @@ object BpeKernels {
     }
     out.toArray
   }
-
-  /** Whitespace pre-tokens of `text` — MUST match
-    * [[graft.text.TextAnalysis.nonEmptyTokens]] (lower, split on
-    * `\s+`, DROP empty tokens) and the oracle's
-    * `list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-    * x -> x <> '')`. Java `trim` strips all chars ≤ U+0020, so a
-    * tab/newline-led word never yields a leading empty token here —
-    * the same result the empty-filter gives the other two twins
-    * (BpeSpec pins the edge case). Locale.ROOT: Spark's `lower` is
-    * locale-independent. */
-  private def preTokens(text: UTF8String): Array[String] = {
-    val t = text.toString.toLowerCase(java.util.Locale.ROOT).trim
-    if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-  }
-
-  /** Flat BPE token array over the whole document (word tokens
-    * concatenated in word order). Blank/empty → empty array. */
-  def encodeKernel(text: UTF8String, mt: MergeTable): ArrayData = {
-    val words = preTokens(text)
-    var n = 0
-    val perWord = new Array[Array[String]](words.length)
-    var i = 0
-    while (i < words.length) {
-      val t = mt.tokensOf(words(i)); perWord(i) = t; n += t.length; i += 1
-    }
-    val out = new Array[Any](n)
-    var k = 0
-    i = 0
-    while (i < words.length) {
-      val t = perWord(i)
-      var j = 0
-      while (j < t.length) { out(k) = UTF8String.fromString(t(j)); k += 1; j += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** BPE token COUNT — the cheap path: no per-token UTF8String or array
-    * materializes when only the count is needed (budget sampling,
-    * packing placement). */
-  def countKernel(text: UTF8String, mt: MergeTable): Long = {
-    val words = preTokens(text)
-    var n = 0L
-    var i = 0
-    while (i < words.length) { n += mt.tokensOf(words(i)).length; i += 1 }
-    n
-  }
-}
-
-/** BPE tokenize to a flat array<string> — null in → null out, blank in
-  * → empty array (a blank doc has zero tokens, not a null count). */
-case class BpeEncode(child: Expression,
-    mt: BpeKernels.MergeTable) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bpe_encode needs a string argument, got $t")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_encode"
-
-  override protected def nullSafeEval(s: Any): Any =
-    BpeKernels.encodeKernel(s.asInstanceOf[UTF8String], mt)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val mtRef = ctx.addReferenceObj("graftBpeTable", mt,
-      classOf[BpeKernels.MergeTable].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernels.encodeKernel($c, $mtRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BpeEncode = copy(child = newChild)
-}
-
-/** BPE token count — same semantics as [[BpeEncode]].size without
-  * materializing the tokens. */
-case class BpeCount(child: Expression,
-    mt: BpeKernels.MergeTable) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bpe_count needs a string argument, got $t")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_bpe_count"
-
-  override protected def nullSafeEval(s: Any): Any =
-    BpeKernels.countKernel(s.asInstanceOf[UTF8String], mt)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val mtRef = ctx.addReferenceObj("graftBpeTable", mt,
-      classOf[BpeKernels.MergeTable].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernels.countKernel($c, $mtRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BpeCount = copy(child = newChild)
 }

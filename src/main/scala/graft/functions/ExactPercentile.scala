@@ -2,12 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -330,12 +331,13 @@ object PctBuffer {
   * `maxDistinct` distinct values it spills to a fixed-size merging digest
   * (±~0.05 % of the mass per quantile) instead of growing without limit —
   * a continuous double column with billions of distincts costs O(2048)
-  * per partial, not an executor OOM. The bound is the optional third
-  * argument `graft_percentile(col, p, maxDistinct)`; two-argument calls
-  * read `spark.graft.percentile.maxDistinct` (default 2^20 ≈ 10^6, ~32 MiB
-  * peak per column-partial) at resolution time. Oracle-facing runs stay
-  * exact because TPC-H-ish column cardinalities sit far below the bound;
-  * set the conf lower only when approximate quantiles are acceptable.
+  * per partial, not an executor OOM. The bound is the `maxDistinct`
+  * argument of [[ExactPercentile.column]], which defaults to
+  * `spark.graft.percentile.maxDistinct` (default 2^20 ≈ 10^6, ~32 MiB
+  * peak per column-partial) read when the column is built.
+  * Oracle-facing runs stay exact because TPC-H-ish column cardinalities
+  * sit far below the bound; set the conf lower only when approximate
+  * quantiles are acceptable.
   *
   * Interpolation parity with the built-in (exact mode) is pinned by a
   * randomized equality spec (PropertySpec) and by the five oracle queries
@@ -623,49 +625,24 @@ object ExactPercentile {
     percentages.map(p => at(p * maxPosition))
   }
 
-  /** Conf key for two-argument `graft_percentile` calls. */
+  /** Conf key for the default bound of [[column]] and [[medianAbsDev]]. */
   val MaxDistinctKey = "spark.graft.percentile.maxDistinct"
 
   private def confMaxDistinct: Int =
     try SQLConf.get.getConfString(MaxDistinctKey, DefaultMaxDistinct.toString).toInt
     catch { case _: NumberFormatException => DefaultMaxDistinct }
 
-  /** Idempotently register
-    * `graft_percentile(col, p | array<p> [, maxDistinct])` in the
-    * session's function registry so expression code can reach it via
-    * `call_function`. */
-  def register(spark: SparkSession): Unit =
-    SessionFunctions.registerOnce(spark, "graft_percentile") { args =>
-      val bound = if (args.length >= 3) {
-        args(2).eval() match {
-          case i: Int => i
-          // a bound past Int.MaxValue means "never spill" — clamp, don't
-          // truncate (toInt would silently install a ~2^31-wrapped bound)
-          case l: Long => math.min(l, Int.MaxValue.toLong).toInt
-          case s: Short => s.toInt
-          case b: Byte => b.toInt
-          case other => throw new IllegalArgumentException(
-            s"maxDistinct must be a foldable integer, got $other")
-        }
-      } else confMaxDistinct
-      ExactPercentile(args.head, args(1), bound)
-    }
+  /** `graft_percentile(c, p)`: `c` a double column, `p` a foldable double
+    * or array<double>. The default bound is read from [[MaxDistinctKey]]
+    * each time a column is built. */
+  def column(c: Column, p: Column, maxDistinct: Int = confMaxDistinct): Column =
+    GraftColumn(ExactPercentile(expression(c), expression(p), maxDistinct)
+      .toAggregateExpression())
 
-  /** Idempotently register
-    * `graft_median_absdev(col, devP [, maxDistinct])` — the one-pass
-    * median + deviation-percentile aggregate ([[MedianAbsDev]]). */
-  def registerMedianAbsDev(spark: SparkSession): Unit =
-    SessionFunctions.registerOnce(spark, "graft_median_absdev") { args =>
-      val bound = if (args.length >= 3) {
-        args(2).eval() match {
-          case i: Int => i
-          case l: Long => math.min(l, Int.MaxValue.toLong).toInt
-          case s: Short => s.toInt
-          case b: Byte => b.toInt
-          case other => throw new IllegalArgumentException(
-            s"maxDistinct must be a foldable integer, got $other")
-        }
-      } else confMaxDistinct
-      MedianAbsDev(args.head, args(1), bound)
-    }
+  /** `graft_median_absdev(c, devP)` — the one-pass median +
+    * deviation-percentile aggregate ([[MedianAbsDev]]). */
+  def medianAbsDev(c: Column, devP: Double,
+      maxDistinct: Int = confMaxDistinct): Column =
+    GraftColumn(MedianAbsDev(expression(c), Literal(devP), maxDistinct)
+      .toAggregateExpression())
 }

@@ -2,12 +2,13 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -179,11 +180,8 @@ case class MisraGriesTerms(
 }
 
 object HeavyHitters {
-  /** Session registration, the [[ExactPercentile.register]] pattern. */
-  def register(spark: SparkSession): Unit =
-    SessionFunctions.registerOnce(spark, "graft_heavy_hitters") { args =>
-      require(args.length == 2,
-        "graft_heavy_hitters(termCol, k) takes exactly 2 arguments")
-      MisraGriesTerms(args.head, args(1))
-    }
+  /** `graft_heavy_hitters(term, k)` ([[MisraGriesTerms]]). */
+  def terms(term: Column, k: Int): Column =
+    GraftColumn(MisraGriesTerms(expression(term), Literal(k))
+      .toAggregateExpression())
 }

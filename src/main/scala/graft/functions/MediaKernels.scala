@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.types._
 
 /** JPEG SOF scan — the one container in the multimodal family whose
@@ -106,12 +107,7 @@ object MediaKernels {
     -1L
   }
 
-  /** Register `graft_jpeg_sof(content)` (same per-session pattern as
-    * [[VectorKernels.register]]). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    SessionFunctions.registerOnce(spark, "graft_jpeg_sof") { args =>
-      require(args.length == 1,
-        s"graft_jpeg_sof takes 1 arg, got ${args.length}")
-      JpegSofPacked(args(0))
-    }
+  /** `graft_jpeg_sof(content)` ([[JpegSofPacked]]). */
+  def jpegSof(content: Column): Column =
+    GraftColumn(JpegSofPacked(expression(content)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -8,8 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Native codegen'd text kernels — the r14 VectorKernels treatment
   * applied to the remaining per-row string UDFs (r14 verdict #2):
@@ -78,20 +81,6 @@ object TextKernels {
     graft.text.QualityFilters.keep(if (s == null) null else s.toString,
       maxDupWordFrac, maxTopBigramCharFrac, maxTopTrigramCharFrac,
       maxDupFivegramCharFrac)
-
-  private def foldInt(e: Expression, what: String): Int = e.eval() match {
-    case i: Int => i
-    case other => throw new IllegalArgumentException(
-      s"$what must be a foldable int, got $other")
-  }
-
-  private def foldDouble(e: Expression, what: String): Double = e.eval() match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case i: Int => i.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$what must be a foldable number, got $other")
-  }
 
   /** [[graft.ops.TypeConvert.probeMask]] over a UTF8String — the kernel
     * behind [[ProbeMask]] (r15 verdict next-#1: the probe ran as a
@@ -196,38 +185,33 @@ object TextKernels {
     StructField("top_trigram_char_frac", DoubleType, nullable = false),
     StructField("dup_fivegram_char_frac", DoubleType, nullable = false)))
 
-  /** Register the text kernels in the session registry (same
-    * `call_function` route as [[VectorKernels.register]]). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    SessionFunctions.registerOnce(spark, "graft_shingles") { args =>
-      require(args.length == 2,
-        s"graft_shingles takes (text, k), got ${args.length}")
-      ShingleSet(args(0), foldInt(args(1), "k"))
-    }
-    SessionFunctions.registerOnce(spark, "graft_simhash_vote") { args =>
-      require(args.length == 2,
-        s"graft_simhash_vote takes (hashes, bits), got ${args.length}")
-      SimhashVote(args(0), foldInt(args(1), "bits"))
-    }
-    SessionFunctions.registerOnce(spark, "graft_repetition") { args =>
-      require(args.length == 1,
-        s"graft_repetition takes (text), got ${args.length}")
-      RepetitionStruct(args(0))
-    }
-    SessionFunctions.registerOnce(spark, "graft_probe_mask") { args =>
-      require(args.length == 1,
-        s"graft_probe_mask takes (text), got ${args.length}")
-      ProbeMask(args(0))
-    }
-    SessionFunctions.registerOnce(spark, "graft_rep_keep") { args =>
-      require(args.length == 5,
-        s"graft_rep_keep takes (text, 4 thresholds), got ${args.length}")
-      RepetitionKeep(args(0), foldDouble(args(1), "maxDupWordFrac"),
-        foldDouble(args(2), "maxTopBigramCharFrac"),
-        foldDouble(args(3), "maxTopTrigramCharFrac"),
-        foldDouble(args(4), "maxDupFivegramCharFrac"))
-    }
-  }
+  /** `graft_shingles(text, k)` ([[ShingleSet]]). */
+  def shingles(text: Column, k: Int): Column =
+    GraftColumn(ShingleSet(expression(text), k))
+
+  /** `graft_simhash_vote(hashes, bits)` ([[SimhashVote]]). */
+  def simhashVote(hashes: Column, bits: Int): Column =
+    GraftColumn(SimhashVote(expression(hashes), bits))
+
+  /** `graft_repetition(text)` ([[RepetitionStruct]]). */
+  def repetition(text: Column): Column =
+    GraftColumn(RepetitionStruct(expression(text)))
+
+  /** `graft_probe_mask(text)` ([[ProbeMask]]). */
+  def probeMask(text: Column): Column = GraftColumn(ProbeMask(expression(text)))
+
+  /** `graft_rep_keep(text)` under the four Gopher thresholds
+    * ([[RepetitionKeep]]). */
+  def repetitionKeep(text: Column, maxDupWordFrac: Double,
+      maxTopBigramCharFrac: Double, maxTopTrigramCharFrac: Double,
+      maxDupFivegramCharFrac: Double): Column =
+    GraftColumn(RepetitionKeep(expression(text), maxDupWordFrac,
+      maxTopBigramCharFrac, maxTopTrigramCharFrac, maxDupFivegramCharFrac))
+
+  /** `graft_bloom_contains(hash)` against a broadcast filter
+    * ([[BloomMightContainLong]]). */
+  def bloomContains(hash: Column, bloom: Broadcast[BloomFilter]): Column =
+    GraftColumn(BloomMightContainLong(expression(hash), bloom))
 }
 
 /** Distinct character k-shingles — codegen twin of the former
@@ -454,16 +438,10 @@ case class ProbeMask(child: Expression) extends UnaryExpression {
   * probes with a primitive long per row — no boxing, no codegen-span
   * break.
   *
-  * Not in [[TextKernels.register]]: a broadcast cannot be built from
-  * `Seq[Expression]` args, so callers register a per-call builder that
-  * closes over the broadcast, build their DataFrame (analysis is EAGER
-  * on DataFrame construction — the function resolves before the
-  * builder can be dropped or replaced), then drop the entry
-  * ([[graft.text.Decontaminate.flagContaminatedBloom]] shows the
-  * dance). */
+  * Built by [[TextKernels.bloomContains]]
+  * ([[graft.text.Decontaminate.flagContaminatedBloom]] is the caller). */
 case class BloomMightContainLong(child: Expression,
-    bloom: org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.sketch.BloomFilter]) extends UnaryExpression {
+    bloom: Broadcast[BloomFilter]) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case LongType => TypeCheckResult.TypeCheckSuccess

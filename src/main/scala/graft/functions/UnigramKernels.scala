@@ -1,12 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Unigram-LM (SentencePiece-style) subword segmentation — the THIRD
   * tokenizer inference family (r20, closing the r19 verdict's "budget
   * cross-check triangle"): [[BpeKernels]] replays merges in rank order,
@@ -49,13 +42,14 @@ object UnigramKernels {
 
   val Unk = "[UNK]"
 
-  /** Compiled (piece → cost) inventory + per-executor word memo.
-    * Shipped to executors once per plan via `addReferenceObj`.
+  /** Compiled (piece → cost) inventory ([[SubwordTable]] supplies the
+    * word memo and the document kernels).
     * Duplicate piece strings keep the CHEAPEST cost (a BPE merge list
     * can mint the same product at two ranks — ("a","bc") and
     * ("ab","c") both yield "abc"; the earlier mint is the frequency
     * signal). */
-  final class PieceTable(costed: Seq[(String, Long)]) extends Serializable {
+  final class PieceTable(costed: Seq[(String, Long)])
+      extends SubwordTable("unigram") {
     require(costed.nonEmpty, "unigram needs a non-empty vocabulary")
     require(costed.forall { case (p, c) =>
       p.nonEmpty && !p.exists(_.isWhitespace) && c >= 0L },
@@ -68,19 +62,6 @@ object UnigramKernels {
     }
     private val maxLen: Int = costed.iterator.map(_._1.length).max
 
-    @transient private lazy val memo =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[String]](1024)
-    private val MaxMemo = 1 << 16
-
-    def piecesOf(word: String): Array[String] = {
-      val hit = memo.get(word)
-      if (hit != null) return hit
-      val toks = segment(word)
-      if (memo.size >= MaxMemo) memo.clear()
-      memo.put(word, toks)
-      toks
-    }
-
     /** Viterbi min-cost DP (no memo). `cost(i)` = best total over
       * segmentations of the length-i prefix; `back(i)` = length of the
       * winning last piece. Candidates scan lp descending so an
@@ -88,7 +69,7 @@ object UnigramKernels {
       * keeps it — the oracle's (total asc, length desc) sort order.
       * Costs are bounded by |word| · max single-piece cost (≤ ~700 per
       * piece at 1k merges), so Long sums cannot overflow. */
-    private def segment(word: String): Array[String] = {
+    protected def segment(word: String): Array[String] = {
       val n = word.length
       val Inf = Long.MaxValue
       val cost = new Array[Long](n + 1)
@@ -128,96 +109,4 @@ object UnigramKernels {
       out
     }
   }
-
-  /** Flat piece array over the whole document (word order preserved).
-    * Blank/empty → empty array. */
-  def encodeKernel(text: UTF8String, pt: PieceTable): ArrayData = {
-    val words = preTokens(text)
-    var n = 0
-    val perWord = new Array[Array[String]](words.length)
-    var i = 0
-    while (i < words.length) {
-      val t = pt.piecesOf(words(i)); perWord(i) = t; n += t.length; i += 1
-    }
-    val out = new Array[Any](n)
-    var k = 0
-    i = 0
-    while (i < words.length) {
-      val t = perWord(i)
-      var j = 0
-      while (j < t.length) { out(k) = UTF8String.fromString(t(j)); k += 1; j += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Piece COUNT without materializing the pieces. */
-  def countKernel(text: UTF8String, pt: PieceTable): Long = {
-    val words = preTokens(text)
-    var n = 0L
-    var i = 0
-    while (i < words.length) { n += pt.piecesOf(words(i)).length; i += 1 }
-    n
-  }
-
-  // identical convention to BpeKernels/WordPieceKernels.preTokens
-  private def preTokens(text: UTF8String): Array[String] = {
-    val t = text.toString.toLowerCase(java.util.Locale.ROOT).trim
-    if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-  }
-}
-
-/** Viterbi unigram tokenize to a flat array<string> — null in → null
-  * out, blank in → empty array. */
-case class UnigramEncode(child: Expression,
-    pt: UnigramKernels.PieceTable) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_unigram_encode needs a string argument, got $t")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_unigram_encode"
-
-  override protected def nullSafeEval(s: Any): Any =
-    UnigramKernels.encodeKernel(s.asInstanceOf[UTF8String], pt)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ptRef = ctx.addReferenceObj("graftUgTable", pt,
-      classOf[UnigramKernels.PieceTable].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramKernels.encodeKernel($c, $ptRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): UnigramEncode = copy(child = newChild)
-}
-
-/** Piece count — [[UnigramEncode]].size without the arrays. */
-case class UnigramCount(child: Expression,
-    pt: UnigramKernels.PieceTable) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_unigram_count needs a string argument, got $t")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_unigram_count"
-
-  override protected def nullSafeEval(s: Any): Any =
-    UnigramKernels.countKernel(s.asInstanceOf[UTF8String], pt)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ptRef = ctx.addReferenceObj("graftUgTable", pt,
-      classOf[UnigramKernels.PieceTable].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramKernels.countKernel($c, $ptRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): UnigramCount = copy(child = newChild)
 }

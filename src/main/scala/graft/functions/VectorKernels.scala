@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.types._
 
 /** Native codegen'd vector kernels for the embedding operators.
@@ -280,8 +281,7 @@ case class SignatureAgreement(left: Expression, right: Expression,
   require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
   // minFrac is interpolated into generated Java source: NaN/Infinity are
   // not Java literals, so a non-finite value would compile-fail codegen
-  // while the interpreted path silently ran — reject it up front (the
-  // expression is also SQL-registered, so callers are unconstrained).
+  // while the interpreted path silently ran — reject it up front.
   require(java.lang.Double.isFinite(minFrac),
     s"minFrac must be finite, got $minFrac")
 
@@ -420,11 +420,9 @@ case class SortedJaccard(left: Expression, right: Expression,
   * row); the per-center inner loop accumulates `(v_j - c_j)^2` left to
   * right over `min(len, dim)` — bit-identical to the UDF's `dist2`.
   *
-  * Centers are runtime data (a Lloyd fit), not constructible from
-  * `Seq[Expression]` args — callers register a per-call builder that
-  * closes over them and drop it after DataFrame construction, the
-  * [[graft.functions.BloomMightContainLong]] dance. Null-element
-  * contract as [[DotProduct]] (callers pre-filter via `withVec`). */
+  * Centers are runtime data (a Lloyd fit), held as a constructor field
+  * ([[VectorKernels.assignCell]]). Null-element contract as
+  * [[DotProduct]] (callers pre-filter via `withVec`). */
 case class IvfCellAssign(child: Expression,
     centers: Array[Array[Double]]) extends UnaryExpression {
   require(centers.nonEmpty, "ivf assignment needs at least one center")
@@ -497,7 +495,7 @@ case class IvfCellAssign(child: Expression,
   * ascending index order reproduce a stable sort's (distance, index)
   * tie-break exactly. Query side is small, but the UDF still broke the
   * probe projection out of the codegen span. Same center
-  * reference-object layout and dance as [[IvfCellAssign]]. */
+  * reference-object layout as [[IvfCellAssign]]. */
 case class IvfCellProbe(child: Expression,
     centers: Array[Array[Double]], nprobe: Int) extends UnaryExpression {
   require(centers.nonEmpty, "ivf probe needs at least one center")
@@ -640,60 +638,35 @@ object VectorKernels {
       .fromPrimitiveArray(out)
   }
 
-  private def foldInt(e: Expression, what: String): Int = e.eval() match {
-    case i: Int => i
-    case other => throw new IllegalArgumentException(
-      s"$what must be a foldable int, got $other")
-  }
+  /** `graft_dot(a, b)` ([[DotProduct]]). */
+  def dot(a: Column, b: Column): Column =
+    GraftColumn(DotProduct(expression(a), expression(b)))
 
-  private def foldDouble(e: Expression, what: String): Double = e.eval() match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case i: Int => i.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$what must be a foldable number, got $other")
-  }
+  /** `graft_cosine(a, b)` ([[CosineSim]]). */
+  def cosine(a: Column, b: Column): Column =
+    GraftColumn(CosineSim(expression(a), expression(b)))
 
-  /** Register `graft_dot(a, b)` and `graft_cosine(a, b)` in the
-    * session's function registry so operator code reaches them via
-    * `call_function` (same pattern as [[ExactPercentile.register]]).
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    SessionFunctions.registerOnce(spark, "graft_dot") { args =>
-      require(args.length == 2, s"graft_dot takes 2 args, got ${args.length}")
-      DotProduct(args(0), args(1))
-    }
-    SessionFunctions.registerOnce(spark, "graft_cosine") { args =>
-      require(args.length == 2,
-        s"graft_cosine takes 2 args, got ${args.length}")
-      CosineSim(args(0), args(1))
-    }
-    SessionFunctions.registerOnce(spark, "graft_vec_ok") { args =>
-      require(args.length == 1,
-        s"graft_vec_ok takes 1 arg, got ${args.length}")
-      ArrayFullyDefined(args(0))
-    }
-    SessionFunctions.registerOnce(spark, "graft_sig_agree") { args =>
-      require(args.length == 4,
-        s"graft_sig_agree takes (a, b, numHashes, minFrac), got ${args.length}")
-      SignatureAgreement(args(0), args(1),
-        foldInt(args(2), "numHashes"), foldDouble(args(3), "minFrac"))
-    }
-    SessionFunctions.registerOnce(spark, "graft_sorted_jaccard") { args =>
-      require(args.length == 3,
-        s"graft_sorted_jaccard takes (a, b, threshold), got ${args.length}")
-      SortedJaccard(args(0), args(1), foldDouble(args(2), "threshold"))
-    }
-    SessionFunctions.registerOnce(spark, "graft_signature") { args =>
-      require(args.length == 3,
-        s"graft_signature takes (vec, dim, planes), got ${args.length}")
-      def int(e: Expression, what: String): Int = e.eval() match {
-        case i: Int => i
-        case other => throw new IllegalArgumentException(
-          s"$what must be a foldable int, got $other")
-      }
-      HyperplaneSignature(args(0), int(args(1), "dim"),
-        int(args(2), "planes"))
-    }
-  }
+  /** `graft_vec_ok(v)` ([[ArrayFullyDefined]]). */
+  def vecOk(v: Column): Column = GraftColumn(ArrayFullyDefined(expression(v)))
+
+  /** `graft_sig_agree(a, b)` ([[SignatureAgreement]]). */
+  def sigAgree(a: Column, b: Column, numHashes: Int, minFrac: Double): Column =
+    GraftColumn(SignatureAgreement(expression(a), expression(b),
+      numHashes, minFrac))
+
+  /** `graft_sorted_jaccard(a, b)` ([[SortedJaccard]]). */
+  def sortedJaccard(a: Column, b: Column, threshold: Double): Column =
+    GraftColumn(SortedJaccard(expression(a), expression(b), threshold))
+
+  /** `graft_signature(v)` ([[HyperplaneSignature]]). */
+  def signature(v: Column, dim: Int, planes: Int): Column =
+    GraftColumn(HyperplaneSignature(expression(v), dim, planes))
+
+  /** `graft_ivf_assign(v)` over fitted centers ([[IvfCellAssign]]). */
+  def assignCell(v: Column, centers: Array[Array[Double]]): Column =
+    GraftColumn(IvfCellAssign(expression(v), centers))
+
+  /** `graft_ivf_probe(v)`: the `nprobe` nearest cells ([[IvfCellProbe]]). */
+  def probeCells(v: Column, centers: Array[Array[Double]], nprobe: Int): Column =
+    GraftColumn(IvfCellProbe(expression(v), centers, nprobe))
 }

@@ -1,12 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Greedy longest-match subword segmentation — WordPiece INFERENCE
   * (Devlin et al. 2019; SentencePiece's training-free greedy cousin),
   * the second tokenizer family next to [[BpeKernels]]' merge-replay.
@@ -42,11 +35,11 @@ object WordPieceKernels {
 
   val Unk = "[UNK]"
 
-  /** Compiled piece inventory + per-executor word memo. Shipped to
-    * executors once per plan via `addReferenceObj`. Pieces must be
-    * non-empty and whitespace-free (they segment whitespace
-    * pre-tokens). */
-  final class PieceTable(pieces: Seq[String]) extends Serializable {
+  /** Compiled piece inventory ([[SubwordTable]] supplies the word memo
+    * and the document kernels). Pieces must be non-empty and
+    * whitespace-free (they segment whitespace pre-tokens). */
+  final class PieceTable(pieces: Seq[String])
+      extends SubwordTable("wordpiece") {
     require(pieces.nonEmpty, "wordpiece needs a non-empty vocabulary")
     require(pieces.forall(p => p.nonEmpty && !p.exists(_.isWhitespace)),
       "wordpiece pieces must be non-empty and whitespace-free")
@@ -54,25 +47,12 @@ object WordPieceKernels {
     pieces.foreach(set.add)
     private val maxLen: Int = pieces.iterator.map(_.length).max
 
-    @transient private lazy val memo =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[String]](1024)
-    private val MaxMemo = 1 << 16
-
-    def piecesOf(word: String): Array[String] = {
-      val hit = memo.get(word)
-      if (hit != null) return hit
-      val toks = segment(word)
-      if (memo.size >= MaxMemo) memo.clear()
-      memo.put(word, toks)
-      toks
-    }
-
     /** Greedy longest-prefix walk (no memo). Surrogate safety: a piece
       * that ends mid-surrogate-pair can never equal a substring ending
       * mid-pair's bits AND also have been minted from real text, and
       * the vocab builders only mint whole-codepoint pieces — so plain
       * UTF-16 substring matching is exact here. */
-    private def segment(word: String): Array[String] = {
+    protected def segment(word: String): Array[String] = {
       val out = new scala.collection.mutable.ArrayBuffer[String](8)
       var pos = 0
       val n = word.length
@@ -90,96 +70,4 @@ object WordPieceKernels {
       out.toArray
     }
   }
-
-  /** Flat piece array over the whole document (word order preserved).
-    * Blank/empty → empty array. */
-  def encodeKernel(text: UTF8String, pt: PieceTable): ArrayData = {
-    val words = preTokens(text)
-    var n = 0
-    val perWord = new Array[Array[String]](words.length)
-    var i = 0
-    while (i < words.length) {
-      val t = pt.piecesOf(words(i)); perWord(i) = t; n += t.length; i += 1
-    }
-    val out = new Array[Any](n)
-    var k = 0
-    i = 0
-    while (i < words.length) {
-      val t = perWord(i)
-      var j = 0
-      while (j < t.length) { out(k) = UTF8String.fromString(t(j)); k += 1; j += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Piece COUNT without materializing the pieces. */
-  def countKernel(text: UTF8String, pt: PieceTable): Long = {
-    val words = preTokens(text)
-    var n = 0L
-    var i = 0
-    while (i < words.length) { n += pt.piecesOf(words(i)).length; i += 1 }
-    n
-  }
-
-  // identical convention to BpeKernels.preTokens (nonEmptyTokens twin)
-  private def preTokens(text: UTF8String): Array[String] = {
-    val t = text.toString.toLowerCase(java.util.Locale.ROOT).trim
-    if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-  }
-}
-
-/** Greedy longest-match tokenize to a flat array<string> — null in →
-  * null out, blank in → empty array. */
-case class WordPieceEncode(child: Expression,
-    pt: WordPieceKernels.PieceTable) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_wordpiece_encode needs a string argument, got $t")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_wordpiece_encode"
-
-  override protected def nullSafeEval(s: Any): Any =
-    WordPieceKernels.encodeKernel(s.asInstanceOf[UTF8String], pt)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ptRef = ctx.addReferenceObj("graftWpTable", pt,
-      classOf[WordPieceKernels.PieceTable].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordPieceKernels.encodeKernel($c, $ptRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordPieceEncode = copy(child = newChild)
-}
-
-/** Piece count — [[WordPieceEncode]].size without the arrays. */
-case class WordPieceCount(child: Expression,
-    pt: WordPieceKernels.PieceTable) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_wordpiece_count needs a string argument, got $t")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_wordpiece_count"
-
-  override protected def nullSafeEval(s: Any): Any =
-    WordPieceKernels.countKernel(s.asInstanceOf[UTF8String], pt)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val ptRef = ctx.addReferenceObj("graftWpTable", pt,
-      classOf[WordPieceKernels.PieceTable].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordPieceKernels.countKernel($c, $ptRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordPieceCount = copy(child = newChild)
 }

@@ -187,10 +187,9 @@ object Multimodal {
     * flags the SOF2 frames a downstream decoder pipeline treats
     * differently. Refreshes [[MetaType]] (mime + dims). */
   def decodeJpegMeta(df: DataFrame, contentCol: String = "content"): DataFrame = {
-    graft.functions.MediaKernels.register(df.sparkSession)
     val c = col(contentCol)
     val withPacked = df.withColumn("__jp",
-      when(isJpeg(c), call_function("graft_jpeg_sof", c)))
+      when(isJpeg(c), graft.functions.MediaKernels.jpegSof(c)))
     val p = col("__jp")
     def f(v: Column): Column = when(p.isNotNull, v)
     val withFields = withPacked

@@ -86,10 +86,9 @@ object Discretize {
       nBins: Int, suffix: String): DataFrame = {
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
     require(cols.nonEmpty, "no columns to discretize")
-    graft.functions.ExactPercentile.register(df.sparkSession)
     val probs = (1 until nBins).map(_.toDouble / nBins)
     val aggs = cols.map { c =>
-      call_function("graft_percentile", col(c).cast(DoubleType),
+      graft.functions.ExactPercentile.column(col(c).cast(DoubleType),
         array(probs.map(lit): _*)).as(s"${c}__q")
     }
     val row = fitDf.agg(aggs.head, aggs.tail: _*).head()

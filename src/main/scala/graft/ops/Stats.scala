@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.util.Exprs._
+import graft.functions.ExactPercentile
 
 /** Statistics passes that parameterize transforms (fit/transform shape,
   * SURVEY.md §3.1). The reference issues one eager pandas call per column
@@ -74,10 +75,9 @@ object Stats {
     }
     val pctAggs =
       if (wantMed) cols.map { c =>
-        call_function("graft_percentile", col(c).cast(DoubleType),
+        ExactPercentile.column(col(c).cast(DoubleType),
           array(pcts.map(lit): _*)).as(s"${c}__pct")
       } else Nil
-    graft.functions.ExactPercentile.register(df.sparkSession)
     val split = pctAggs.nonEmpty && (need.moments || need.extremes)
     // The split runs TWO independent scans of `df`. For a deterministic
     // input that's free; for a non-deterministic one (sample(), a
@@ -151,9 +151,8 @@ object Stats {
   def medianDev(df: DataFrame, cols: Seq[String], devP: Double)
       : Map[String, (Option[Double], Option[Double])] = {
     if (cols.isEmpty) return Map.empty
-    graft.functions.ExactPercentile.registerMedianAbsDev(df.sparkSession)
-    val aggs = cols.map(c => call_function("graft_median_absdev",
-      col(c).cast(DoubleType), lit(devP)).as(c))
+    val aggs = cols.map(c =>
+      ExactPercentile.medianAbsDev(col(c).cast(DoubleType), devP).as(c))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     cols.map { c =>
       val i = row.fieldIndex(c)

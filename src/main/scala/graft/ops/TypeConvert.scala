@@ -97,7 +97,6 @@ final case class TypeConvert(
     // r16: the scan runs as the graft_probe_mask codegen kernel
     // ([[graft.functions.ProbeMask]] — ASCII cells scan UTF-8 bytes in
     // place), not the Scala UDF it started as; same bitmask bit for bit.
-    graft.functions.TextKernels.register(df.sparkSession)
     // r21: with the DEFAULT format chain, the true parse-ratio count runs
     // INSIDE job 1, per-row-gated on the shape bit — bit 3 unset costs one
     // bitmask test, bit 3 set runs the same regex-gated chain job 1b ran
@@ -112,7 +111,7 @@ final case class TypeConvert(
     // non-datetime string cell the full multi-format regex chain.
     val gated = datetimeFormats == TypeConvert.DefaultFormats
     val flagCols = strCols.flatMap { c =>
-      Seq(call_function("graft_probe_mask", col(c)).as(s"${c}__m"),
+      Seq(graft.functions.TextKernels.probeMask(col(c)).as(s"${c}__m"),
         col(c).as(s"${c}__v"))
     }
     val flags = fitManualDf.select(flagCols: _*)

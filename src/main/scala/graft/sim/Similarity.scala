@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorKernels
+
 /** Embedding similarity search (SURVEY.md §7.6; BASELINE.json north star).
   *
   * Brute-force cosine top-k is the exact baseline: broadcast the (small)
@@ -56,9 +58,8 @@ object Similarity {
     // semantics as [[vecOkUdf]], but evaluated inside the scan's codegen
     // span — the gate runs on EVERY embedding row, so the UDF's per-row
     // boxing was pure overhead
-    graft.functions.VectorKernels.register(df.sparkSession)
     df.withColumn(castAs, toDoubleArr(col(vecCol)))
-      .where(call_function("graft_vec_ok", col(castAs)))
+      .where(VectorKernels.vecOk(col(castAs)))
   }
 
   /** Cosine similarity of two double arrays; null when either norm is 0. */
@@ -85,10 +86,8 @@ object Similarity {
   /** Codegen'd dot product ([[graft.functions.DotProduct]]): reads the
     * unsafe arrays in place inside WholeStageCodegen — no Seq boxing, no
     * codegen break. Same fold order as [[dotUdf]]/[[dot]] →
-    * bit-identical. Callers must [[graft.functions.VectorKernels
-    * .register]] the session first (every public method here does). */
-  private def dotK(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
+    * bit-identical. */
+  private def dotK(a: Column, b: Column): Column = VectorKernels.dot(a, b)
 
   /** Fused cosine UDF — same algebra as [[cosine]] (null when a norm is
     * 0), same accumulation order, interpreted-overhead-free. SUPERSEDED
@@ -110,7 +109,6 @@ object Similarity {
     * per-query window. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorKernels.register(corpus.sparkSession)
     // norms hoisted to per-ROW projections before the join — inlining
     // cosine() would recompute both norms once per PAIR. Same arithmetic
     // (dot/(|a|·|b|)), so results are bit-identical to the inline form.
@@ -189,15 +187,13 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       planes: Int = 16, bands: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorKernels.register(corpus.sparkSession)
     require(planes % bands == 0, "bands must divide planes")
     val r = planes / bands
     // band key = (band index, the band's bits of the signature);
     // graft_signature (functions/HyperplaneSignature, r14) runs the
     // planes·dim mul-adds inside codegen with the weight table as a
     // task-level reference object — identical signatures to signatureUdf
-    val sig = (c: Column) =>
-      call_function("graft_signature", c, lit(dim), lit(planes))
+    val sig = (c: Column) => VectorKernels.signature(c, dim, planes)
     val cSig = withVec(corpus, vecCol, "c_vec")
       .select(col(idCol).as("c_id"), col("c_vec"))
       .withColumn("__sig", sig(col("c_vec")))
@@ -467,74 +463,31 @@ object Similarity {
       nlist: Int = 16, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       seed: Long = 42L, index: Option[IvfIndex] = None): DataFrame = {
-    graft.functions.VectorKernels.register(corpus.sparkSession)
-    val spark = corpus.sparkSession
     index.foreach(i => require(i.nlist == nlist && i.seed == seed,
       s"index (nlist=${i.nlist}, seed=${i.seed}) does not match the call " +
         s"(nlist=$nlist, seed=$seed)"))
     val centers = index.map(_.centers)
       .getOrElse(fitCenters(corpus, nlist, idCol, vecCol, seed))
-    withCellKernels(spark, centers, nprobe) { (assign, probe) =>
-      val c = withVec(corpus, vecCol, "c_vec")
-        .select(col(idCol).as("c_id"), col("c_vec"))
-        .withColumn("__cell", assign(col("c_vec")))
-        .withColumn("c_norm", sqrt(dotK(col("c_vec"), col("c_vec"))))
-      val q = withVec(queries, vecCol, "q_vec")
-        .select(col(idCol).as("query_id"), col("q_vec"))
-        .withColumn("__cell", explode(probe(col("q_vec"))))
-        .withColumn("q_norm", sqrt(dotK(col("q_vec"), col("q_vec"))))
-      val scored = c.join(broadcast(q), Seq("__cell"))
-        .where(col("c_id") =!= col("query_id"))
-        .select(col("query_id"), col("c_id").as("neighbor_id"),
-          round(when(col("q_norm") =!= 0.0 && col("c_norm") =!= 0.0,
-            dotK(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm"))), 6)
-            .as("sim"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(desc("sim"), asc("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast(LongType))
-        .where(col("rank") <= k)
-    }
+    val c = withVec(corpus, vecCol, "c_vec")
+      .select(col(idCol).as("c_id"), col("c_vec"))
+      .withColumn("__cell", VectorKernels.assignCell(col("c_vec"), centers))
+      .withColumn("c_norm", sqrt(dotK(col("c_vec"), col("c_vec"))))
+    val q = withVec(queries, vecCol, "q_vec")
+      .select(col(idCol).as("query_id"), col("q_vec"))
+      .withColumn("__cell",
+        explode(VectorKernels.probeCells(col("q_vec"), centers, nprobe)))
+      .withColumn("q_norm", sqrt(dotK(col("q_vec"), col("q_vec"))))
+    val scored = c.join(broadcast(q), Seq("__cell"))
+      .where(col("c_id") =!= col("query_id"))
+      .select(col("query_id"), col("c_id").as("neighbor_id"),
+        round(when(col("q_norm") =!= 0.0 && col("c_norm") =!= 0.0,
+          dotK(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm"))), 6)
+          .as("sim"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(desc("sim"), asc("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w).cast(LongType))
+      .where(col("rank") <= k)
   }
-
-  /** The nearest-cell / nearest-`nprobe`-cells column builders over the
-    * fitted centers — shared by [[ivfTopK]] and
-    * [[ivfTopKQuantizedRefine]]. Since r17 these are the
-    * [[graft.functions.IvfCellAssign]]/[[graft.functions.IvfCellProbe]]
-    * codegen kernels, replacing the per-row `Seq[Double]` UDF pair that
-    * boxed every CORPUS vector once per row (the shape `graft_dot`
-    * already eliminated for scoring, ~3× there). Centers are runtime
-    * data (a Lloyd fit) — not constructible from `Seq[Expression]`
-    * args — so the kernels register under per-call names whose builders
-    * close over them, `body` constructs its DataFrames (analysis is
-    * EAGER, the plan holds the resolved expression before we return),
-    * and the entries drop on the way out — the
-    * [[graft.text.Decontaminate.flagContaminatedBloom]] dance. */
-  private def withCellKernels[T](spark: org.apache.spark.sql.SparkSession,
-      centers: Array[Array[Double]], nprobe: Int)(
-      body: (Column => Column, Column => Column) => T): T = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    val id = cellKernelIds.incrementAndGet()
-    val aName = s"graft_ivf_assign_$id"
-    val pName = s"graft_ivf_probe_$id"
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(aName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$aName takes (vec), got ${args.length}")
-        graft.functions.IvfCellAssign(args(0), centers)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction(pName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$pName takes (vec), got ${args.length}")
-        graft.functions.IvfCellProbe(args(0), centers, nprobe)
-      }, "scala_udf")
-    try body(v => call_function(aName, v), v => call_function(pName, v))
-    finally {
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(aName))
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(pName))
-    }
-  }
-
-  private val cellKernelIds = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** IVF over the QUANTIZED corpus with exact full-precision refine —
     * the faiss IVF+SQ8-with-refine composition (r15 verdict #7): the
@@ -563,47 +516,44 @@ object Similarity {
       seed: Long = 42L, index: Option[IvfIndex] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(overfetch >= 1, s"overfetch must be >= 1, got $overfetch")
-    graft.functions.VectorKernels.register(corpus.sparkSession)
-    val spark = corpus.sparkSession
     index.foreach(i => require(i.nlist == nlist && i.seed == seed,
       s"index (nlist=${i.nlist}, seed=${i.seed}) does not match the call " +
         s"(nlist=$nlist, seed=$seed)"))
     val deq = dequantizedCorpus(corpus, idCol, vecCol)
     val centers = index.map(_.centers)
       .getOrElse(fitCenters(deq, nlist, idCol, "__dq", seed))
-    withCellKernels(spark, centers, nprobe) { (assign, probe) =>
-      val c = deq
-        .select(col(idCol).as("c_id"), col("__dq").as("c_vec"))
-        .withColumn("__cell", assign(col("c_vec")))
-      val q = withVec(queries, vecCol, "q_vec")
-        .select(col(idCol).as("query_id"), col("q_vec"))
-        .withColumn("__cell", explode(probe(col("q_vec"))))
-      // stage 1: quantized candidate cut — rank on the ROUNDED quantized
-      // sim (6dp, id tie-break) so the candidate SET is reproducible in
-      // another engine's double math
-      val qsimed = c.join(broadcast(q), Seq("__cell"))
-        .where(col("c_id") =!= col("query_id"))
-        .select(col("query_id"), col("q_vec"),
-          col("c_id").as("neighbor_id"),
-          round(call_function("graft_cosine", col("q_vec"), col("c_vec")), 6)
-            .as("qsim"))
-      val wq = Window.partitionBy("query_id")
-        .orderBy(desc("qsim"), asc("neighbor_id"))
-      val cand = qsimed.withColumn("__crk", row_number().over(wq))
-        .where(col("__crk") <= k * overfetch)
-        .select("query_id", "q_vec", "neighbor_id")
-      // stage 2: exact refine — candidates broadcast back onto the
-      // full-precision scan; the corpus never shuffles
-      val full = withVec(corpus, vecCol, "a_vec")
-        .select(col(idCol).as("neighbor_id"), col("a_vec"))
-      val exact = full.join(broadcast(cand), Seq("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          round(call_function("graft_cosine", col("q_vec"), col("a_vec")), 6)
-            .as("sim"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(desc("sim"), asc("neighbor_id"))
-      exact.withColumn("rank", row_number().over(w).cast(LongType))
-        .where(col("rank") <= k)
-    }
+    val c = deq
+      .select(col(idCol).as("c_id"), col("__dq").as("c_vec"))
+      .withColumn("__cell", VectorKernels.assignCell(col("c_vec"), centers))
+    val q = withVec(queries, vecCol, "q_vec")
+      .select(col(idCol).as("query_id"), col("q_vec"))
+      .withColumn("__cell",
+        explode(VectorKernels.probeCells(col("q_vec"), centers, nprobe)))
+    // stage 1: quantized candidate cut — rank on the ROUNDED quantized
+    // sim (6dp, id tie-break) so the candidate SET is reproducible in
+    // another engine's double math
+    val qsimed = c.join(broadcast(q), Seq("__cell"))
+      .where(col("c_id") =!= col("query_id"))
+      .select(col("query_id"), col("q_vec"),
+        col("c_id").as("neighbor_id"),
+        round(VectorKernels.cosine(col("q_vec"), col("c_vec")), 6)
+          .as("qsim"))
+    val wq = Window.partitionBy("query_id")
+      .orderBy(desc("qsim"), asc("neighbor_id"))
+    val cand = qsimed.withColumn("__crk", row_number().over(wq))
+      .where(col("__crk") <= k * overfetch)
+      .select("query_id", "q_vec", "neighbor_id")
+    // stage 2: exact refine — candidates broadcast back onto the
+    // full-precision scan; the corpus never shuffles
+    val full = withVec(corpus, vecCol, "a_vec")
+      .select(col(idCol).as("neighbor_id"), col("a_vec"))
+    val exact = full.join(broadcast(cand), Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        round(VectorKernels.cosine(col("q_vec"), col("a_vec")), 6)
+          .as("sim"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(desc("sim"), asc("neighbor_id"))
+    exact.withColumn("rank", row_number().over(w).cast(LongType))
+      .where(col("rank") <= k)
   }
 }

@@ -1,9 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.BpeKernels
+import graft.functions.{BpeKernels, SubwordTable}
 
 /** Byte-pair encoding: train on a corpus, tokenize with a frozen merge
   * list. This is the tokenizer-aware token accounting the packing /
@@ -30,7 +30,7 @@ import graft.functions.BpeKernels
   *    training at any corpus size: pair statistics live on the
   *    word-frequency table, never the token stream.
   *  - APPLY: pure per-row codegen expressions
-  *    ([[graft.functions.BpeEncode]] / [[graft.functions.BpeCount]]);
+  *    ([[tokens]] / [[tokenCount]]);
   *    the corpus never shuffles, and the count path materializes no
   *    token arrays.
   */
@@ -156,57 +156,29 @@ object Bpe {
         Merge(i, ln.substring(0, sp), ln.substring(sp + 1))
     }.toSeq
 
-  /** `df` plus a flat array<string> BPE token column (word order
-    * preserved; blank → empty, null → null). DataFrame-in/DataFrame-out
-    * on purpose: the kernel registration lives only inside
-    * [[withKernels]], and a bare Column handed to the caller would be
-    * resolved AFTER the entry dropped — `withColumn` analyzes eagerly
-    * while the registration is still live. */
+  /** BPE tokens of `text` as a flat array<string> (word order
+    * preserved; blank → empty, null → null). */
+  def tokens(text: Column, merges: Seq[Merge]): Column =
+    SubwordTable.encode(text, mergeTable(merges))
+
+  /** BPE token COUNT of `text` (blank → 0, null → null) — no token
+    * arrays materialize. */
+  def tokenCount(text: Column, merges: Seq[Merge]): Column =
+    SubwordTable.count(text, mergeTable(merges))
+
+  private def mergeTable(merges: Seq[Merge]): BpeKernels.MergeTable =
+    new BpeKernels.MergeTable(
+      merges.sortBy(_.rank).map(m => (m.left, m.right)))
+
+  /** `df` plus a [[tokens]] column. */
   def withTokens(df: DataFrame, textCol: String, outCol: String,
       merges: Seq[Merge]): DataFrame =
-    withKernels(df.sparkSession, merges)((enc, _) =>
-      df.withColumn(outCol, enc(col(textCol))))
+    df.withColumn(outCol, tokens(col(textCol), merges))
 
-  /** `df` plus a BPE token COUNT column (blank → 0, null → null) — no
-    * token arrays materialize. Same DataFrame-in/out contract as
-    * [[withTokens]]. */
+  /** `df` plus a [[tokenCount]] column. */
   def withTokenCount(df: DataFrame, textCol: String, outCol: String,
       merges: Seq[Merge]): DataFrame =
-    withKernels(df.sparkSession, merges)((_, cnt) =>
-      df.withColumn(outCol, cnt(col(textCol))))
-
-  /** The per-call registry dance for runtime-data kernels (the
-    * [[graft.sim.Similarity]] `withCellKernels` route): merge tables
-    * are data, not expression args, so the builders close over them;
-    * `body` must CONSTRUCT its plan before returning (analysis is
-    * eager) and the entries drop on the way out. */
-  def withKernels[T](spark: SparkSession, merges: Seq[Merge])(
-      body: (Column => Column, Column => Column) => T): T = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    val mt = new BpeKernels.MergeTable(
-      merges.sortBy(_.rank).map(m => (m.left, m.right)))
-    val id = kernelIds.incrementAndGet()
-    val eName = s"graft_bpe_encode_$id"
-    val cName = s"graft_bpe_count_$id"
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(eName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$eName takes (text), got ${args.length}")
-        graft.functions.BpeEncode(args(0), mt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction(cName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$cName takes (text), got ${args.length}")
-        graft.functions.BpeCount(args(0), mt)
-      }, "scala_udf")
-    try body(v => call_function(eName, v), v => call_function(cName, v))
-    finally {
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(eName))
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(cName))
-    }
-  }
-
-  private val kernelIds = new java.util.concurrent.atomic.AtomicLong(0L)
+    df.withColumn(outCol, tokenCount(col(textCol), merges))
 
   /** The frozen demo merge list the q_bpe_* oracle queries share with
     * DuckDB: [[learn]]'s output on the sf0.001 documents corpus

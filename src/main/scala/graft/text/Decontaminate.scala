@@ -1,7 +1,6 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Test-set decontamination: flag corpus documents sharing any word
@@ -121,35 +120,17 @@ object Decontaminate {
     val nGrams = math.max(benchGrams.count(), 1L)
     val bf = benchGrams.stat.bloomFilter("__gh", nGrams, fpp)
     val bc = spark.sparkContext.broadcast(bf)
-    // A broadcast is not constructible from Seq[Expression] args, so the
-    // kernel registers under a per-call name whose builder closes over
-    // it; DataFrame analysis is EAGER, so the function is resolved into
-    // the plan by the time the entry is dropped below.
-    val fname = s"graft_bloom_probe_${bloomProbeIds.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname,
-      (args: Seq[Expression]) => {
-        require(args.length == 1,
-          s"$fname takes (hash), got ${args.length}")
-        graft.functions.BloomMightContainLong(args(0), bc)
-      },
-      "scala_udf")
-    try {
-      val corpusGrams = corpus
-        .select(col(idCol), tokens(col(textCol)).as("__ws"))
-        .select(col(idCol),
-          explode(ngramsOfTokens(col("__ws"), n)).as("__g"))
-        .select(col(idCol), xxhash64(col("__g")).as("__gh"))
-        .where(call_function(fname, col("__gh")))
-      val hits = corpusGrams.join(benchGrams, Seq("__gh"), "left_semi")
-        .select(idCol).distinct()
-        .withColumn("__hit", lit(true))
-      corpus.join(hits, Seq(idCol), "left")
-        .withColumn("contaminated", coalesce(col("__hit"), lit(false)))
-        .drop("__hit")
-    } finally spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fname))
+    val corpusGrams = corpus
+      .select(col(idCol), tokens(col(textCol)).as("__ws"))
+      .select(col(idCol),
+        explode(ngramsOfTokens(col("__ws"), n)).as("__g"))
+      .select(col(idCol), xxhash64(col("__g")).as("__gh"))
+      .where(graft.functions.TextKernels.bloomContains(col("__gh"), bc))
+    val hits = corpusGrams.join(benchGrams, Seq("__gh"), "left_semi")
+      .select(idCol).distinct()
+      .withColumn("__hit", lit(true))
+    corpus.join(hits, Seq(idCol), "left")
+      .withColumn("contaminated", coalesce(col("__hit"), lit(false)))
+      .drop("__hit")
   }
-
-  private val bloomProbeIds = new java.util.concurrent.atomic.AtomicLong(0L)
 }

@@ -45,13 +45,11 @@ object HeavyHitterTerms {
     require((k + 1).toDouble > 1.0 / minFrac,
       s"summarySize $k cannot guarantee recall at minFrac $minFrac — " +
         s"need summarySize + 1 > ${1.0 / minFrac}")
-    graft.functions.HeavyHitters.register(df.sparkSession)
     val toks = df.select(explode(filter(
       split(trim(lower(col(textCol))), "\\s+"),
       t => length(t) > 0)).as("term"))
     val candidates = toks
-      .agg(call_function("graft_heavy_hitters", col("term"), lit(k))
-        .as("__cands"))
+      .agg(graft.functions.HeavyHitters.terms(col("term"), k).as("__cands"))
       .select(explode(col("__cands")).as("term"))
     val nToks = toks.agg(count(lit(1)).cast(DoubleType).as("__n")).scalar()
     toks.join(broadcast(candidates), Seq("term"), "left_semi")

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextKernels
+
 /** Gopher-style repetition quality signals (Rae et al. 2021, "Scaling
   * Language Models", appendix A1.1): web documents dominated by repeated
   * words or n-grams are boilerplate, keyword spam, or scraper artifacts,
@@ -110,9 +112,7 @@ object QualityFilters {
     * to 6 decimals for cross-engine comparison. */
   def repetitionSignals(df: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    graft.functions.TextKernels.register(df.sparkSession)
-    df.select(col(idCol),
-        call_function("graft_repetition", col(textCol)).as("__r"))
+    df.select(col(idCol), TextKernels.repetition(col(textCol)).as("__r"))
       .select(col(idCol), col("__r.n_words").as("n_words"),
         round(col("__r.dup_word_frac"), 6).as("dup_word_frac"),
         round(col("__r.top_bigram_char_frac"), 6).as("top_bigram_char_frac"),
@@ -140,9 +140,7 @@ object QualityFilters {
       maxTopBigramCharFrac: Double = 0.18,
       maxTopTrigramCharFrac: Double = 0.16,
       maxDupFivegramCharFrac: Double = 0.15): DataFrame = {
-    graft.functions.TextKernels.register(df.sparkSession)
-    df.where(call_function("graft_rep_keep", col(textCol),
-      lit(maxDupWordFrac), lit(maxTopBigramCharFrac),
-      lit(maxTopTrigramCharFrac), lit(maxDupFivegramCharFrac)))
+    df.where(TextKernels.repetitionKeep(col(textCol), maxDupWordFrac,
+      maxTopBigramCharFrac, maxTopTrigramCharFrac, maxDupFivegramCharFrac))
   }
 }

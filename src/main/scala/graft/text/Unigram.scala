@@ -1,9 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.UnigramKernels
+import graft.functions.{SubwordTable, UnigramKernels}
 
 /** Unigram-LM (SentencePiece-style) Viterbi tokenization — the third
   * tokenizer family (r20, completing the budget cross-check triangle
@@ -120,46 +120,22 @@ object Unigram {
     costs
   }
 
-  /** `df` plus a flat array<string> piece column. Same
-    * DataFrame-in/out contract as [[Bpe.withTokens]]. */
+  /** Viterbi unigram pieces of `text` as a flat array<string> (word
+    * order preserved; blank → empty, null → null). */
+  def pieces(text: Column, costed: Seq[(String, Long)]): Column =
+    SubwordTable.encode(text, new UnigramKernels.PieceTable(costed))
+
+  /** Piece COUNT of `text` — no arrays materialize. */
+  def pieceCount(text: Column, costed: Seq[(String, Long)]): Column =
+    SubwordTable.count(text, new UnigramKernels.PieceTable(costed))
+
+  /** `df` plus a [[pieces]] column. */
   def withPieces(df: DataFrame, textCol: String, outCol: String,
       costed: Seq[(String, Long)]): DataFrame =
-    withKernels(df.sparkSession, costed)((enc, _) =>
-      df.withColumn(outCol, enc(col(textCol))))
+    df.withColumn(outCol, pieces(col(textCol), costed))
 
-  /** `df` plus a piece-count column — no arrays materialize. */
+  /** `df` plus a [[pieceCount]] column. */
   def withPieceCount(df: DataFrame, textCol: String, outCol: String,
       costed: Seq[(String, Long)]): DataFrame =
-    withKernels(df.sparkSession, costed)((_, cnt) =>
-      df.withColumn(outCol, cnt(col(textCol))))
-
-  /** Per-call registry dance for runtime-data kernels — the
-    * [[Bpe.withKernels]]/[[WordPiece.withKernels]] pattern verbatim
-    * (costed inventories are data, not expression args). */
-  def withKernels[T](spark: SparkSession, costed: Seq[(String, Long)])(
-      body: (Column => Column, Column => Column) => T): T = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    val pt = new UnigramKernels.PieceTable(costed)
-    val id = kernelIds.incrementAndGet()
-    val eName = s"graft_unigram_encode_$id"
-    val cName = s"graft_unigram_count_$id"
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(eName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$eName takes (text), got ${args.length}")
-        graft.functions.UnigramEncode(args(0), pt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction(cName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$cName takes (text), got ${args.length}")
-        graft.functions.UnigramCount(args(0), pt)
-      }, "scala_udf")
-    try body(v => call_function(eName, v), v => call_function(cName, v))
-    finally {
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(eName))
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(cName))
-    }
-  }
-
-  private val kernelIds = new java.util.concurrent.atomic.AtomicLong(0L)
+    df.withColumn(outCol, pieceCount(col(textCol), costed))
 }

@@ -1,9 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.WordPieceKernels
+import graft.functions.{SubwordTable, WordPieceKernels}
 
 /** Greedy longest-match (WordPiece-inference) tokenization — the
   * second tokenizer family (r19, closing the r18 verdict's "tokenizer
@@ -44,47 +44,22 @@ object WordPiece {
     pieces.toSeq.sortBy(p => (-p.length, p))
   }
 
-  /** `df` plus a flat array<string> piece column. Same
-    * DataFrame-in/out contract as [[Bpe.withTokens]] (eager analysis
-    * inside the registration window). */
+  /** Greedy longest-match pieces of `text` as a flat array<string>
+    * (word order preserved; blank → empty, null → null). */
+  def pieces(text: Column, vocab: Seq[String]): Column =
+    SubwordTable.encode(text, new WordPieceKernels.PieceTable(vocab))
+
+  /** Piece COUNT of `text` — no arrays materialize. */
+  def pieceCount(text: Column, vocab: Seq[String]): Column =
+    SubwordTable.count(text, new WordPieceKernels.PieceTable(vocab))
+
+  /** `df` plus a [[pieces]] column. */
   def withPieces(df: DataFrame, textCol: String, outCol: String,
       pieces: Seq[String]): DataFrame =
-    withKernels(df.sparkSession, pieces)((enc, _) =>
-      df.withColumn(outCol, enc(col(textCol))))
+    df.withColumn(outCol, this.pieces(col(textCol), pieces))
 
-  /** `df` plus a piece-count column — no arrays materialize. */
+  /** `df` plus a [[pieceCount]] column. */
   def withPieceCount(df: DataFrame, textCol: String, outCol: String,
       pieces: Seq[String]): DataFrame =
-    withKernels(df.sparkSession, pieces)((_, cnt) =>
-      df.withColumn(outCol, cnt(col(textCol))))
-
-  /** Per-call registry dance for runtime-data kernels — the
-    * [[Bpe.withKernels]] pattern verbatim (piece inventories are data,
-    * not expression args). */
-  def withKernels[T](spark: SparkSession, pieces: Seq[String])(
-      body: (Column => Column, Column => Column) => T): T = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    val pt = new WordPieceKernels.PieceTable(pieces)
-    val id = kernelIds.incrementAndGet()
-    val eName = s"graft_wordpiece_encode_$id"
-    val cName = s"graft_wordpiece_count_$id"
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(eName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$eName takes (text), got ${args.length}")
-        graft.functions.WordPieceEncode(args(0), pt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction(cName,
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$cName takes (text), got ${args.length}")
-        graft.functions.WordPieceCount(args(0), pt)
-      }, "scala_udf")
-    try body(v => call_function(eName, v), v => call_function(cName, v))
-    finally {
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(eName))
-      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(cName))
-    }
-  }
-
-  private val kernelIds = new java.util.concurrent.atomic.AtomicLong(0L)
+    df.withColumn(outCol, pieceCount(col(textCol), pieces))
 }

@@ -126,9 +126,6 @@ object Exprs {
     * SURVEY.md §4.2). Routed through
     * [[graft.functions.ExactPercentile]], the primitive-buffer twin of the
     * built-in (same interpolation, no per-row boxing). */
-  def pctl(c: Column, p: Double): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.ExactPercentile.register)
-    call_function("graft_percentile", c.cast(DoubleType), lit(p))
-  }
+  def pctl(c: Column, p: Double): Column =
+    graft.functions.ExactPercentile.column(c.cast(DoubleType), lit(p))
 }

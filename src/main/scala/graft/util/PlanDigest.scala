@@ -13,8 +13,7 @@ import org.apache.spark.sql.DataFrame
   *
   * Canonicalization strips what legitimately varies run-to-run while
   * keeping everything that defines the plan's shape and cost:
-  * expression ids renumber by first appearance, session-scoped
-  * temp-function counters (`graft_*_<n>`) and rdd/codegen/plan ids
+  * expression ids renumber by first appearance, rdd/codegen/plan ids
   * normalize, absolute paths (the sf dir, warehouse/temp dirs)
   * collapse to placeholders. Digests are pinned at sf0.001 under the
   * test session — stat-pass literals a query embeds (medians, IQR
@@ -44,9 +43,6 @@ object PlanDigest {
     // warehouse dirs — machine/run-specific, never plan-shape
     s = s.replaceAll("file:[^\\s,\\]\\)]*", "<PATH>")
     s = s.replaceAll("/(?:tmp|root|home)/[^\\s,\\]\\)]*", "<PATH>")
-    // session-scoped counters in registered kernel names
-    // (graft_bpe_encode_17 → graft_bpe_encode_<n>)
-    s = s.replaceAll("(graft_[a-z0-9_]*?)_\\d+\\(", "$1_<n>(")
     // cached subtrees: rdd ids, storage/codegen/plan ids
     s = s.replaceAll("rdd_\\d+", "rdd_<id>")
     s = s.replaceAll("\\[plan_id=\\d+\\]", "[plan_id=<id>]")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{BinnedDigest, PctBuffer}
+import graft.functions.{BinnedDigest, ExactPercentile, PctBuffer}
 
 /** Pins the bounded-buffer behavior of `graft_percentile`
   * (ExactPercentile): beyond `maxDistinct` distinct values the exact
@@ -119,12 +119,11 @@ class ApproxPercentileSpec extends SparkSpec {
   }
 
   test("three-arg SQL form forces a low bound end-to-end") {
-    graft.functions.ExactPercentile.register(spark)
     val df = spark.range(20000).select(($"id" % 16411 * 7919 % 16411)
       .cast("double").as("x")) // pseudo-shuffled, ~16k distinct
     val row = df.repartition(4).agg(
-      call_function("graft_percentile", $"x", lit(0.5), lit(100)).as("approx"),
-      call_function("graft_percentile", $"x", lit(0.5)).as("exact")).head()
+      ExactPercentile.column($"x", lit(0.5), maxDistinct = 100).as("approx"),
+      ExactPercentile.column($"x", lit(0.5)).as("exact")).head()
     val approxMed = row.getDouble(0)
     val exactMed = row.getDouble(1)
     // 16411 distinct uniform values: exact median ~8205; digest error bound
@@ -133,25 +132,14 @@ class ApproxPercentileSpec extends SparkSpec {
   }
 
   test("conf key lowers the bound for two-arg calls") {
-    graft.functions.ExactPercentile.register(spark)
-    spark.conf.set(graft.functions.ExactPercentile.MaxDistinctKey, "64")
+    spark.conf.set(ExactPercentile.MaxDistinctKey, "64")
     try {
       val df = spark.range(5000).select($"id".cast("double").as("x"))
-      val med = df.agg(
-        call_function("graft_percentile", $"x", lit(0.5)).as("m"))
+      // the bound is read when the column is built, after the conf is set
+      val med = df.agg(ExactPercentile.column($"x", lit(0.5)).as("m"))
         .head().getDouble(0)
       // approx path (bound 64 << 5000 distincts) still lands near 2499.5
       assert(math.abs(med - 2499.5) <= 80.0, s"median=$med")
-    } finally spark.conf.unset(graft.functions.ExactPercentile.MaxDistinctKey)
-  }
-
-  test("a second register keeps the first builder: the bound is read per build") {
-    // the test above relies on this too: it registers before setting the conf
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_percentile")
-    graft.functions.ExactPercentile.register(spark)
-    val first = reg.lookupFunctionBuilder(id)
-    graft.functions.ExactPercentile.register(spark)
-    assert(first.isDefined && (reg.lookupFunctionBuilder(id).get eq first.get))
+    } finally spark.conf.unset(ExactPercentile.MaxDistinctKey)
   }
 }

@@ -147,4 +147,25 @@ class BenchGateSpec extends AnyFunSuite {
       """"failed":[],"sf":"x"}"""
     assert(Bench.parseQueryTimes(rt, None) == Map("q_a" -> 5.0))
   }
+
+  test("the default history is keyed by sf AND core count, and the " +
+      "results-file fallback only seeds from the same core count") {
+    assert(Bench.historyFileName("/data/sf0.1", "4")
+      == "bench_history_sf0.1_c4.json")
+    assert(Bench.historyFileName("/tmp/sf1", "32")
+      == "bench_history_sf1_c32.json")
+    assert(Bench.historyFileName("/tmp/sf1", "8")
+      != Bench.historyFileName("/tmp/sf1", "32"))
+    def file(cpusField: String) =
+      """{"metric":"total","value":9,"unit":"sec",""" +
+        """"queries":{"q_a":2.0},"failed":[],""" + cpusField +
+        """"sf":"/data/sf0.1"}"""
+    val sf = Some("/data/sf0.1")
+    assert(Bench.parseQueryTimes(file("\"cpus\":\"4\","), sf, Some("4"))
+      == Map("q_a" -> 2.0))
+    assert(Bench.parseQueryTimes(file("\"cpus\":\"32\","), sf, Some("4"))
+      .isEmpty, "a 32-core results file must not seed a 4-core baseline")
+    assert(Bench.parseQueryTimes(file(""), sf, Some("4")).isEmpty,
+      "a results file without a host shape cannot prove its core count")
+  }
 }

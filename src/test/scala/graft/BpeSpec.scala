@@ -33,8 +33,8 @@ class BpeSpec extends SparkSpec {
   test("greedy pass: left-to-right run semantics") {
     val mt = new BpeKernels.MergeTable(Seq(("a", "a")))
     def toks(w: String) = {
-      val arr = BpeKernels.encodeKernel(
-        org.apache.spark.unsafe.types.UTF8String.fromString(w), mt)
+      val arr = mt.encode(
+        org.apache.spark.unsafe.types.UTF8String.fromString(w))
       (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
     }
     assert(toks("aaa") === Seq("aa", "a"))   // NOT a|aa
@@ -46,8 +46,8 @@ class BpeSpec extends SparkSpec {
   test("rank order: a later merge cannot re-feed an earlier one") {
     // well-formed list: (a,b) then (ab,c). "abc" → ab then abc.
     val mt = new BpeKernels.MergeTable(Seq(("a", "b"), ("ab", "c")))
-    val arr = BpeKernels.encodeKernel(
-      org.apache.spark.unsafe.types.UTF8String.fromString("abc abc"), mt)
+    val arr = mt.encode(
+      org.apache.spark.unsafe.types.UTF8String.fromString("abc abc"))
     assert((0 until arr.numElements())
       .map(i => arr.getUTF8String(i).toString) === Seq("abc", "abc"))
   }
@@ -56,10 +56,9 @@ class BpeSpec extends SparkSpec {
     val df = Seq((0L, "the fast scan"), (1L, "   "), (2L, ""),
       (3L, null.asInstanceOf[String]), (4L, "Window WINDOW window"))
       .toDF("id", "text")
-    val rows = Bpe.withKernels(spark, Bpe.DemoMerges) { (enc, cnt) =>
-      df.select($"id", enc($"text").as("t"), cnt($"text").as("n"))
-        .orderBy("id").collect()
-    }
+    val rows = df.select($"id", Bpe.tokens($"text", Bpe.DemoMerges).as("t"),
+        Bpe.tokenCount($"text", Bpe.DemoMerges).as("n"))
+      .orderBy("id").collect()
     assert(rows(1).getSeq[String](1) === Seq.empty)
     assert(rows(1).getLong(2) === 0L)
     assert(rows(2).getLong(2) === 0L)
@@ -77,9 +76,8 @@ class BpeSpec extends SparkSpec {
     try {
       val df = Seq((1L, "the query vector joins the sorted window aaa"))
         .toDF("id", "text")
-      def run() = Bpe.withKernels(spark, Bpe.DemoMerges) { (enc, cnt) =>
-        df.select(enc($"text"), cnt($"text")).head()
-      }
+      def run() = df.select(Bpe.tokens($"text", Bpe.DemoMerges),
+        Bpe.tokenCount($"text", Bpe.DemoMerges)).head()
       val withCodegen = run()
       spark.conf.set(key, "NO_CODEGEN")
       val interpreted = run()
@@ -121,12 +119,11 @@ class BpeSpec extends SparkSpec {
       (1L, " spaced  out "),  // SQL trim handles this one already
       (2L, "don't\tstop") // apostrophe + tab separator
     ).toDF("id", "text")
-    val rows = Bpe.withKernels(spark, Seq.empty) { (enc, cnt) =>
-      df.select($"id", enc($"text").as("t"), cnt($"text").as("n"),
+    val rows = df.select($"id", Bpe.tokens($"text", Seq.empty).as("t"),
+        Bpe.tokenCount($"text", Seq.empty).as("n"),
         graft.text.TextAnalysis.nonEmptyTokenCount($"text").as("n_ws"),
         graft.text.TextAnalysis.tokenCount($"text").as("n_raw"))
-        .orderBy("id").collect()
-    }
+      .orderBy("id").collect()
     // per-char tokens under zero merges → count == total non-ws chars,
     // and the WORD segmentation (what matters) comes from preTokens
     assert(rows(0).getLong(3) === 2L) // nonEmptyTokenCount: foo, bar

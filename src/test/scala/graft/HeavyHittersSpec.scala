@@ -73,12 +73,11 @@ class HeavyHittersSpec extends SparkSpec {
 
   test("frequentTerms: the sketch pass moves summaries, not the " +
       "vocabulary (no hash exchange before the aggregate)") {
-    HeavyHitters.register(spark)
     val docs = Seq("a b c", "b c d").toDF("text")
     val toks = docs.select(explode(split(trim(lower(col("text"))), "\\s+"))
       .as("term"))
     val p = toks
-      .agg(call_function("graft_heavy_hitters", col("term"), lit(10)))
+      .agg(HeavyHitters.terms(col("term"), 10))
       .queryExecution.executedPlan.toString
     assert(p.contains("graft_heavy_hitters"), p)
     assert(!p.contains("Exchange hashpartitioning"),

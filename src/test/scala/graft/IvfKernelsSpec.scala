@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
-import graft.functions.{IvfCellAssign, IvfCellProbe}
+import graft.functions.VectorKernels
 import graft.sim.Similarity
 
 /** The r17 IVF codegen kernels (functions/VectorKernels:
@@ -20,15 +19,6 @@ class IvfKernelsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def emb = Tables.load(spark, dir, "embeddings")
-
-  private def registered[T](name: String,
-      build: Seq[Expression] => Expression)(body: => T): T = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, build, "scala_udf")
-    try body
-    finally spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-  }
 
   // the replaced UDFs' reference math, verbatim boxed semantics
   private def dist2(v: Seq[Double], c: Array[Double]): Double = {
@@ -54,16 +44,11 @@ class IvfKernelsSpec extends SparkSpec {
     val idx = Similarity.fitIvfIndex(emb, nlist = 8)
     val centers = idx.centers
     val nprobe = 3
-    val rows =
-      registered("t_ivf_assign", as => IvfCellAssign(as(0), centers)) {
-        registered("t_ivf_probe", as => IvfCellProbe(as(0), centers, nprobe)) {
-          emb.select(Similarity.toDoubleArr(col("embedding")).as("v"))
-            .select(col("v"),
-              call_function("t_ivf_assign", col("v")).as("cell"),
-              call_function("t_ivf_probe", col("v")).as("probe"))
-            .collect()
-        }
-      }
+    val rows = emb.select(Similarity.toDoubleArr(col("embedding")).as("v"))
+      .select(col("v"),
+        VectorKernels.assignCell(col("v"), centers).as("cell"),
+        VectorKernels.probeCells(col("v"), centers, nprobe).as("probe"))
+      .collect()
     assert(rows.length > 100)
     rows.foreach { r =>
       val v = r.getSeq[Double](0)
@@ -78,13 +63,8 @@ class IvfKernelsSpec extends SparkSpec {
     // two identical centers + one far one: every vector ties 0 vs 1
     val centers = Array(Array(0.0, 0.0), Array(0.0, 0.0), Array(9.0, 9.0))
     val df = Seq(Seq(0.1, 0.2), Seq(1.0, -1.0)).toDF("v")
-    val got =
-      registered("t_tie_assign", as => IvfCellAssign(as(0), centers)) {
-        registered("t_tie_probe", as => IvfCellProbe(as(0), centers, 3)) {
-          df.select(call_function("t_tie_assign", col("v")).as("cell"),
-            call_function("t_tie_probe", col("v")).as("probe")).collect()
-        }
-      }
+    val got = df.select(VectorKernels.assignCell(col("v"), centers).as("cell"),
+      VectorKernels.probeCells(col("v"), centers, 3).as("probe")).collect()
     got.foreach { r =>
       assert(r.getInt(0) == 0, "tie must keep the first center")
       assert(r.getSeq[Int](1) == Seq(0, 1, 2), "probe tie-break by index")
@@ -97,12 +77,8 @@ class IvfKernelsSpec extends SparkSpec {
     val df = Seq(Seq(1.1, 1.9, 3.2), Seq(-0.9, 0.4, 1.8), Seq(5.0, 3.0, 4.5))
       .toDF("v")
     def run(): Seq[org.apache.spark.sql.Row] =
-      registered("t_nc_assign", as => IvfCellAssign(as(0), centers)) {
-        registered("t_nc_probe", as => IvfCellProbe(as(0), centers, 2)) {
-          df.select(call_function("t_nc_assign", col("v")),
-            call_function("t_nc_probe", col("v"))).collect().toSeq
-        }
-      }
+      df.select(VectorKernels.assignCell(col("v"), centers),
+        VectorKernels.probeCells(col("v"), centers, 2)).collect().toSeq
     val key = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.get(key, "FALLBACK")
     val withCodegen = run()
@@ -129,9 +105,8 @@ class IvfKernelsSpec extends SparkSpec {
       "first") {
     val centers = Array(Array(0.0), Array(10.0), Array(5.0))
     val df = Seq(Seq(4.0)).toDF("v")
-    val got = registered("t_all_probe", as => IvfCellProbe(as(0), centers, 99)) {
-      df.select(call_function("t_all_probe", col("v"))).head().getSeq[Int](0)
-    }
+    val got = df.select(VectorKernels.probeCells(col("v"), centers, 99))
+      .head().getSeq[Int](0)
     assert(got == Seq(2, 0, 1))
   }
 
@@ -146,19 +121,15 @@ class IvfKernelsSpec extends SparkSpec {
     // Null-total + nullable=false folds the inferred filter to true.
     val centers = Array(Array(0.0), Array(10.0))
     val df = Seq(Tuple1(Option(Seq(1.0))), Tuple1(None)).toDF("v")
-    val rows = registered("t_nt_assign", as => IvfCellAssign(as(0), centers)) {
-      registered("t_nt_probe", as => IvfCellProbe(as(0), centers, 2)) {
-        df.select(call_function("t_nt_assign", col("v")),
-          call_function("t_nt_probe", col("v"))).collect()
-      }
-    }
+    val rows = df.select(VectorKernels.assignCell(col("v"), centers),
+      VectorKernels.probeCells(col("v"), centers, 2)).collect()
     assert(rows.map(_.getInt(0)).toSeq ==
-      Seq(0, graft.functions.VectorKernels.NullCell()))
+      Seq(0, VectorKernels.NullCell()))
     assert(rows(1).getSeq[Int](1).isEmpty)
     // the sentinel contract (r18 ADVICE): NullCell is NOT a valid cell
     // — probe output only ever contains indices >= 0, so a join on
     // cell id can never match a null vector's assignment
-    assert(graft.functions.VectorKernels.NullCell() < 0)
+    assert(VectorKernels.NullCell() < 0)
     rows.foreach(r => assert(r.getSeq[Int](1).forall(_ >= 0),
       "probe emitted a negative cell id"))
     // plan pin: the executed quantized-refine plan never re-evaluates

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
+
+import graft.functions.ExactPercentile
 
 /** Pins `graft_median_absdev` (r22, guide §1.2 "fewer passes"): the
   * one-pass median + deviation percentile must be BIT-IDENTICAL to the
@@ -14,33 +18,26 @@ import org.apache.spark.sql.functions._
 class MedianAbsDevSpec extends SparkSpec {
   import spark.implicits._
 
-  private def register(): Unit = {
-    graft.functions.ExactPercentile.register(spark)
-    graft.functions.ExactPercentile.registerMedianAbsDev(spark)
-  }
+  private def v: Column = col("v").cast(DoubleType)
 
   /** Two-pass reference over `df(col "v")` at deviation percentile p. */
   private def twoPass(df: org.apache.spark.sql.DataFrame,
       p: Double): (Double, Double) = {
-    val med = df.agg(expr("graft_percentile(CAST(v AS DOUBLE), 0.5D)"))
-      .head().getDouble(0)
-    val dev = df.agg(expr(
-      s"graft_percentile(abs(CAST(v AS DOUBLE) - ${med}D), ${p}D)"))
+    val med = df.agg(ExactPercentile.column(v, lit(0.5))).head().getDouble(0)
+    val dev = df.agg(ExactPercentile.column(abs(v - lit(med)), lit(p)))
       .head().getDouble(0)
     (med, dev)
   }
 
   private def onePass(df: org.apache.spark.sql.DataFrame,
       p: Double): (Double, java.lang.Double) = {
-    val r = df.agg(expr(s"graft_median_absdev(CAST(v AS DOUBLE), ${p}D)"))
-      .head().getStruct(0)
+    val r = df.agg(ExactPercentile.medianAbsDev(v, p)).head().getStruct(0)
     (r.getDouble(0),
       if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)))
   }
 
   test("exact mode: one pass equals the two-pass median + |x-med| " +
       "percentile bit for bit (ties, negatives, nulls)") {
-    register()
     val rnd = new scala.util.Random(42)
     // ties (quantized), negatives, and nulls — the shapes the fold must
     // preserve exactly (equal |v-med| from both sides of the median must
@@ -61,7 +58,6 @@ class MedianAbsDevSpec extends SparkSpec {
 
   test("exact mode: a symmetric distribution folds counts onto the same " +
       "deviation value") {
-    register()
     // |v - 0| collides pairwise: fold must merge counts, not keep -x and x
     val df = Seq(-3.0, -2.0, -1.0, 0.0, 1.0, 2.0, 3.0).map(
       java.lang.Double.valueOf).toDF("v")
@@ -72,24 +68,20 @@ class MedianAbsDevSpec extends SparkSpec {
   }
 
   test("empty and all-null input return null") {
-    register()
     val empty = Seq.empty[java.lang.Double].toDF("v")
-    assert(empty.agg(expr("graft_median_absdev(CAST(v AS DOUBLE), 0.5D)"))
-      .head().isNullAt(0))
+    assert(empty.agg(ExactPercentile.medianAbsDev(v, 0.5)).head().isNullAt(0))
     val nulls = Seq[java.lang.Double](null, null).toDF("v")
-    assert(nulls.agg(expr("graft_median_absdev(CAST(v AS DOUBLE), 0.5D)"))
-      .head().isNullAt(0))
+    assert(nulls.agg(ExactPercentile.medianAbsDev(v, 0.5)).head().isNullAt(0))
   }
 
   test("spilled mode: dev is null and median equals the digest median of " +
       "graft_percentile — the caller's fallback contract") {
-    register()
     val df = (1 to 5000).map(i => java.lang.Double.valueOf(i.toDouble)).toDF("v")
-    val r = df.agg(expr("graft_median_absdev(CAST(v AS DOUBLE), 0.5D, 100)"))
+    val r = df.agg(ExactPercentile.medianAbsDev(v, 0.5, maxDistinct = 100))
       .head().getStruct(0)
     assert(r.isNullAt(1), "a spilled buffer must not fabricate a deviation")
     val digestMed = df.agg(
-      expr("graft_percentile(CAST(v AS DOUBLE), 0.5D, 100)"))
+      ExactPercentile.column(v, lit(0.5), maxDistinct = 100))
       .head().getDouble(0)
     assert(r.getDouble(0) == digestMed,
       "spilled median must equal pass-1's digest median")
@@ -97,7 +89,6 @@ class MedianAbsDevSpec extends SparkSpec {
 
   test("Outliers modified_zscore and isolation_forest bounds are unchanged " +
       "by the one-pass rewrite (vs hand-computed two-pass)") {
-    register()
     val rnd = new scala.util.Random(7)
     val df = (1 to 2000).map(i =>
       (i.toLong, math.rint(rnd.nextGaussian() * 1000) / 4.0)).toDF("id", "v")

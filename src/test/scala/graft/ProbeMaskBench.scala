@@ -22,7 +22,6 @@ object ProbeMaskBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.TextKernels.register(spark)
 
     def stringly(s: SparkSession): DataFrame =
       Tables.load(s, dir, "lineitem").select(
@@ -53,11 +52,11 @@ object ProbeMaskBench {
 
     // warmup both paths once
     scan(c => legacyProbe(c))
-    scan(c => call_function("graft_probe_mask", c))
+    scan(c => graft.functions.TextKernels.probeMask(c))
     for (round <- 1 to 3) {
       for ((label, probe) <- Seq(
           "udf" -> ((c: Column) => legacyProbe(c)),
-          "kernel" -> ((c: Column) => call_function("graft_probe_mask", c)))) {
+          "kernel" -> ((c: Column) => graft.functions.TextKernels.probeMask(c)))) {
         val t0 = System.nanoTime()
         scan(probe)
         println(f"[probe-bench] [$round] $label%-7s ${(System.nanoTime() - t0) / 1e9}%.3f s")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import graft.functions.ExactPercentile
 import graft.ops._
 
 /** Property-based invariants (SURVEY.md §5.2) — scalacheck generators
@@ -19,7 +20,6 @@ class PropertySpec extends SparkSpec {
     Gen.listOfN(12, Gen.chooseNum(-1e6, 1e6))
 
   test("graft_percentile equals the built-in exact percentile bit-for-bit") {
-    graft.functions.ExactPercentile.register(spark)
     val rnd = new scala.util.Random(7)
     // duplicates (coarse rounding), negatives, nulls
     val vals: Seq[java.lang.Double] = Seq.fill(4000) {
@@ -29,25 +29,24 @@ class PropertySpec extends SparkSpec {
     val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "x")
     val ps = array(Seq(0.0, 0.25, 0.5, 0.75, 0.9, 1.0).map(lit): _*)
     val row = df.agg(
-      call_function("graft_percentile", $"x".cast("double"), ps).as("g"),
+      ExactPercentile.column($"x".cast("double"), ps).as("g"),
       call_function("percentile", $"x".cast("double"), ps).as("b")).head()
     assert(row.getSeq[Double](0) == row.getSeq[Double](1))
     // scalar form and the empty (all-null) case
     val empty = df.where($"x".isNull)
     val r2 = empty.agg(
-      call_function("graft_percentile", $"x".cast("double"), lit(0.5)).as("g"),
+      ExactPercentile.column($"x".cast("double"), lit(0.5)).as("g"),
       call_function("percentile", $"x".cast("double"), lit(0.5)).as("b")).head()
     assert(r2.isNullAt(0) && r2.isNullAt(1))
   }
 
   test("graft_percentile matches the built-in under groupBy too") {
-    graft.functions.ExactPercentile.register(spark)
     val rnd = new scala.util.Random(13)
     val df = Seq.tabulate(900) { i =>
       (i % 5, math.floor(rnd.nextGaussian() * 100) / 4)
     }.toDF("g", "x")
     val rows = df.groupBy("g").agg(
-      call_function("graft_percentile", $"x".cast("double"), lit(0.25)).as("gp"),
+      ExactPercentile.column($"x".cast("double"), lit(0.25)).as("gp"),
       call_function("percentile", $"x".cast("double"), lit(0.25)).as("bp"))
       .collect()
     assert(rows.length == 5)

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.dedup.NearDup
-import graft.text.QualityFilters
+import graft.functions.TextKernels
+import graft.sim.Similarity
+import graft.text.{Bpe, QualityFilters}
 
 /** The codegen text kernels (functions/TextKernels) against reference
   * implementations: bit/byte-identical results on real corpus text and
@@ -50,7 +52,6 @@ class TextKernelsSpec extends SparkSpec {
 
   test("graft_shingles matches the UDF-era kernel on corpus text, " +
       "astral chars, shorts, and nulls") {
-    graft.functions.TextKernels.register(spark)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).limit(200)
       .union(Seq(
@@ -75,7 +76,6 @@ class TextKernelsSpec extends SparkSpec {
 
   test("graft_simhash_vote matches the UDF-era fold on random hash " +
       "arrays and both bit widths") {
-    graft.functions.TextKernels.register(spark)
     val rnd = new scala.util.Random(15)
     val rows = (0 until 300).map { i =>
       (i.toLong, Seq.fill(rnd.nextInt(40))(rnd.nextLong()))
@@ -83,7 +83,7 @@ class TextKernelsSpec extends SparkSpec {
     for (bits <- Seq(56, 64)) {
       val got = rows.toDF("id", "hs")
         .select(col("id"), col("hs"),
-          call_function("graft_simhash_vote", col("hs"), lit(bits)).as("sig"))
+          TextKernels.simhashVote(col("hs"), bits).as("sig"))
         .collect()
       got.foreach { r =>
         assert(r.getLong(2) == refVote(r.getSeq[Long](1), bits),
@@ -92,23 +92,22 @@ class TextKernelsSpec extends SparkSpec {
     }
     // null array -> null signature (the UDF contract)
     val n = Seq((1L, null.asInstanceOf[Seq[Long]])).toDF("id", "hs")
-      .select(call_function("graft_simhash_vote", col("hs"), lit(64)))
+      .select(TextKernels.simhashVote(col("hs"), 64))
       .head()
     assert(n.isNullAt(0))
   }
 
   test("graft_repetition / graft_rep_keep equal the shared Scala kernel " +
       "and keep the UDF-era null contract") {
-    graft.functions.TextKernels.register(spark)
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).limit(200)
       .union(Seq((900001L, null.asInstanceOf[String]),
         (900002L, ""), (900003L, "spam spam spam spam spam"))
         .toDF("doc_id", "text"))
     val got = docs.select(col("doc_id"), col("text"),
-        call_function("graft_repetition", col("text")).as("r"),
-        call_function("graft_rep_keep", col("text"),
-          lit(0.30), lit(0.18), lit(0.16), lit(0.15)).as("keep"))
+        TextKernels.repetition(col("text")).as("r"),
+        TextKernels.repetitionKeep(col("text"),
+          0.30, 0.18, 0.16, 0.15).as("keep"))
       .collect()
     got.foreach { r =>
       val t = if (r.isNullAt(1)) null else r.getString(1)
@@ -151,7 +150,6 @@ class TextKernelsSpec extends SparkSpec {
 
   test("graft_probe_mask equals the UDF-era String kernel on adversarial " +
       "inputs and the byte fast path cannot diverge from it (r16)") {
-    graft.functions.TextKernels.register(spark)
     val cases: Seq[String] = Seq(
       null, "", " ", "   ", "123", "+123", "-123", "12.5", ".5", "5.",
       "+.5", "-5.", ".", "+", "-", "+-1", "1e5", "1E5", "1.5e-3", ".5e2",
@@ -181,7 +179,7 @@ class TextKernelsSpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(cases.map(Row(_)), 2),
       StructType(Seq(StructField("s", StringType, nullable = true))))
-    val got = df.select(call_function("graft_probe_mask", col("s")))
+    val got = df.select(TextKernels.probeMask(col("s")))
       .collect().map(_.getLong(0)).toSeq
     assert(got == cases.map(maskOf))
   }
@@ -208,11 +206,6 @@ class TextKernelsSpec extends SparkSpec {
     val bf = org.apache.spark.util.sketch.BloomFilter.create(1000, 0.01)
     (0L until 500L).map(_ * 7919L).foreach(bf.putLong)
     val bc = spark.sparkContext.broadcast(bf)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_test",
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.BloomMightContainLong(args(0), bc),
-      "scala_udf")
     val probes = ((0L until 500L).map(_ * 7919L) ++
       (0L until 2000L).map(_ * 104729L + 13L)).distinct
     // RDD-backed, not a local Seq: ConvertToLocalRelation would fold a
@@ -222,12 +215,12 @@ class TextKernelsSpec extends SparkSpec {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("h",
           org.apache.spark.sql.types.LongType, nullable = false))))
-    val plan = df.select(call_function("graft_bloom_test", col("h")))
+    val plan = df.select(TextKernels.bloomContains(col("h"), bc))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan)
     assert("""\*\(\d+\) Project""".r.findFirstIn(plan).nonEmpty, plan)
     val got = df.select(col("h"),
-        call_function("graft_bloom_test", col("h")).as("hit"))
+        TextKernels.bloomContains(col("h"), bc).as("hit"))
       .collect()
     got.foreach { r =>
       assert(r.getBoolean(1) == bf.mightContainLong(r.getLong(0)),
@@ -237,28 +230,70 @@ class TextKernelsSpec extends SparkSpec {
     val inserted = (0L until 500L).map(_ * 7919L).toSet
     got.filter(r => inserted(r.getLong(0))).foreach(r =>
       assert(r.getBoolean(1)))
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_test"))
   }
 
   test("interpreted eval path (codegen fallback) agrees with codegen") {
     val key = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.get(key, "FALLBACK")
     try {
-      graft.functions.TextKernels.register(spark)
       val df = Seq((1L, "the cat sat on the mat the cat sat"))
         .toDF("id", "text")
       def run() = df.select(
         NearDup.shingles(col("text")).as("sh"),
         NearDup.simhash(col("text")).as("sig"),
-        call_function("graft_repetition", col("text")).as("r"),
-        call_function("graft_probe_mask", col("text")).as("pm"),
-        call_function("graft_rep_keep", col("text"),
-          lit(0.30), lit(0.18), lit(0.16), lit(0.15)).as("keep")).head()
+        TextKernels.repetition(col("text")).as("r"),
+        TextKernels.probeMask(col("text")).as("pm"),
+        TextKernels.repetitionKeep(col("text"),
+          0.30, 0.18, 0.16, 0.15).as("keep")).head()
       val withCodegen = run()
       spark.conf.set(key, "NO_CODEGEN")
       val interpreted = run()
       assert(withCodegen == interpreted)
     } finally spark.conf.set(key, prev)
+  }
+
+  test("kernel columns built while one session is active resolve on " +
+      "another session's frame, with the same rows") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    val other = spark.newSession()
+    SparkSession.setActiveSession(spark)
+    val data = Seq((1L, "the cat sat on the mat the cat sat"),
+      (2L, "a quick brown fox jumps over the lazy dog"),
+      (3L, null.asInstanceOf[String]))
+    def run(s: SparkSession): (Seq[Row], Row) = {
+      val df = s.createDataFrame(data).toDF("id", "text")
+      val rows = Bpe.withTokenCount(df, "text", "n_bpe", Bpe.DemoMerges)
+        .select(col("id"), NearDup.shingles(col("text")).as("sh"),
+          NearDup.simhash(col("text")).as("sig"), col("n_bpe"))
+        .orderBy("id").collect().toSeq
+      (rows, df.agg(graft.util.Exprs.pctl(col("id"), 0.5)).head())
+    }
+    val onOther = run(other)
+    assert(SparkSession.getActiveSession.contains(spark))
+    assert(onOther == run(spark))
+  }
+
+  test("the kernel-backed operators leave no graft_* function in the " +
+      "session catalog") {
+    val before = graft.util.CacheHygiene.snapshot(spark)
+    try {
+      FitJobsSpec.withDirtyCsv { path =>
+        val (out, report) =
+          Pipeline.run(graft.sources.Csv.read(spark, path), FitJobsSpec.nineOps)
+        assert(report.errors.isEmpty, report.errors)
+        out.count()
+      }
+      val docs = Tables.load(spark, dir, "documents")
+        .select(col("doc_id"), col("text")).limit(200)
+      QualityFilters.gopherRepetitionFilter(docs, "text").count()
+      NearDup.minhashPairs(docs, "text", "doc_id").count()
+      Bpe.withTokenCount(docs, "text", "n_bpe", Bpe.DemoMerges).count()
+      val e = Tables.load(spark, dir, "embeddings")
+      Similarity.ivfTopK(e, e.where(col("vec_id") < 5), 10,
+        nlist = 8, nprobe = 3).count()
+    } finally graft.util.CacheHygiene.releaseNew(spark, before)
+    val graftFns = spark.catalog.listFunctions().collect()
+      .map(_.name).filter(_.startsWith("graft_"))
+    assert(graftFns.isEmpty, graftFns.mkString(", "))
   }
 }

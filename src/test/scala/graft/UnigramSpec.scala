@@ -16,7 +16,7 @@ class UnigramSpec extends SparkSpec {
   import spark.implicits._
 
   private def segment(pt: UnigramKernels.PieceTable, text: String) = {
-    val arr = UnigramKernels.encodeKernel(UTF8String.fromString(text), pt)
+    val arr = pt.encode(UTF8String.fromString(text))
     (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
   }
 
@@ -30,8 +30,7 @@ class UnigramSpec extends SparkSpec {
     assert(segment(ug, "abcd") === Seq("ab", "cd"))
     val wp = new graft.functions.WordPieceKernels.PieceTable(
       costed.map(_._1))
-    val wpArr = graft.functions.WordPieceKernels.encodeKernel(
-      UTF8String.fromString("abcd"), wp)
+    val wpArr = wp.encode(UTF8String.fromString("abcd"))
     assert((0 until wpArr.numElements())
       .map(i => wpArr.getUTF8String(i).toString) === Seq("abcd"))
   }
@@ -46,8 +45,7 @@ class UnigramSpec extends SparkSpec {
       Bpe.Merge(2, "ab", "c"))
     val mt = new graft.functions.BpeKernels.MergeTable(
       merges.map(m => (m.left, m.right)))
-    val bpeArr = graft.functions.BpeKernels.encodeKernel(
-      UTF8String.fromString("abc"), mt)
+    val bpeArr = mt.encode(UTF8String.fromString("abc"))
     assert((0 until bpeArr.numElements())
       .map(i => bpeArr.getUTF8String(i).toString) === Seq("a", "bc"))
     val ug = new UnigramKernels.PieceTable(Unigram.pieceCosts(merges))
@@ -59,8 +57,7 @@ class UnigramSpec extends SparkSpec {
       "the oracle replays it (coalesce after the DP)") {
     val pt = new UnigramKernels.PieceTable(Seq("a" -> 10L, "ab" -> 5L))
     assert(segment(pt, "abx ab") === Seq(UnigramKernels.Unk, "ab"))
-    assert(UnigramKernels.countKernel(
-      UTF8String.fromString("abx ab"), pt) === 2L)
+    assert(pt.count(UTF8String.fromString("abx ab")) === 2L)
   }
 
   test("tie-break: equal totals prefer the LONGER last piece at every " +
@@ -162,10 +159,9 @@ class UnigramSpec extends SparkSpec {
       (3L, null.asInstanceOf[String]), (4L, "Scan SCAN scan"))
       .toDF("id", "text")
     val costed = Unigram.pieceCosts(Bpe.DemoMerges)
-    val rows = Unigram.withKernels(spark, costed) { (enc, cnt) =>
-      df.select($"id", enc($"text").as("t"), cnt($"text").as("n"))
-        .orderBy("id").collect()
-    }
+    val rows = df.select($"id", Unigram.pieces($"text", costed).as("t"),
+        Unigram.pieceCount($"text", costed).as("n"))
+      .orderBy("id").collect()
     assert(rows(1).getSeq[String](1) === Seq.empty)
     assert(rows(1).getLong(2) === 0L)
     assert(rows(3).isNullAt(1) && rows(3).isNullAt(2))
@@ -181,9 +177,8 @@ class UnigramSpec extends SparkSpec {
       val df = Seq((1L, "the query vector joins the sorted window"))
         .toDF("id", "text")
       val costed = Unigram.pieceCosts(Bpe.DemoMerges)
-      def run() = Unigram.withKernels(spark, costed) { (enc, cnt) =>
-        df.select(enc($"text"), cnt($"text")).head()
-      }
+      def run() = df.select(Unigram.pieces($"text", costed),
+        Unigram.pieceCount($"text", costed)).head()
       val withCodegen = run()
       spark.conf.set(key, "NO_CODEGEN")
       val interpreted = run()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorKernels
 import graft.sim.Similarity
 
 /** The codegen vector kernels (functions/VectorKernels) against their
@@ -16,16 +17,15 @@ class VectorKernelsSpec extends SparkSpec {
 
   test("graft_dot / graft_cosine are bit-identical to the UDF kernels " +
       "on the embeddings corpus") {
-    graft.functions.VectorKernels.register(spark)
     val e = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), Similarity.toDoubleArr(col("embedding")).as("v"))
     val pairs = e.as("a").join(e.as("b"),
       col("b.vec_id") === col("a.vec_id") + 7)
       .select(col("a.v").as("va"), col("b.v").as("vb"))
     val rows = pairs.select(
-      call_function("graft_dot", col("va"), col("vb")).as("dk"),
+      VectorKernels.dot(col("va"), col("vb")).as("dk"),
       Similarity.dotUdf(col("va"), col("vb")).as("du"),
-      call_function("graft_cosine", col("va"), col("vb")).as("ck"),
+      VectorKernels.cosine(col("va"), col("vb")).as("ck"),
       Similarity.cosineUdf(col("va"), col("vb")).as("cu")).collect()
     assert(rows.nonEmpty)
     // exact double equality — same left-to-right fold, not approximate
@@ -34,15 +34,14 @@ class VectorKernelsSpec extends SparkSpec {
   }
 
   test("nulls: null array -> null, zero norm -> null cosine, 0.0 dot") {
-    graft.functions.VectorKernels.register(spark)
     val df = Seq(
       (1L, Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0))),
       (2L, None, Some(Seq(1.0, 1.0))),
       (3L, Some(Seq(0.0, 0.0)), Some(Seq(1.0, 1.0))))
       .toDF("id", "a", "b")
     val got = df.select(col("id"),
-      call_function("graft_dot", col("a"), col("b")).as("d"),
-      call_function("graft_cosine", col("a"), col("b")).as("c"))
+      VectorKernels.dot(col("a"), col("b")).as("d"),
+      VectorKernels.cosine(col("a"), col("b")).as("c"))
       .orderBy("id").collect()
     assert(got(0).getDouble(1) == 11.0 && !got(0).isNullAt(2))
     assert(got(1).isNullAt(1) && got(1).isNullAt(2))
@@ -52,7 +51,6 @@ class VectorKernelsSpec extends SparkSpec {
 
   test("graft_vec_ok matches the UDF gate: null array and null element " +
       "-> false, clean -> true, never null itself") {
-    graft.functions.VectorKernels.register(spark)
     val df = Seq(
       (1L, Some(Seq(Some(1.0), Some(2.0)))),
       (2L, None),
@@ -60,20 +58,19 @@ class VectorKernelsSpec extends SparkSpec {
       (4L, Some(Seq.empty[Option[Double]])))
       .toDF("id", "v")
     val got = df.select(col("id"),
-        call_function("graft_vec_ok", col("v")).as("ok"))
+        VectorKernels.vecOk(col("v")).as("ok"))
       .orderBy("id").collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(got == Map(1L -> true, 2L -> false, 3L -> false, 4L -> true))
-    assert(!df.select(call_function("graft_vec_ok", col("v")))
+    assert(!df.select(VectorKernels.vecOk(col("v")))
       .schema.head.nullable)
   }
 
   test("graft_signature is bit-identical to signatureUdf on the corpus") {
-    graft.functions.VectorKernels.register(spark)
     val e = Tables.load(spark, dir, "embeddings")
       .select(Similarity.toDoubleArr(col("embedding")).as("v"))
     val rows = e.select(
-      call_function("graft_signature", col("v"), lit(64), lit(32)).as("k"),
+      VectorKernels.signature(col("v"), 64, 32).as("k"),
       Similarity.signatureUdf(64, 32)(col("v")).as("u")).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getLong(0) == r.getLong(1)), "signature drift")
@@ -81,7 +78,6 @@ class VectorKernelsSpec extends SparkSpec {
 
   test("graft_sig_agree / graft_sorted_jaccard match the NearDup UDF " +
       "kernels on random long arrays") {
-    graft.functions.VectorKernels.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 300).map { _ =>
       val a = Array.fill(64)(rnd.nextLong() % 32)
@@ -95,12 +91,10 @@ class VectorKernelsSpec extends SparkSpec {
     }
     val df = rows.toDF("sa", "sb", "ga", "gb")
     val got = df.select(
-      call_function("graft_sig_agree", col("sa"), col("sb"),
-        lit(64), lit(0.55)).as("agreeK"),
+      VectorKernels.sigAgree(col("sa"), col("sb"), 64, 0.55).as("agreeK"),
       graft.dedup.NearDup.prefilterUdf(64, 0.7)(col("sa"), col("sb"))
         .as("agreeU"),
-      call_function("graft_sorted_jaccard", col("ga"), col("gb"),
-        lit(0.3)).as("jacK"),
+      VectorKernels.sortedJaccard(col("ga"), col("gb"), 0.3).as("jacK"),
       graft.dedup.NearDup.exactJaccardUdf(0.3)(col("ga"), col("gb"))
         .as("jacU")).collect()
     assert(got.forall(r => r.getBoolean(0) == r.getBoolean(1)),
@@ -113,8 +107,8 @@ class VectorKernelsSpec extends SparkSpec {
     // loud invariant: a short signature throws, exactly like the UDF
     val short = Seq((Seq(1L, 2L), Seq(1L, 2L))).toDF("sa", "sb")
     val e = intercept[Exception] {
-      short.select(call_function("graft_sig_agree", col("sa"), col("sb"),
-        lit(64), lit(0.55))).collect()
+      short.select(VectorKernels.sigAgree(col("sa"), col("sb"), 64, 0.55))
+        .collect()
     }
     assert(e.getMessage.contains("shorter than numHashes") ||
       Option(e.getCause).exists(_.getMessage.contains("shorter than numHashes")),
@@ -122,12 +116,11 @@ class VectorKernelsSpec extends SparkSpec {
   }
 
   test("the kernels run inside WholeStageCodegen with no ScalaUDF node") {
-    graft.functions.VectorKernels.register(spark)
     val e = Tables.load(spark, dir, "embeddings")
       .select(Similarity.toDoubleArr(col("embedding")).as("v"))
     val plan = e.select(
-        call_function("graft_dot", col("v"), col("v")).as("d"),
-        call_function("graft_cosine", col("v"), col("v")).as("c"))
+        VectorKernels.dot(col("v"), col("v")).as("d"),
+        VectorKernels.cosine(col("v"), col("v")).as("c"))
       .queryExecution.executedPlan.toString
     // the `*(n)` prefix is WholeStageCodegen's compact notation — the
     // projection evaluating the kernels must carry it
@@ -142,15 +135,14 @@ class VectorKernelsSpec extends SparkSpec {
     val key = "spark.sql.codegen.factoryMode"
     val prev = spark.conf.get(key, "FALLBACK")
     try {
-      graft.functions.VectorKernels.register(spark)
       val df = Seq((Seq(1.5, -2.0, 3.0), Seq(0.5, 4.0, -1.0))).toDF("a", "b")
       val withCodegen = df.select(
-        call_function("graft_dot", col("a"), col("b")),
-        call_function("graft_cosine", col("a"), col("b"))).head()
+        VectorKernels.dot(col("a"), col("b")),
+        VectorKernels.cosine(col("a"), col("b"))).head()
       spark.conf.set(key, "NO_CODEGEN")
       val interpreted = df.select(
-        call_function("graft_dot", col("a"), col("b")),
-        call_function("graft_cosine", col("a"), col("b"))).head()
+        VectorKernels.dot(col("a"), col("b")),
+        VectorKernels.cosine(col("a"), col("b"))).head()
       assert(withCodegen == interpreted)
     } finally spark.conf.set(key, prev)
   }

@@ -16,7 +16,7 @@ class WordPieceSpec extends SparkSpec {
   import spark.implicits._
 
   private def segment(pt: WordPieceKernels.PieceTable, text: String) = {
-    val arr = WordPieceKernels.encodeKernel(UTF8String.fromString(text), pt)
+    val arr = pt.encode(UTF8String.fromString(text))
     (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
   }
 
@@ -35,8 +35,7 @@ class WordPieceSpec extends SparkSpec {
     // Greedy over pieces {ab, bc, a, b, c}: longest prefix at pos 0 is
     // "ab" -> [ab, c]. Same inventory, different segmentation.
     val mt = new graft.functions.BpeKernels.MergeTable(Seq(("b", "c")))
-    val bpeArr = graft.functions.BpeKernels.encodeKernel(
-      UTF8String.fromString("abc"), mt)
+    val bpeArr = mt.encode(UTF8String.fromString("abc"))
     val bpe = (0 until bpeArr.numElements())
       .map(i => bpeArr.getUTF8String(i).toString)
     val pt = new WordPieceKernels.PieceTable(Seq("ab", "bc", "a", "b", "c"))
@@ -48,8 +47,7 @@ class WordPieceSpec extends SparkSpec {
       "token (the BERT rule), count included") {
     val pt = new WordPieceKernels.PieceTable(Seq("a", "ab"))
     assert(segment(pt, "abx ab") === Seq(WordPieceKernels.Unk, "ab"))
-    assert(WordPieceKernels.countKernel(
-      UTF8String.fromString("abx ab"), pt) === 2L)
+    assert(pt.count(UTF8String.fromString("abx ab")) === 2L)
   }
 
   test("null/blank contract + count == size, via the registered kernels") {
@@ -57,10 +55,9 @@ class WordPieceSpec extends SparkSpec {
       (3L, null.asInstanceOf[String]), (4L, "Scan SCAN scan"))
       .toDF("id", "text")
     val vocab = WordPiece.vocabFromMerges(Bpe.DemoMerges)
-    val rows = WordPiece.withKernels(spark, vocab) { (enc, cnt) =>
-      df.select($"id", enc($"text").as("t"), cnt($"text").as("n"))
-        .orderBy("id").collect()
-    }
+    val rows = df.select($"id", WordPiece.pieces($"text", vocab).as("t"),
+        WordPiece.pieceCount($"text", vocab).as("n"))
+      .orderBy("id").collect()
     assert(rows(1).getSeq[String](1) === Seq.empty)
     assert(rows(1).getLong(2) === 0L)
     assert(rows(3).isNullAt(1) && rows(3).isNullAt(2))
@@ -77,9 +74,8 @@ class WordPieceSpec extends SparkSpec {
       val df = Seq((1L, "the query vector joins the sorted window"))
         .toDF("id", "text")
       val vocab = WordPiece.vocabFromMerges(Bpe.DemoMerges)
-      def run() = WordPiece.withKernels(spark, vocab) { (enc, cnt) =>
-        df.select(enc($"text"), cnt($"text")).head()
-      }
+      def run() = df.select(WordPiece.pieces($"text", vocab),
+        WordPiece.pieceCount($"text", vocab)).head()
       val withCodegen = run()
       spark.conf.set(key, "NO_CODEGEN")
       val interpreted = run()

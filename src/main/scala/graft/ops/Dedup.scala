@@ -26,11 +26,14 @@ object Dedup {
     * streaming `dropDuplicates` accumulates key state without bound).
     * `keys` is the duplicate identity — e.g. a content fingerprint
     * column ([[graft.text.TextAnalysis.fingerprint]]) for near-exact
-    * document dedup at ingest time. */
+    * document dedup at ingest time. Calls
+    * [[graft.streaming.Checkpoints.install]] for the stream's session. */
   def streamingExact(stream: DataFrame, tsCol: String, watermark: String,
-      keys: Seq[String]): DataFrame =
+      keys: Seq[String]): DataFrame = {
+    graft.streaming.Checkpoints.install(stream.sparkSession)
     stream.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
+  }
 }
 
 /** Exact duplicate removal (reference U1,

@@ -10,7 +10,10 @@ import org.apache.spark.sql.types._
   * The batch forms here are SQL-expressible (oracle-able); the same
   * transforms run under Structured Streaming via [[streamingTumbling]]
   * (groupBy window + watermark) — identical logical plan, incremental
-  * execution.
+  * execution. Every streaming builder calls [[Checkpoints.install]], so
+  * the session's queries checkpoint through
+  * [[LocalCheckpointFileManager]] unless the session names another
+  * manager.
   */
 object Events {
 
@@ -75,24 +78,28 @@ object Events {
     * DataFrame (readStream / MemoryStream); complete/update/append mode is
     * the caller's sink choice. */
   def streamingTumbling(stream: DataFrame, width: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
+      watermark: String = "2 hours"): DataFrame = {
+    Checkpoints.install(stream.sparkSession)
     stream.withWatermark("ts", watermark)
       .groupBy(window(col("ts"), width).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), avg(col("value")).as("avg_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("avg_value"))
+  }
 
   /** Streaming twin of [[hoppingStats]]: the same width/slide windowed
     * aggregation under a watermark — the window() Expand works unchanged
     * in micro-batch execution (each event updates width/slide window
     * states; late data inside the watermark merges into both). */
   def streamingHopping(stream: DataFrame, width: String = "1 hour",
-      slide: String = "30 minutes", watermark: String = "2 hours"): DataFrame =
+      slide: String = "30 minutes", watermark: String = "2 hours"): DataFrame = {
+    Checkpoints.install(stream.sparkSession)
     stream.withWatermark("ts", watermark)
       .groupBy(window(col("ts"), width, slide).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), avg(col("value")).as("avg_value"))
       .select(col("w.start").cast(LongType).as("window_start_sec"),
         col("event_type"), col("n_events"), col("avg_value"))
+  }
 
   final case class SessionState(start: Long, last: Long, n: Long)
   final case class SessionOut(user_id: Long, n_events: Long,
@@ -106,6 +113,7 @@ object Events {
       : org.apache.spark.sql.Dataset[SessionOut] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = stream.sparkSession
+    Checkpoints.install(spark)
     import spark.implicits._
     def emit(uid: Long, st: SessionState): SessionOut =
       SessionOut(uid, st.n, st.start / 1e6, (st.last - st.start) / 1e6)

@@ -43,21 +43,24 @@ object StreamRuns {
 
   private def deleteRec(p: Path): Unit = {
     if (Files.exists(p)) {
-      if (Files.isDirectory(p))
-        Files.list(p).forEach(deleteRec(_))
+      if (Files.isDirectory(p)) {
+        val s = Files.list(p)
+        try s.forEach(deleteRec(_)) finally s.close()
+      }
       Files.deleteIfExists(p)
     }
   }
 
-  /** Checkpoint scratch for the bounded drain-and-stop runs, on the
-    * fastest local volume available (r22, r21 verdict #2: the streaming
-    * family's remaining fixed cost is per-micro-batch state-store commits
-    * plus offset/commit-log writes — dozens of tiny fsync'd files per
-    * run). These runs end in a MEMORY sink and the checkpoint is
-    * discarded with the query, so durability buys nothing: /dev/shm when
-    * present, else the JVM temp dir. A production always-on stream keeps
-    * its checkpoint on durable storage — that trade-off simply does not
-    * apply to a checkpoint whose lifetime is one bounded run. */
+  /** Checkpoint scratch for the bounded drain-and-stop runs: /dev/shm
+    * when present, else the JVM temp dir. These runs end in a MEMORY sink
+    * and the checkpoint is discarded with the query, so durability buys
+    * nothing; a production always-on stream keeps its checkpoint on
+    * durable storage. The volume was never the main cost: each
+    * micro-batch's checkpoint writes started a `chmod` process per file
+    * and directory and a `readlink` per rename whenever Hadoop's native
+    * library (`libhadoop`) is not loaded. The streaming builders
+    * install [[LocalCheckpointFileManager]] ([[Checkpoints.install]]),
+    * which writes the same files without starting a process. */
   private def checkpointScratch(kind: String, dir: String): Path = {
     val base =
       if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
@@ -74,8 +77,10 @@ object StreamRuns {
     * modification-time ordering is deterministic. */
   private def moveOnlyPart(writeDir: Path, destDir: Path, name: String,
       mtimeMs: Long): Unit = {
-    val part = Files.list(writeDir).filter(f =>
-        f.getFileName.toString.startsWith("part-")).findFirst().get()
+    val s = Files.list(writeDir)
+    val part =
+      try s.filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
+      finally s.close()
     val dest = destDir.resolve(name)
     Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
     Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
@@ -137,9 +142,11 @@ object StreamRuns {
     Events.load(spark, dir)
       .select("ts", "event_type", "value")
       .repartition(2).write.parquet(in.toString)
-    val parts = Files.list(in).filter(
-        _.getFileName.toString.startsWith("part-"))
-      .sorted().toArray.map(_.asInstanceOf[Path])
+    val s = Files.list(in)
+    val parts =
+      try s.filter(_.getFileName.toString.startsWith("part-"))
+        .sorted().toArray.map(_.asInstanceOf[Path])
+      finally s.close()
     val t0 = System.currentTimeMillis()
     parts.zipWithIndex.foreach { case (p, i) =>
       Files.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 10000L))

@@ -122,4 +122,21 @@ class StreamRunsSpec extends SparkSpec {
       .orderBy("user_id", "event_type").collect().toSeq
     assert(want.nonEmpty && got == want)
   }
+
+  test("the AvailableNow runs leave no directory handle open") {
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(java.nio.file.Files.isDirectory(fds), "/proc/self/fd is missing")
+    def openFds(): Long = {
+      val s = java.nio.file.Files.list(fds)
+      try s.count() finally s.close()
+    }
+    def pair(): Unit = {
+      StreamRuns.sessionizeAvailableNow(spark, dir).collect()
+      StreamRuns.dedupExactAvailableNow(spark, dir).collect()
+    }
+    pair() // first run opens the jars, pools and local dirs it keeps
+    val before = openFds()
+    pair()
+    assert(openFds() == before)
+  }
 }

@@ -641,12 +641,11 @@ object Bench {
       val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       // SPARK_GRAFT_SKIP attribution: a consumer diffing this file
       // against a full run must see which rows were intentionally absent.
-      // Mirrors selectedQueries' precedence (r17 ADVICE): when ONLY is
-      // set SKIP is ignored there, so recording it here would label rows
-      // as skipped that were actually excluded by ONLY.
-      val sk = (if (sys.env.contains("SPARK_GRAFT_ONLY")) Seq.empty
-        else sys.env.get("SPARK_GRAFT_SKIP").toSeq)
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+      // Read from the same selection selectedQueries used: when ONLY is
+      // set SKIP is ignored, so rows excluded by ONLY are not labelled
+      // as skipped.
+      val sk = SparkEntry.selection()
+        .filter(_.variable == "SPARK_GRAFT_SKIP").toSeq.flatMap(_.names)
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""retimed":$rt,"repass":$rp,"repass_why":"$repassWhy",""" +
@@ -665,7 +664,10 @@ object Bench {
         // non-lz4 files as baselines, so a zstd run's faster spill times
         // can never min-merge into the lz4 cold history
         s""""codec":"$codec",""" +
-        s""""persistent_rdds_end":$rddsLeft,"cpus":"$cpus","sf":"$sfDir"}"""
+        s""""persistent_rdds_end":$rddsLeft,"cpus":"$cpus",""" +
+        // driver heap ceiling (-Xmx): history from differently sized
+        // drivers must not be compared as one host shape
+        s""""xmx_mb":${Runtime.getRuntime.maxMemory >> 20},"sf":"$sfDir"}"""
     }
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fileJson)
     catch { case e: Throwable =>

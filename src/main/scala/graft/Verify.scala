@@ -1,9 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import graft.streaming.StreamRuns.deleteRec
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Build one query and write it as parquet under `outDir/name`. The
+    * directory is deleted before the build and again if the build or
+    * write throws, so a failing query leaves no directory, never an
+    * earlier run's output for the oracle compare to check. Returns
+    * whether the dump succeeded. */
+  private[graft] def dumpQuery(spark: SparkSession, name: String,
+      build: (SparkSession, String) => DataFrame, sfDir: String,
+      outDir: String): Boolean = {
+    val dir = Paths.get(outDir, name)
+    deleteRec(dir)
+    try {
+      build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(dir.toString)
+      true
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      deleteRec(dir)
+      false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     SparkEntry.sweepDeadScratch(sfDir)
@@ -21,11 +43,7 @@ object Verify {
     // a single query while iterating.
     SparkEntry.selectedQueries().foreach { case (name, fn) =>
       val before = graft.util.CacheHygiene.snapshot(spark)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      dumpQuery(spark, name, fn, sfDir, outDir)
       // pair operators return their result cached (caller-unpersists
       // contract) — release per query so a 68-query dump stays flat
       graft.util.CacheHygiene.releaseNew(spark, before)

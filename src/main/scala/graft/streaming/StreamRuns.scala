@@ -41,7 +41,8 @@ object StreamRuns {
     p            // to a parquet write, which requires it absent
   }
 
-  private def deleteRec(p: Path): Unit = {
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  private[graft] def deleteRec(p: Path): Unit = {
     if (Files.exists(p)) {
       if (Files.isDirectory(p)) {
         val s = Files.list(p)

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Regenerating after an INTENDED semantic change:
   *   sbt 'testOnly graft.GoldenSpec'
-  * prints the new hash in the failure message; paste it below once the
-  * output diff is confirmed intended.
+  * prints the new hash in the failure message; paste it into
+  * [[GoldenSpec.pinned]] once the output diff is confirmed intended.
   */
 class GoldenSpec extends SparkSpec {
 
@@ -38,13 +38,18 @@ class GoldenSpec extends SparkSpec {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  test("q_typofix_spell sf0.001 output matches the pinned golden hash") {
-    val h = goldenHash("q_typofix_spell")
-    assert(h == "323cf5ef38c58d5fe78c10627418d096", s"q_typofix_spell drifted; new hash = $h")
+  GoldenSpec.pinned.foreach { case (name, pinnedHash) =>
+    test(s"$name sf0.001 output matches the pinned golden hash") {
+      val h = goldenHash(name)
+      assert(h == pinnedHash, s"$name drifted; new hash = $h")
+    }
   }
+}
 
-  test("q_typofix_spell_scale sf0.001 output matches the pinned golden hash") {
-    val h = goldenHash("q_typofix_spell_scale")
-    assert(h == "323cf5ef38c58d5fe78c10627418d096", s"q_typofix_spell_scale drifted; new hash = $h")
-  }
+object GoldenSpec {
+  /** Pinned sf0.001 output hash per query; every query registered with
+    * `NoOracle` must appear here (QueryRegistrySpec checks). */
+  val pinned: Map[String, String] = Map(
+    "q_typofix_spell" -> "323cf5ef38c58d5fe78c10627418d096",
+    "q_typofix_spell_scale" -> "323cf5ef38c58d5fe78c10627418d096")
 }

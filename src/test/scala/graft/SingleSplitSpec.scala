@@ -35,6 +35,9 @@ class SingleSplitSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // callbacks arrive asynchronously: drain those of earlier actions
+    // (the header read) so they cannot land in this listener
+    JobCount.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     // JobCount drains the listener bus, so every callback has landed
     try (JobCount(spark.sparkContext)(body)._1, plans.asScala.toSeq)

@@ -14,4 +14,7 @@ object JobCount {
       (out, sc.statusTracker.getJobIdsForGroup(group).length)
     } finally sc.clearJobGroup()
   }
+
+  /** Wait until every event already posted has reached its listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -22,10 +22,7 @@ final case class PipelineConfig(
     normalize: Option[Normalize] = None,
     /** Run the inter-stage sanitizer (reference P2). On by default to match
       * reference semantics; turn off for pure op composition. */
-    sanitize: Boolean = true,
-    /** Collect per-stage row counts into the report. A count() barrier per
-      * stage is fine at test scale and prohibitive at 100 TB — default off. */
-    collectMetrics: Boolean = false) {
+    sanitize: Boolean = true) {
 
   /** Enabled ops in the reference's FIXED execution order
     * (`pipeline.py:142-152`). */
@@ -35,8 +32,14 @@ final case class PipelineConfig(
     outliers, typoFix, encode, normalize).flatten
 }
 
+/** One op's outcome. `metrics` is always empty: a per-stage metrics
+  * envelope costs a count() barrier per stage, so the pipeline never
+  * collects one (call [[graft.ops.OpResult.metrics]] on a single op
+  * instead). The field stays for callers that build reports with all five
+  * fields (perfbench's HarnessSpec). */
 final case class StageReport(op: String, ok: Boolean,
-    updates: Seq[String], error: Option[String], metrics: Map[String, Any])
+    updates: Seq[String], error: Option[String],
+    metrics: Map[String, Any] = Map.empty)
 
 final case class PipelineReport(stages: Seq[StageReport]) {
   def errors: Seq[String] = stages.flatMap(s => s.error.map(e => s"${s.op}: $e"))
@@ -70,11 +73,10 @@ object Pipeline {
         Try(op(cur)) match {
           case Success(res) =>
             val next = if (config.sanitize) Sanitize.transform(res.df, cur) else res.df
-            val metrics = if (config.collectMetrics) res.metrics() else Map.empty[String, Any]
-            (next, reports :+ StageReport(op.name, ok = true, res.updates, None, metrics))
+            (next, reports :+ StageReport(op.name, ok = true, res.updates, None))
           case Failure(e) =>
             (cur, reports :+ StageReport(op.name, ok = false, Nil,
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName)), Map.empty))
+              Some(Option(e.getMessage).getOrElse(e.getClass.getName))))
         }
     }
     (out, PipelineReport(stages))

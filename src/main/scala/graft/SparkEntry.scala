@@ -47,8 +47,8 @@ object SparkEntry {
     // the very dirs the sweep exists for)
     sweep("/tmp", ("^graft_[a-z0-9]+_roundtrip_" +
       java.util.regex.Pattern.quote(sf) + "_([0-9]+)(?:_[a-z]+)?$").r)
-    // r22: streaming checkpoints live on tmpfs (StreamRuns
-    // checkpointScratch — RAM-backed!) and are deleted in-line by the
+    // r22: streaming checkpoints live on tmpfs (StreamRuns'
+    // checkpointBase — RAM-backed!) and are deleted in-line by the
     // runs; a CRASHED invocation would leak them into memory until
     // reboot, so the dead-pid sweep covers them too (both possible
     // bases: /dev/shm and the JVM temp dir).

@@ -139,11 +139,10 @@ case class CosineSim(left: Expression, right: Expression)
       newRight: Expression): CosineSim = copy(newLeft, newRight)
 }
 
-/** True iff the array is non-null with NO null elements — the codegen
-  * twin of `Similarity.vecOkUdf`, the scoreability gate every embedding
-  * scan runs per row. Never null itself: a null array is `false` (an
-  * unscoreable row gets dropped, not nulled through the filter), matching
-  * the UDF's `v != null && ...` shape. */
+/** True iff the array is non-null with NO null elements — the
+  * scoreability gate every embedding scan runs per row. Never null
+  * itself: a null array is `false` (an unscoreable row gets dropped, not
+  * nulled through the filter). */
 case class ArrayFullyDefined(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

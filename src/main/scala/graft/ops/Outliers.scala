@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.util.Exprs._
@@ -125,46 +125,18 @@ final case class Outliers(
           for (m <- s.mean; sd <- s.stdSamp if sd != 0.0)
             yield c -> (m - threshold * sd, m + threshold * sd)
         }
-      // r22 (guide §1.2): median and MAD come from ONE scan via
-      // graft_median_absdev — the old job 2 (percentile of |x − median|
-      // over a fresh scan) is derivable bit-for-bit from job 1's exact
-      // value→count histogram. The second scan now runs ONLY for columns
-      // whose histogram spilled to the bounded digest (cardinality >
-      // spark.graft.percentile.maxDistinct), where the fold cannot
-      // reproduce the row-exact pass — identical results on both paths.
+      // median and MAD (or the contamination-quantile deviation) from
+      // Stats.medianDev: one scan, plus a second job only over columns
+      // whose exact histogram spilled
       case "modified_zscore" =>
-        val md = Stats.medianDev(df, cols, 0.5)
-        val medians = md.collect { case (c, (Some(m), _)) => c -> m }
-        val spilled = md.collect { case (c, (Some(m), None)) => c -> m }
-        val mads = md.collect { case (c, (Some(_), Some(d))) => c -> d } ++
-          Stats.mad(df, spilled)
-        medians.flatMap { case (c, med) =>
-          mads.get(c).filter(_ != 0.0).map { mad =>
+        Stats.medianDev(df, cols, 0.5).collect {
+          case (c, (med, mad)) if mad != 0.0 =>
             val half = threshold * mad / 0.6745
             c -> (med - half, med + half)
-          }
         }
       case "isolation_forest" =>
-        val md = Stats.medianDev(df, cols, 1.0 - contamination)
-        val medians = md.collect { case (c, (Some(m), _)) => c -> m }
-        if (medians.isEmpty) Map.empty
-        else {
-          val spilled = md.collect { case (c, (Some(m), None)) => c -> m }
-          val devs = md.collect { case (c, (Some(_), Some(d))) => c -> d } ++
-            (if (spilled.isEmpty) Map.empty[String, Double]
-             else {
-               val aggs = spilled.keys.toSeq.map(c =>
-                 pctl(abs(col(c).cast(DoubleType) - lit(spilled(c))),
-                   1.0 - contamination).as(c))
-               val row = df.agg(aggs.head, aggs.tail: _*).head()
-               spilled.keys.flatMap { c =>
-                 val i = row.fieldIndex(c)
-                 if (row.isNullAt(i)) None else Some(c -> row.getDouble(i))
-               }.toMap
-             })
-          medians.flatMap { case (c, med) =>
-            devs.get(c).filter(_ != 0.0).map(d => c -> (med - d, med + d))
-          }
+        Stats.medianDev(df, cols, 1.0 - contamination).collect {
+          case (c, (med, d)) if d != 0.0 => c -> (med - d, med + d)
         }
       case other => throw new IllegalArgumentException(s"unknown outlier method: $other")
     }

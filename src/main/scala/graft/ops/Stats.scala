@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -137,47 +137,46 @@ object Stats {
     }.toMap
   }
 
-  /** One-pass median + deviation percentile per column (r22, guide §1.2
-    * "fewer passes"): `graft_median_absdev` computes the median AND the
-    * `devP` percentile of `|x − median|` from ONE scan's value→count
-    * histogram — the fold around the median is done at eval time, bit-
-    * identical to the second scan it replaces (see
-    * [[graft.functions.MedianAbsDev]]). Returns
-    * col → (median, dev); dev is None when the histogram spilled to the
-    * bounded digest (then the median is the digest median, exactly what
-    * the old pass 1 returned, and the caller runs the old second-pass
-    * [[mad]]/percentile job for those columns only — identical results
-    * on both paths, the extra job only where exactness demands it). */
+  /** Per-column (median, dev): the median and the `devP` percentile of
+    * `|x − median|`, as a two-pass computation (median first, then the
+    * percentile of the deviations) returns them. `graft_median_absdev`
+    * computes both from ONE scan's value→count histogram — the fold
+    * around the median is done at eval time, bit-identical to the second
+    * scan it replaces (see [[graft.functions.MedianAbsDev]]). A column
+    * whose histogram spilled to the bounded digest (cardinality >
+    * `spark.graft.percentile.maxDistinct`) gets the digest median and no
+    * dev from that scan; its dev comes from one second-pass job over the
+    * spilled columns only. So the result is the same on both paths, and
+    * the extra job runs only where exactness demands it. Columns with no
+    * non-null value are omitted. */
   def medianDev(df: DataFrame, cols: Seq[String], devP: Double)
-      : Map[String, (Option[Double], Option[Double])] = {
+      : Map[String, (Double, Double)] = {
     if (cols.isEmpty) return Map.empty
     val aggs = cols.map(c =>
       ExactPercentile.medianAbsDev(col(c).cast(DoubleType), devP).as(c))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.map { c =>
+    val md: Seq[(String, Double, Option[Double])] = cols.flatMap { c =>
       val i = row.fieldIndex(c)
-      if (row.isNullAt(i)) c -> ((None, None))
+      if (row.isNullAt(i) || row.getStruct(i).isNullAt(0)) None
       else {
         val r = row.getStruct(i)
-        c -> ((if (r.isNullAt(0)) None else Some(r.getDouble(0)),
-          if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+        Some((c, r.getDouble(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       }
-    }.toMap
-  }
-
-  /** Median absolute deviation; needs the medians first (two-pass, SURVEY
-    * §2.4 A11). One extra agg job for all columns. Since r22 this is the
-    * FALLBACK path for columns whose [[medianDev]] histogram spilled;
-    * exact-mode columns get the MAD from the single scan. */
-  def mad(df: DataFrame, medians: Map[String, Double]): Map[String, Double] = {
-    val cols = medians.keys.toSeq
-    if (cols.isEmpty) return Map.empty
-    val aggs = cols.map(c =>
-      pctl(abs(col(c).cast(DoubleType) - lit(medians(c))), 0.5).as(c))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cols.flatMap { c =>
-      val i = row.fieldIndex(c)
-      if (row.isNullAt(i)) None else Some(c -> row.getDouble(i))
+    }
+    val spilled = md.collect { case (c, m, None) => c -> m }
+    val secondPass: Map[String, Double] =
+      if (spilled.isEmpty) Map.empty
+      else {
+        val aggs = spilled.map { case (c, m) =>
+          pctl(abs(col(c).cast(DoubleType) - lit(m)), devP).as(c) }
+        val r = df.agg(aggs.head, aggs.tail: _*).head()
+        spilled.flatMap { case (c, _) =>
+          val i = r.fieldIndex(c)
+          if (r.isNullAt(i)) None else Some(c -> r.getDouble(i))
+        }.toMap
+      }
+    md.flatMap { case (c, m, dev) =>
+      dev.orElse(secondPass.get(c)).map(d => c -> ((m, d)))
     }.toMap
   }
 

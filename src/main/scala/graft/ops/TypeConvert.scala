@@ -172,24 +172,21 @@ final case class TypeConvert(
     // reference's subset test, `dataTypeConversion.py:136-138`, is implied).
     // Raw-cased distinct count (>1, the reference's len(uniques) > 1 on raw
     // values) is covered by the __card aggregate from job 1.
-    val confirmedBool: Set[String] =
-      decisions.collect { case (c, "boolcand") => c }.toSet
-
     val proj = manualDf.columns.map { c =>
       decisions.get(c) match {
         case Some("long") => tryLong(col(c)).as(c)
         case Some("double") => tryDouble(col(c)).as(c)
         case Some("datetime") => tryTimestampChain(trim(col(c)), datetimeFormats).as(c)
-        case Some("boolcand") if confirmedBool(c) =>
+        case Some("boolcand") =>
           when(lower(trim(col(c))).isin(TypeConvert.TrueTokens: _*), lit(true))
             .when(lower(trim(col(c))).isin(TypeConvert.FalseTokens: _*), lit(false))
             .as(c)
         case _ => col(c)
       }
     }
-    val updates = decisions.collect {
-      case (c, "boolcand") if confirmedBool(c) => s"$c -> boolean"
-      case (c, t) if t != "boolcand" => s"$c -> $t"
+    val updates = decisions.map {
+      case (c, "boolcand") => s"$c -> boolean"
+      case (c, t) => s"$c -> $t"
     }.toSeq
     OpResult(manualDf.select(proj.toSeq: _*), updates)
   }

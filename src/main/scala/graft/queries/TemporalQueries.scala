@@ -61,7 +61,7 @@ object TemporalQueries {
     // micro-batch state merge / watermark / event-time timeout execution
     // verified against the same SQL as the batch forms
     Query("q_events_window_stream", (s, dir) =>
-      graft.streaming.StreamRuns.tumblingAvailableNow(s, dir),
+      graft.streaming.StreamRuns.tumbling(s, dir),
       // the streaming twins verify against the same math as the batch
       // forms; the tumbling one is the identical SQL, the sessionize one
       // drops session_id (the streaming emit carries no counter) and
@@ -80,7 +80,7 @@ object TemporalQueries {
             |ORDER BY user_id, session_id""".stripMargin)),
 
     Query("q_events_sessionize_stream", (s, dir) =>
-      graft.streaming.StreamRuns.sessionizeAvailableNow(s, dir),
+      graft.streaming.StreamRuns.sessionize(s, dir),
       sql(raw"""WITH $sessionCtes
             |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
             | round(min(tsec), 6) AS start_sec,
@@ -102,7 +102,7 @@ object TemporalQueries {
     // overlapping-window Expand + state merge under AvailableNow,
     // hash-checked against the same SQL as the batch q_events_hopping
     Query("q_events_hopping_stream", (s, dir) =>
-      graft.streaming.StreamRuns.hoppingAvailableNow(s, dir),
+      graft.streaming.StreamRuns.hopping(s, dir),
       // the streaming-engine hopping run must reproduce the batch SQL
       // bit-for-bit (complete mode evicts nothing)
       sql(hoppingSql)),
@@ -119,9 +119,10 @@ object TemporalQueries {
       sql(firstEventSql)),
 
     Query("q_dedup_stream_run", (s, dir) =>
-      graft.streaming.StreamRuns.dedupExactAvailableNow(s, dir),
-      // the STREAMING dedup engine run (event-time-ordered replay) keeps
-      // exactly the batch twin's survivors — same SQL
+      graft.streaming.StreamRuns.dedupExact(s, dir),
+      // the STREAMING dedup engine run (event-time-ordered replay over
+      // two chronological micro-batches, so key state is kept across the
+      // batch boundary) keeps exactly the batch twin's survivors — same SQL
       sql(firstEventSql)),
 
     // temporal AS-OF join (plans/AsofJoin): last-touch attribution —

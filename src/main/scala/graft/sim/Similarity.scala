@@ -12,7 +12,8 @@ import graft.functions.VectorKernels
   * Brute-force cosine top-k is the exact baseline: broadcast the (small)
   * query set against the corpus — one codegen'd projection per corpus row,
   * no corpus shuffle, then a per-query top-k window. The scale path is
-  * random-hyperplane LSH ([[signature]]): candidates share a signature
+  * random-hyperplane LSH (`graft_signature`,
+  * [[graft.functions.HyperplaneSignature]]): candidates share a signature
   * bucket, exact re-rank inside buckets — corpus scan count stays 1 and
   * the shuffle is by bucket key instead of all-pairs.
   */
@@ -25,21 +26,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def toDoubleArr(a: Column): Column = transform(a, _.cast(DoubleType))
-
-  /** True when the vector is fully scoreable: non-null with no null
-    * elements. Boxed parameter so element nulls are observable; a tight
-    * JVM loop like the other fused kernels here (the expression-level
-    * `exists` alternative runs interpreted per element). */
-  /** Superseded on the scan path by `graft_vec_ok` (r14) — kept as the
-    * boxed reference implementation VectorKernelsSpec compares against. */
-  private[graft] val vecOkUdf = udf { v: Seq[java.lang.Double] =>
-    v != null && {
-      var i = 0
-      var ok = true
-      while (ok && i < v.length) { ok = v(i) != null; i += 1 }
-      ok
-    }
-  }
 
   /** Rows whose vector is fully present — non-null AND with no null
     * elements — with the CAST array projected ONCE as `castAs`. The check
@@ -54,10 +40,8 @@ object Similarity {
     * [[graft.dedup.NearDup.embeddingPairs]]. */
   private[graft] def withVec(df: DataFrame, vecCol: String,
       castAs: String): DataFrame = {
-    // graft_vec_ok (functions/ArrayFullyDefined, r14): same null/element
-    // semantics as [[vecOkUdf]], but evaluated inside the scan's codegen
-    // span — the gate runs on EVERY embedding row, so the UDF's per-row
-    // boxing was pure overhead
+    // graft_vec_ok (functions/ArrayFullyDefined, r14): evaluated inside
+    // the scan's codegen span — the gate runs on EVERY embedding row
     df.withColumn(castAs, toDoubleArr(col(vecCol)))
       .where(VectorKernels.vecOk(col(castAs)))
   }
@@ -145,21 +129,11 @@ object Similarity {
     (z.toDouble / Long.MaxValue.toDouble)
   }
 
-  /** Random-hyperplane signature: bit p = sign(v · w_p), packed to a Long.
-    * Cosine-similar vectors agree on most bits, so bucketing on the
-    * signature (or bands of it) yields near-neighbor candidates. */
-  def signature(vec: Column, dim: Int, planes: Int = 16): Column = {
-    require(planes <= 63, "signature packs into one long")
-    val bits = (0 until planes).map { p =>
-      val w = array((0 until dim).map(d => lit(planeWeight(p, d))): _*)
-      when(dot(vec, w) >= 0.0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Fused [[signature]]: all planes·dim multiply-adds in one UDF call
-    * (the Column form evaluates planes separate interpreted folds per
-    * row). Identical weights and bit packing. SUPERSEDED on the hot
+  /** Random-hyperplane signature: bit p = sign(v · w_p) over the
+    * [[planeWeight]] table, packed to a Long; all planes·dim
+    * multiply-adds in one UDF call. Cosine-similar vectors agree on most
+    * bits, so bucketing on the signature (or bands of it) yields
+    * near-neighbor candidates. SUPERSEDED on the hot
     * paths by `graft_signature` ([[graft.functions.HyperplaneSignature]],
     * r14); kept as the boxed reference implementation. */
   def signatureUdf(dim: Int, planes: Int = 16) = {

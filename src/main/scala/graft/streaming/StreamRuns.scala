@@ -4,19 +4,21 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Self-contained `Trigger.AvailableNow` executions of the streaming
-  * operators, shaped as batch-returning query functions so the DRIVER
-  * ORACLE sees the streaming engine itself (micro-batch state merge,
-  * watermark advance, event-time timeouts) — not just the batch twins.
-  * Until round 11 those paths were only spec-pinned (StreamingSpec);
-  * these wrappers give each one a hash-checkable CORRECTNESS row against
-  * the already-green batch-twin SQL.
+/** Bounded runs of the streaming operators over the real events table,
+  * shaped as batch-returning query functions so the DRIVER ORACLE sees
+  * the streaming engine itself (micro-batch state merge, watermark
+  * advance, event-time timeouts) — not just the batch twins. Each stream
+  * kind has one entry point ([[tumbling]], [[hopping]], [[sessionize]],
+  * [[dedupExact]]) whose result must equal its batch twin; the trigger
+  * is a value the caller passes, `Trigger.AvailableNow()` by default
+  * (the oracle rows) or e.g. `Trigger.ProcessingTime` (StreamRunsSpec's
+  * always-on parity cases).
   *
-  * Mechanics shared by both runs:
+  * All four go through one runner, [[run]]:
   *  - the events table is STAGED to a per-call scratch dir as parquet and
   *    consumed via a file-source `readStream` with an explicit schema —
   *    the same source shape a production ingest uses;
@@ -24,22 +26,44 @@ import org.apache.spark.sql.streaming.Trigger
   *    micro-batch decomposition deterministic (the file source processes
   *    files in modification-time order), so the run genuinely exercises
   *    MULTI-batch execution, not one giant batch;
-  *  - results land in a memory sink under a per-call unique name; the
-  *    scratch dir is deleted once the query terminates (the memory sink
-  *    holds the rows).
+  *  - results land in a memory sink under a per-call unique name, and the
+  *    query is drained with `processAllAvailable()`. That call returns
+  *    when the query has terminated (AvailableNow stops itself once the
+  *    staged files are consumed) or when a trigger found no new data and
+  *    no no-data batch to run (`MicroBatchExecution` flags "no new data"
+  *    only when it builds no batch) — the quiescent point where every
+  *    staged file is committed to the sink. A failed query rethrows its
+  *    error from that call. The source is a private scratch dir that gets
+  *    no file after staging, so an always-on trigger always reaches that
+  *    point and needs no deadline;
+  *  - the scratch and checkpoint dirs are deleted once the query stops
+  *    (the memory sink holds the rows).
   */
 object StreamRuns {
 
   private val calls = new AtomicInteger(0)
 
-  private def scratch(kind: String, dir: String): Path = {
+  /** A fresh per-call path `<base>/graft_<tag>_<sf>_<pid>_<n>`, absent on
+    * return (a parquet write into it requires that). The pid lets
+    * [[graft.SparkEntry.sweepDeadScratch]] reclaim what a crashed run
+    * left behind. */
+  private def scratch(base: String, tag: String, dir: String): Path = {
     val sf = new java.io.File(dir).getName
-    val n = calls.incrementAndGet()
-    val p = Paths.get(
-      s"/tmp/graft_stream_${kind}_${sf}_${ProcessHandle.current().pid()}_$n")
-    deleteRec(p) // NOT created here: the tumbling path hands it straight
-    p            // to a parquet write, which requires it absent
+    val p = Paths.get(base,
+      s"graft_${tag}_${sf}_${ProcessHandle.current().pid()}_${calls.incrementAndGet()}")
+    deleteRec(p)
+    p
   }
+
+  /** Checkpoint base: /dev/shm when present, else the JVM temp dir. These
+    * runs end in a MEMORY sink and the checkpoint is discarded with the
+    * query, so durability buys nothing; a production always-on stream
+    * keeps its checkpoint on durable storage. The streaming builders
+    * install [[LocalCheckpointFileManager]] ([[Checkpoints.install]]),
+    * which writes the checkpoint files without starting a process. */
+  private def checkpointBase: String =
+    if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
+    else System.getProperty("java.io.tmpdir", "/tmp")
 
   /** Delete `p` and everything under it; a missing `p` is a no-op. */
   private[graft] def deleteRec(p: Path): Unit = {
@@ -52,25 +76,49 @@ object StreamRuns {
     }
   }
 
-  /** Checkpoint scratch for the bounded drain-and-stop runs: /dev/shm
-    * when present, else the JVM temp dir. These runs end in a MEMORY sink
-    * and the checkpoint is discarded with the query, so durability buys
-    * nothing; a production always-on stream keeps its checkpoint on
-    * durable storage. The volume was never the main cost: each
-    * micro-batch's checkpoint writes started a `chmod` process per file
-    * and directory and a `readlink` per rename whenever Hadoop's native
-    * library (`libhadoop`) is not loaded. The streaming builders
-    * install [[LocalCheckpointFileManager]] ([[Checkpoints.install]]),
-    * which writes the same files without starting a process. */
-  private def checkpointScratch(kind: String, dir: String): Path = {
-    val base =
-      if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
-      else System.getProperty("java.io.tmpdir", "/tmp")
-    val sf = new java.io.File(dir).getName
-    val p = Paths.get(s"$base/graft_ckpt_${kind}_${sf}_" +
-      s"${ProcessHandle.current().pid()}_${calls.incrementAndGet()}")
-    deleteRec(p)
-    p
+  /** Stage the events of `dir` with `stage(in)`, then run `build(stream)`
+    * over a file-source stream of `in`'s parquet files — one file per
+    * micro-batch — into a memory sink under `trigger`, drain it with
+    * `processAllAvailable()` and return the sink table. */
+  private def run(spark: SparkSession, dir: String, kind: String,
+      trigger: Trigger, outputMode: String)(stage: Path => Unit)(
+      build: DataFrame => DataFrame): DataFrame = {
+    val in = scratch("/tmp", s"stream_$kind", dir)
+    val ckpt = scratch(checkpointBase, s"ckpt_$kind", dir)
+    try {
+      stage(in)
+      val schema = spark.read.parquet(in.toString).schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(in.toString)
+      val name = s"graft_stream_sink_${calls.incrementAndGet()}"
+      // A stateful streaming query spins up one state-store instance per
+      // shuffle partition PER MICRO-BATCH (load, commit, checkpoint file) —
+      // at the session's 32 partitions over ~4 batches that fixed cost
+      // dwarfs the actual event volume. 8 partitions is plenty for the
+      // events table while exercising real multi-partition state; the conf
+      // is scoped to the stream (a streaming query latches confs at start)
+      // and restored before the batch-side result query runs.
+      val confKey = "spark.sql.shuffle.partitions"
+      val prevParts = spark.conf.getOption(confKey)
+      val q =
+        try {
+          spark.conf.set(confKey, "8")
+          build(stream).writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", ckpt.toString)
+            .outputMode(outputMode).trigger(trigger).start()
+        } finally prevParts.fold(spark.conf.unset(confKey))(spark.conf.set(confKey, _))
+      try q.processAllAvailable() finally q.stop()
+      // `spark.table` resolves eagerly, so the returned Dataset's plan
+      // already holds the sink relation and outlives the view; dropping
+      // the registration keeps the session catalog from pinning one full
+      // result copy in the driver per run
+      val out = spark.table(name)
+      spark.catalog.dropTempView(name)
+      out
+    } finally {
+      deleteRec(ckpt) // memory sink holds the rows; state is dead
+      deleteRec(in)
+    }
   }
 
   /** Move the single data part-file of a one-partition parquet write into
@@ -88,57 +136,39 @@ object StreamRuns {
     deleteRec(writeDir)
   }
 
-  /** Run `build(stream)` over a file-source stream of `srcDir`'s parquet
-    * files to a memory sink, AvailableNow, one file per micro-batch;
-    * returns the completed result table. */
-  private def runToMemory(spark: SparkSession, srcDir: Path,
-      build: DataFrame => DataFrame, outputMode: String): DataFrame = {
-    val schema = spark.read.parquet(srcDir.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-    val name = s"graft_stream_sink_${calls.incrementAndGet()}"
-    val ckpt = checkpointScratch("mem", srcDir.toString)
-    // A stateful streaming query spins up one state-store instance per
-    // shuffle partition PER MICRO-BATCH (load, commit, checkpoint file) —
-    // at the session's 32 partitions over ~4 batches that fixed cost
-    // dwarfs the actual event volume. 8 partitions is plenty for the
-    // events table while exercising real multi-partition state; the conf
-    // is scoped to the stream (a streaming query latches confs at start)
-    // and restored before the batch-side result query runs.
-    val confKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(confKey)
-    try {
-      val q =
-        try {
-          spark.conf.set(confKey, "8")
-          build(stream).writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
-        } finally spark.conf.set(confKey, prevParts)
-      try q.awaitTermination() finally q.stop()
-      materializeAndDrop(spark, name)
-    } finally deleteRec(ckpt) // memory sink holds the rows; state is dead
-  }
-
-  /** Resolve the memory-sink table, then DROP its temp-view
-    * registration (r16 ADVICE): `spark.table` resolves eagerly, so the
-    * returned Dataset's plan already holds the sink relation and
-    * outlives the view — while the registration itself would pin a full
-    * result copy in the driver catalog for the session lifetime, one
-    * per run. */
-  private def materializeAndDrop(spark: SparkSession,
-      name: String): DataFrame = {
-    val out = spark.table(name)
-    spark.catalog.dropTempView(name)
-    out
+  /** Write `df` (carrying an int `__b` batch column) as ONE single-task job
+    * partitioned by `__b`, rows sorted by `sortBy` within each batch, then
+    * move each batch's single part-file into `destDir` under its target
+    * name/mtime. A batch value with no rows (possible only on degenerate
+    * corpora) still stages an EMPTY file of `df`'s schema — the
+    * micro-batch decomposition must not silently lose a planned batch. */
+  private def stagePartitioned(df: DataFrame, destDir: Path, scratchName: String,
+      batches: Seq[(Int, (String, Long))], sortBy: Seq[String] = Nil): Unit = {
+    Files.createDirectories(destDir)
+    val d = destDir.resolve(scratchName)
+    df.repartition(1).sortWithinPartitions(("__b" +: sortBy).map(col): _*)
+      .write.partitionBy("__b").parquet(d.toString)
+    batches.foreach { case (b, (name, mtimeMs)) =>
+      val pDir = d.resolve(s"__b=$b")
+      if (Files.isDirectory(pDir)) moveOnlyPart(pDir, destDir, name, mtimeMs)
+      else {
+        val e = destDir.resolve(s"${scratchName}_empty$b")
+        df.drop("__b").limit(0).coalesce(1).write.parquet(e.toString)
+        moveOnlyPart(e, destDir, name, mtimeMs)
+      }
+    }
+    deleteRec(d)
   }
 
   /** Stage the events table's (ts, event_type, value) projection into
     * `in` as TWO single-file micro-batches split by a hash repartition —
     * arrival order is decoupled from event time, so the second batch
     * delivers late rows and updates first-batch aggregate state; distinct
-    * ascending mtimes make the batch order deterministic. */
-  private def stageTwoShuffledBatches(spark: SparkSession, dir: String,
+    * ascending mtimes make the batch order deterministic. Two data
+    * batches keep the cross-batch merge genuinely exercised at ~0.5 s
+    * fixed cost per extra micro-batch (measured); the deeper
+    * 4-shuffled-batch equivalence is StreamingSpec's job. */
+  private def stageTwoShuffledBatches(spark: SparkSession, dir: String)(
       in: Path): Unit = {
     Events.load(spark, dir)
       .select("ts", "event_type", "value")
@@ -154,63 +184,48 @@ object StreamRuns {
     }
   }
 
-  /** [[Events.streamingTumbling]] over the real events table, two
-    * shuffled micro-batches ([[stageTwoShuffledBatches]]); complete
-    * output mode evicts nothing, so the final table must equal the batch
-    * aggregation exactly. Two data batches keep the cross-batch merge
-    * genuinely exercised at ~0.5 s fixed cost per extra micro-batch
-    * (measured); the deeper 4-shuffled-batch equivalence is
-    * StreamingSpec's job. */
-  def tumblingAvailableNow(spark: SparkSession, dir: String,
-      width: String = "1 hour"): DataFrame = {
-    val in = scratch("tumbling", dir)
-    try {
-      stageTwoShuffledBatches(spark, dir, in)
-      val out = runToMemory(spark, in,
-        s => Events.streamingTumbling(s, width), "complete")
-      out.select(col("window_start"), col("event_type"), col("n_events"),
-          round(col("avg_value"), 6).as("avg_value"))
-        .orderBy("window_start", "event_type")
-    } finally deleteRec(in)
-  }
+  /** [[Events.streamingTumbling]] over two shuffled micro-batches
+    * ([[stageTwoShuffledBatches]]); complete output mode evicts nothing,
+    * so the final table must equal the batch aggregation exactly,
+    * however many trigger firings the rows landed across. */
+  def tumbling(spark: SparkSession, dir: String, width: String = "1 hour",
+      trigger: Trigger = Trigger.AvailableNow()): DataFrame =
+    run(spark, dir, "tumbling", trigger, "complete")(
+      stageTwoShuffledBatches(spark, dir))(
+      s => Events.streamingTumbling(s, width))
+      .select(col("window_start"), col("event_type"), col("n_events"),
+        round(col("avg_value"), 6).as("avg_value"))
+      .orderBy("window_start", "event_type")
 
-  /** [[Events.streamingHopping]] over the real events table — the same
-    * two-shuffled-batch staging and complete-mode memory sink as
-    * [[tumblingAvailableNow]], exercising the overlapping-window state
-    * merge (each event updates width/slide window states per micro-batch;
-    * r13 verdict #2: this was the one streaming-engine path with no
-    * driver CORRECTNESS row — StreamingSpec pinned it multi-batch, but
-    * nothing hash-checked the engine run against the batch SQL). */
-  def hoppingAvailableNow(spark: SparkSession, dir: String,
-      width: String = "1 hour", slide: String = "30 minutes"): DataFrame = {
-    val in = scratch("hopping", dir)
-    try {
-      stageTwoShuffledBatches(spark, dir, in)
-      val out = runToMemory(spark, in,
-        s => Events.streamingHopping(s, width, slide), "complete")
-      out.select(col("window_start_sec"), col("event_type"), col("n_events"),
-          round(col("avg_value"), 6).as("avg_value"))
-        .orderBy("window_start_sec", "event_type")
-    } finally deleteRec(in)
-  }
+  /** [[Events.streamingHopping]] with the same staging and complete-mode
+    * sink as [[tumbling]], exercising the overlapping-window state merge
+    * (each event updates width/slide window states per micro-batch). */
+  def hopping(spark: SparkSession, dir: String, width: String = "1 hour",
+      slide: String = "30 minutes",
+      trigger: Trigger = Trigger.AvailableNow()): DataFrame =
+    run(spark, dir, "hopping", trigger, "complete")(
+      stageTwoShuffledBatches(spark, dir))(
+      s => Events.streamingHopping(s, width, slide))
+      .select(col("window_start_sec"), col("event_type"), col("n_events"),
+        round(col("avg_value"), 6).as("avg_value"))
+      .orderBy("window_start_sec", "event_type")
 
-  /** [[Events.streamingSessionize]] over the real events table: TWO
-    * chronological data batches (split at the midpoint event time, r11
-    * verdict #5 — the r11 run staged one data batch, so the oracle never
-    * saw a session MERGE across micro-batches) followed by two far-future
-    * sentinel batches — the first advances max event time, the second's
-    * recomputed watermark fires every pending event-time timeout so all
-    * real sessions flush through the Append sink. Sentinel users are
-    * negative ids, filtered from the result; their own sessions stay
-    * open in state and are discarded with the query.
+  /** [[Events.streamingSessionize]] over TWO chronological data batches
+    * (split inside the longest session, so at least one session MERGES
+    * across micro-batches) followed by two far-future sentinel batches —
+    * the first advances max event time, the second's recomputed
+    * watermark fires every pending event-time timeout so all real
+    * sessions flush through the Append sink. Sentinel users are negative
+    * ids, filtered from the result; their own sessions stay open in
+    * state and are discarded with the query.
     *
     * The split is by TIME, not by user hash: a user-hash split keeps
     * every user's history inside one batch, so no session could span
-    * batches — exactly the path that needed oracle coverage. And the cut
-    * point is chosen INSIDE the longest batch-side session, not at the
-    * range midpoint: the events corpus has ~9.5k short sessions spread
-    * over a long range (avg 42 s at sf0.01), so an arbitrary global cut
-    * almost surely lands between sessions and exercises no merge — the
+    * batches — exactly the path that needs coverage. And the cut point
+    * is chosen INSIDE the longest batch-side session, not at the range
+    * midpoint: the events corpus has ~9.5k short sessions spread over a
+    * long range (avg 42 s at sf0.01), so an arbitrary global cut almost
+    * surely lands between sessions and exercises no merge — the
     * longest-session cut guarantees at least one session extends
     * first-batch state with second-batch rows (every intra-session gap
     * is ≤ the session gap by definition, so the rows on either side of
@@ -224,308 +239,104 @@ object StreamRuns {
     * data batches — the mid-stream timeout path — and any later event of
     * such a user is > gap away by the same inequality, so the batch twin
     * opens a new session there too. */
-  def sessionizeAvailableNow(spark: SparkSession, dir: String,
-      gapSeconds: Long = 1800): DataFrame = {
-    val in = scratch("sessionize", dir)
-    try {
-      stageSessionizeBatches(spark, dir, in, gapSeconds)
-      val out = runToMemory(spark, in,
-        s => Events.streamingSessionize(s, gapSeconds).toDF(), "append")
-      sessionizeResult(out)
-    } finally deleteRec(in)
-  }
-
-  /** The sessionize staging shared by the AvailableNow and
-    * ProcessingTime runs: two chronological data batches cut inside the
-    * longest batch-side session, then two far-future sentinel batches
-    * (see [[sessionizeAvailableNow]]'s scaladoc for why each piece is
-    * load-bearing). */
-  private def stageSessionizeBatches(spark: SparkSession, dir: String,
-      in: Path, gapSeconds: Long): Unit = {
-    import spark.implicits._
-    {
-      Files.createDirectories(in) // move target for the staged part-files
-      val base = Events.load(spark, dir).select("user_id", "ts", "event_id")
-      // r22 (guide §1.2, fewer staging jobs): ONE sessionizer pass yields
-      // everything the old TWO jobs did — min event time = min(start_sec),
-      // max event time = max(start_sec + duration_sec) (both 6-dp-rounded,
-      // i.e. exact to the microsecond; they only PLACE the far-future
-      // sentinels and the degenerate-corpus fallback midpoint, where a
-      // sub-millisecond shift is immaterial), and the longest session via
-      // max(struct(duration, -user, -start)) — the same
-      // (duration DESC, user ASC, start ASC) tie-break the orderBy.head
-      // used. The CUT formula is unchanged: it reads the identical
-      // rounded (start_sec, duration_sec) pair the old head() returned,
-      // so midMs — the one value that decides batch membership — is
-      // bit-identical and the staged batches are too.
-      val r = Events.sessionize(base, gapSeconds).agg(
-        min(col("start_sec")).as("mn"),
-        max(col("start_sec") + col("duration_sec")).as("mx"),
-        max(struct(col("duration_sec").as("d"), (-col("user_id")).as("nu"),
-          (-col("start_sec")).as("ns"))).as("lg")).head()
-      val minMs = (r.getDouble(0) * 1000).toLong
-      val maxMs = (r.getDouble(1) * 1000).toLong
-      val lg = r.getStruct(2)
-      val (lgDur, lgStart) = (lg.getDouble(0), -lg.getDouble(2))
-      val midMs =
-        if (lgDur > 0) ((lgStart + lgDur / 2) * 1000).toLong
-        else minMs + (maxMs - minMs) / 2
-      val t0 = System.currentTimeMillis()
-
-      // both data batches in ONE partitioned write (was: two full
-      // filter+coalesce(1) scans). Row order inside a data file is
-      // irrelevant here — the sessionizer sorts each user's rows per
-      // micro-batch — only the FILE split (ts vs midMs) and the mtime
-      // order carry semantics, and both are unchanged.
-      val mid = new java.sql.Timestamp(midMs)
-      stagePartitioned(
-        base.withColumn("__b", when(col("ts") <= mid, 1).otherwise(2)),
-        base.limit(0), in, "__data",
-        Seq(1 -> ("data1.parquet", t0), 2 -> ("data2.parquet", t0 + 10000L)))
-
-      // both sentinels in one write too; same ids/timestamps/mtimes
-      val sentinels = Seq(
-        (-1L, new java.sql.Timestamp(maxMs + gapSeconds * 1000L * 10),
-          10000001L, 1),
-        (-2L, new java.sql.Timestamp(maxMs + gapSeconds * 1000L * 20),
-          10000002L, 2))
-        .toDF("user_id", "ts", "event_id", "__b")
-      stagePartitioned(sentinels, base.limit(0), in, "__s",
-        Seq(1 -> ("sentinel1.parquet", t0 + 20000L),
-          2 -> ("sentinel2.parquet", t0 + 30000L)))
-    }
-  }
-
-  /** Write `df` (carrying an int `__b` batch column) as ONE job
-    * partitioned by `__b`, then move each batch's single part-file into
-    * `destDir` under its target name/mtime. A batch value with no rows
-    * (possible only on degenerate corpora via the fallback midpoint)
-    * still stages an EMPTY file from `emptyLike`'s schema — the old
-    * two-write staging produced one, and the micro-batch decomposition
-    * must not silently lose a planned batch. */
-  private def stagePartitioned(df: DataFrame, emptyLike: DataFrame,
-      destDir: Path, scratchName: String,
-      batches: Seq[(Int, (String, Long))]): Unit = {
-    val d = destDir.resolve(scratchName)
-    df.repartition(1).write.partitionBy("__b").parquet(d.toString)
-    batches.foreach { case (b, (name, mtimeMs)) =>
-      val pDir = d.resolve(s"__b=$b")
-      if (Files.isDirectory(pDir)) moveOnlyPart(pDir, destDir, name, mtimeMs)
-      else {
-        val e = destDir.resolve(s"${scratchName}_empty$b")
-        emptyLike.coalesce(1).write.parquet(e.toString)
-        moveOnlyPart(e, destDir, name, mtimeMs)
-      }
-    }
-    deleteRec(d)
-  }
-
-  /** Sentinel filter + canonical projection/ordering for the sessionize
-    * runs' Append-sink output. */
-  private def sessionizeResult(out: DataFrame): DataFrame =
-    out.where(col("user_id") >= 0)
+  def sessionize(spark: SparkSession, dir: String, gapSeconds: Long = 1800,
+      trigger: Trigger = Trigger.AvailableNow()): DataFrame =
+    run(spark, dir, "sessionize", trigger, "append")(
+      stageSessionizeBatches(spark, dir, gapSeconds))(
+      s => Events.streamingSessionize(s, gapSeconds).toDF())
+      .where(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"),
         round(col("start_sec"), 6).as("start_sec"),
         round(col("duration_sec"), 6).as("duration_sec"))
       .orderBy("user_id", "start_sec")
 
-  /** Run `build(stream)` over `srcDir`'s staged parquet files under a
-    * REAL `Trigger.ProcessingTime` — the always-on production trigger, vs
-    * the drain-and-stop AvailableNow [[runToMemory]] uses. The input is
-    * still bounded, so termination needs an explicit guard: the driver
-    * polls `recentProgress` until every staged row has been consumed AND
-    * the latest micro-batch was empty (state fully committed at a
-    * quiescent point), then stops the query; a `maxWaitMs` deadline turns
-    * a wedged stream into a loud failure instead of a hang. The guard's
-    * empty-batch condition rides on no-data progress events, which Spark
-    * throttles to one per `noDataProgressEventInterval` (default 10 s) —
-    * that conf is latched per-query at start (the stream clones the
-    * session), so it's pinned to `intervalMs` here and the guard
-    * converges promptly regardless of session config. */
-  private def runProcessingTime(spark: SparkSession, srcDir: Path,
-      build: DataFrame => DataFrame, outputMode: String,
-      intervalMs: Long, maxWaitMs: Long): DataFrame = {
-    val staged = spark.read.parquet(srcDir.toString).count()
-    val schema = spark.read.parquet(srcDir.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
-    val name = s"graft_stream_sink_${calls.incrementAndGet()}"
-    val ckpt = checkpointScratch("pt", srcDir.toString)
-    val latched = Seq(
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.streaming.noDataProgressEventInterval" -> intervalMs.toString)
-    val prev = latched.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      val q =
-        try {
-          latched.foreach { case (k, v) => spark.conf.set(k, v) }
-          build(stream).writeStream
-            .format("memory").queryName(name).outputMode(outputMode)
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
-            .start()
-        } finally prev.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
-      try {
-        val deadline = System.currentTimeMillis() + maxWaitMs
-        var done = false
-        while (!done && System.currentTimeMillis() < deadline) {
-          Thread.sleep(intervalMs)
-          val ps = q.recentProgress
-          done = ps.map(_.numInputRows).sum >= staged &&
-            ps.lastOption.exists(_.numInputRows == 0L)
-        }
-        if (!done) throw new IllegalStateException(
-          s"processing-time run did not drain $staged rows in ${maxWaitMs}ms")
-      } finally q.stop()
-      materializeAndDrop(spark, name)
-    } finally deleteRec(ckpt)
+  /** The [[sessionize]] staging: two chronological data batches cut
+    * inside the longest batch-side session, then two far-future sentinel
+    * batches. */
+  private def stageSessionizeBatches(spark: SparkSession, dir: String,
+      gapSeconds: Long)(in: Path): Unit = {
+    import spark.implicits._
+    val base = Events.load(spark, dir).select("user_id", "ts", "event_id")
+    // ONE sessionizer pass yields the min event time = min(start_sec),
+    // the max event time = max(start_sec + duration_sec) (both 6-dp-
+    // rounded, i.e. exact to the microsecond; they only PLACE the
+    // far-future sentinels and the degenerate-corpus fallback midpoint)
+    // and the longest session via max(struct(duration, -user, -start)):
+    // the (duration DESC, user ASC, start ASC) tie-break.
+    val r = Events.sessionize(base, gapSeconds).agg(
+      min(col("start_sec")).as("mn"),
+      max(col("start_sec") + col("duration_sec")).as("mx"),
+      max(struct(col("duration_sec").as("d"), (-col("user_id")).as("nu"),
+        (-col("start_sec")).as("ns"))).as("lg")).head()
+    val minMs = (r.getDouble(0) * 1000).toLong
+    val maxMs = (r.getDouble(1) * 1000).toLong
+    val lg = r.getStruct(2)
+    val (lgDur, lgStart) = (lg.getDouble(0), -lg.getDouble(2))
+    val midMs =
+      if (lgDur > 0) ((lgStart + lgDur / 2) * 1000).toLong
+      else minMs + (maxMs - minMs) / 2
+    val t0 = System.currentTimeMillis()
+
+    // both data batches in ONE partitioned write. Row order inside a data
+    // file is irrelevant here — the sessionizer sorts each user's rows per
+    // micro-batch — only the FILE split (ts vs midMs) and the mtime order
+    // carry semantics.
+    val mid = new java.sql.Timestamp(midMs)
+    stagePartitioned(
+      base.withColumn("__b", when(col("ts") <= mid, 1).otherwise(2)),
+      in, "__data",
+      Seq(1 -> ("data1.parquet", t0), 2 -> ("data2.parquet", t0 + 10000L)))
+
+    // both sentinels in one write too
+    val sentinels = Seq(
+      (-1L, new java.sql.Timestamp(maxMs + gapSeconds * 1000L * 10),
+        10000001L, 1),
+      (-2L, new java.sql.Timestamp(maxMs + gapSeconds * 1000L * 20),
+        10000002L, 2))
+      .toDF("user_id", "ts", "event_id", "__b")
+    stagePartitioned(sentinels, in, "__s",
+      Seq(1 -> ("sentinel1.parquet", t0 + 20000L),
+        2 -> ("sentinel2.parquet", t0 + 30000L)))
   }
 
-  /** [[Events.streamingTumbling]] under `Trigger.ProcessingTime`
-    * ([[runProcessingTime]]). Timing-dependent by nature (batch
-    * boundaries depend on wall-clock trigger firings against file-source
-    * polls), so this is spec-pinned for ROW PARITY with the batch twin
-    * only — no driver oracle row, matching the r14 verdict's framing.
-    * Complete output mode makes parity exact regardless of how many
-    * trigger firings the rows landed across. */
-  def tumblingProcessingTime(spark: SparkSession, dir: String,
-      width: String = "1 hour", intervalMs: Long = 200L,
-      maxWaitMs: Long = 180000L): DataFrame = {
-    val in = scratch("tumbling_pt", dir)
-    try {
-      stageTwoShuffledBatches(spark, dir, in)
-      runProcessingTime(spark, in,
-        s => Events.streamingTumbling(s, width), "complete",
-        intervalMs, maxWaitMs)
-        .select(col("window_start"), col("event_type"), col("n_events"),
-          round(col("avg_value"), 6).as("avg_value"))
-        .orderBy("window_start", "event_type")
-    } finally deleteRec(in)
-  }
-
-  /** [[Events.streamingHopping]] under `Trigger.ProcessingTime` — the
-    * overlapping-window state merge across wall-clock batch boundaries
-    * (r15 verdict missing-#2). Complete mode; same parity-only framing as
-    * [[tumblingProcessingTime]]. */
-  def hoppingProcessingTime(spark: SparkSession, dir: String,
-      width: String = "1 hour", slide: String = "30 minutes",
-      intervalMs: Long = 200L, maxWaitMs: Long = 180000L): DataFrame = {
-    val in = scratch("hopping_pt", dir)
-    try {
-      stageTwoShuffledBatches(spark, dir, in)
-      runProcessingTime(spark, in,
-        s => Events.streamingHopping(s, width, slide), "complete",
-        intervalMs, maxWaitMs)
-        .select(col("window_start_sec"), col("event_type"), col("n_events"),
-          round(col("avg_value"), 6).as("avg_value"))
-        .orderBy("window_start_sec", "event_type")
-    } finally deleteRec(in)
-  }
-
-  /** [[Events.streamingSessionize]] under `Trigger.ProcessingTime` — the
-    * session state-merge across WALL-CLOCK batch boundaries, the path the
-    * r15 verdict called most likely to diverge under an always-on
-    * trigger. Same chronological-cut + sentinel staging as
-    * [[sessionizeAvailableNow]] (the cut lands inside the longest batch
-    * session so at least one merge is guaranteed; sentinels advance the
-    * watermark so every real session flushes through the Append sink);
-    * the only difference is the trigger, so any divergence isolates the
-    * trigger's state handling. Parity-only, no oracle row. */
-  def sessionizeProcessingTime(spark: SparkSession, dir: String,
-      gapSeconds: Long = 1800, intervalMs: Long = 200L,
-      maxWaitMs: Long = 180000L): DataFrame = {
-    val in = scratch("sessionize_pt", dir)
-    try {
-      stageSessionizeBatches(spark, dir, in, gapSeconds)
-      val out = runProcessingTime(spark, in,
-        s => Events.streamingSessionize(s, gapSeconds).toDF(), "append",
-        intervalMs, maxWaitMs)
-      sessionizeResult(out)
-    } finally deleteRec(in)
-  }
-
-  /** [[graft.ops.Dedup.streamingExact]] over the real events table,
-    * replayed in event-time arrival order: the corpus is staged as ONE
-    * part-file sorted by (ts, tie-break), so per-key arrival order equals
-    * event-time order (a single input partition keeps its order through
-    * the key shuffle) and the first-seen row the state keeps IS the batch
-    * twin's min-(ts, event_id) survivor. All rows share the first batch,
-    * whose starting watermark is 0 — no state eviction mid-replay, so
-    * every duplicate is dropped regardless of gap (exactly the twin's
-    * global-first semantics). */
-  def dedupExactAvailableNow(spark: SparkSession, dir: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val in = scratch("dedup", dir)
-    try {
-      Events.load(spark, dir)
-        .repartition(1).sortWithinPartitions("ts", "event_id")
-        .write.parquet(in.toString)
-      val out = runToMemory(spark, in,
-        s => graft.ops.Dedup.streamingExact(s, "ts", watermark,
-          Seq("user_id", "event_type")), "append")
-      dedupResult(out)
-    } finally deleteRec(in)
-  }
-
-  /** [[graft.ops.Dedup.streamingExact]] under a REAL
-    * `Trigger.ProcessingTime` — key-state RETENTION across wall-clock
-    * batch boundaries, the one stateful path [[dedupExactAvailableNow]]
-    * (single data batch, drain-and-stop trigger) never exercised
-    * always-on (r16 verdict #3). The corpus is staged as TWO
+  /** [[graft.ops.Dedup.streamingExact]] replayed in event-time arrival
+    * order, across a micro-batch boundary. The corpus is staged as TWO
     * chronological single-part files cut at the median event time, each
     * sorted by (ts, event_id): a chronological cut plus one input
-    * partition per batch keeps per-key arrival order equal to
-    * event-time order (same argument as the AvailableNow run — a
-    * single-partition batch keeps its order through the key shuffle),
-    * and every key whose first occurrence landed in batch 1 reaches its
-    * batch-2 duplicates only through state the store RETAINED across a
-    * wall-clock trigger boundary. The dedup watermark is sized past the
-    * corpus's whole event-time span so no state evicts mid-replay —
-    * the final rows must equal the batch twin's global
-    * min-(ts, event_id) survivor set exactly; any divergence isolates
-    * the always-on trigger's state commit/reload. Parity-only
-    * (StreamRunsSpec), no oracle row — the same framing as the other
-    * ProcessingTime runs. */
-  def dedupExactProcessingTime(spark: SparkSession, dir: String,
-      intervalMs: Long = 200L, maxWaitMs: Long = 180000L): DataFrame = {
-    val in = scratch("dedup_pt", dir)
-    try {
-      Files.createDirectories(in)
-      val base = Events.load(spark, dir)
-      // median-ts cut (by row mass, not range midpoint — a skewed ts
-      // distribution must not leave one batch near-empty); identical-ts
-      // rows can never straddle the cut, so key+ts tie groups stay
-      // whole-batch and the (ts, event_id) arrival order is global
-      val (minUs, maxUs, midUs) = {
-        val r = base.select(unix_micros(col("ts")).as("__us"))
-          .agg(min(col("__us")), max(col("__us")),
-            expr("percentile_approx(__us, 0.5)")).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      // watermark > full event-time span => zero evictions mid-replay
-      val wmSec = (maxUs - minUs) / 1000000L + 3600L
+    * partition per batch keeps per-key arrival order equal to event-time
+    * order (a single-partition batch keeps its order through the key
+    * shuffle), so the first-seen row the state keeps IS the batch twin's
+    * min-(ts, event_id) survivor, and every key whose first occurrence
+    * landed in batch 1 reaches its batch-2 duplicates only through state
+    * the store RETAINED across the batch boundary. The dedup watermark is
+    * sized past the corpus's whole event-time span so no state evicts
+    * mid-replay — the final rows must equal the batch twin's global
+    * survivor set exactly. */
+  def dedupExact(spark: SparkSession, dir: String,
+      trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
+    val base = Events.load(spark, dir)
+    val us = unix_micros(col("ts"))
+    // median-ts cut (by row mass, not range midpoint — a skewed ts
+    // distribution must not leave one batch near-empty); identical-ts
+    // rows can never straddle the cut, so key+ts tie groups stay
+    // whole-batch and the (ts, event_id) arrival order is global
+    val r = base.agg(min(us), max(us), percentile_approx(us, lit(0.5), lit(10000)))
+      .head()
+    val (minUs, maxUs, midUs) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    // watermark > full event-time span => zero evictions mid-replay
+    val wmSec = (maxUs - minUs) / 1000000L + 3600L
+    def stage(in: Path): Unit = {
       val t0 = System.currentTimeMillis()
-      def stage(cond: Column, name: String, mtimeMs: Long): Unit = {
-        val d = in.resolve(s"__$name")
-        base.where(cond).coalesce(1).sortWithinPartitions("ts", "event_id")
-          .write.parquet(d.toString)
-        moveOnlyPart(d, in, s"$name.parquet", mtimeMs)
-      }
-      stage(unix_micros(col("ts")) <= midUs, "data1", t0)
-      stage(unix_micros(col("ts")) > midUs, "data2", t0 + 10000L)
-      val out = runProcessingTime(spark, in,
-        s => graft.ops.Dedup.streamingExact(s, "ts", s"$wmSec seconds",
-          Seq("user_id", "event_type")), "append", intervalMs, maxWaitMs)
-      dedupResult(out)
-    } finally deleteRec(in)
-  }
-
-  /** Canonical projection/ordering shared by the dedup runs. */
-  private def dedupResult(out: DataFrame): DataFrame =
-    out.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
+      stagePartitioned(base.withColumn("__b", when(us <= midUs, 1).otherwise(2)),
+        in, "__data",
+        Seq(1 -> ("data1.parquet", t0), 2 -> ("data2.parquet", t0 + 10000L)),
+        sortBy = Seq("ts", "event_id"))
+    }
+    run(spark, dir, "dedup", trigger, "append")(stage)(
+      s => graft.ops.Dedup.streamingExact(s, "ts", s"$wmSec seconds",
+        Seq("user_id", "event_type")))
+      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy("user_id", "event_type")
+  }
 }

@@ -32,11 +32,12 @@ class ComparatorSelftestSpec extends AnyFunSuite {
     val code = p.waitFor()
     assert(code == 0,
       s"check_local_selftest.py failed (exit $code):\n$out")
-    // the three pinned cases must each have run — an early exit that
+    // the pinned cases must each have run — an early exit that
     // happens to return 0 must not read as coverage
     Seq("array output trips DRIVER_CRASH",
         "single-column array output trips DRIVER_CRASH",
-        "to_json scalar projection passes").foreach { marker =>
+        "to_json scalar projection passes",
+        "oracle key without output dir trips MISSING_OUTPUT").foreach { marker =>
       assert(out.contains(marker), s"selftest output missing '$marker':\n$out")
     }
   }

@@ -103,4 +103,34 @@ class MedianAbsDevSpec extends SparkSpec {
       contamination = 0.1, columns = Seq("v")).computeBounds(df, Seq("v"))("v")
     assert(gotI == ((medI - dev9, medI + dev9)))
   }
+  test("Outliers bounds on a spilled column equal the hand-computed " +
+      "two-pass bounds (medianDev's second-pass fallback)") {
+    val rnd = new scala.util.Random(11)
+    // v: ~2000 distinct values, spills at the lowered bound; w: 9
+    // distinct values, stays exact — the fallback must serve v alone
+    val df = (1 to 2000).map(i => (i.toLong,
+      math.rint(rnd.nextGaussian() * 1000) / 4.0, (i % 9).toDouble))
+      .toDF("id", "v", "w")
+    val key = ExactPercentile.MaxDistinctKey
+    spark.conf.set(key, "50")
+    try {
+      val spilledDev = df.agg(ExactPercentile.medianAbsDev(v, 0.5))
+        .head().getStruct(0)
+      assert(spilledDev.isNullAt(1), "v must spill at maxDistinct = 50")
+      def hand(c: String, p: Double) =
+        twoPass(df.select(col(c).as("v")), p)
+      val mz = graft.ops.Outliers("modified_zscore", "cap", 3.0,
+        columns = Seq("v", "w")).computeBounds(df, Seq("v", "w"))
+      val iso = graft.ops.Outliers("isolation_forest", "remove",
+        contamination = 0.1, columns = Seq("v", "w"))
+        .computeBounds(df, Seq("v", "w"))
+      for (c <- Seq("v", "w")) {
+        val (med, mad) = hand(c, 0.5)
+        val half = 3.0 * mad / 0.6745
+        assert(mz(c) == ((med - half, med + half)), s"modified_zscore $c")
+        val (medI, dev9) = hand(c, 0.9)
+        assert(iso(c) == ((medI - dev9, medI + dev9)), s"isolation_forest $c")
+      }
+    } finally spark.conf.unset(key)
+  }
 }

@@ -1,98 +1,55 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.{Events, StreamRuns}
 
-/** Pins the `Trigger.AvailableNow` file-source harness (StreamRuns) —
-  * the deterministic micro-batch decomposition via per-file mtimes, the
+/** Pins the file-source streaming harness (StreamRuns) — the
+  * deterministic micro-batch decomposition via per-file mtimes, the
   * sentinel-batch timeout flush, and the event-time-ordered dedup replay
-  * — against the batch twins at sf0.001. The driver oracle re-checks the
-  * same equalities at sf0.01; this spec catches a harness refactor
-  * between rounds without waiting for a verify cycle. */
+  * — against the batch twins at sf0.001, under both the drain-and-stop
+  * `Trigger.AvailableNow` and a real always-on `Trigger.ProcessingTime`.
+  * The driver oracle re-checks the AvailableNow equalities at sf0.01;
+  * this spec catches a harness refactor between rounds without waiting
+  * for a verify cycle. */
 class StreamRunsSpec extends SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
+  private val always = Trigger.ProcessingTime("200 milliseconds")
 
-  test("tumblingAvailableNow equals batch tumblingStats") {
-    val got = StreamRuns.tumblingAvailableNow(spark, dir).collect().toSeq
-    val want = Events.tumblingStats(Events.load(spark, dir))
+  // tumblingStats already rounds avg_value to 6 dp, like the stream run
+  private def tumblingWant =
+    Events.tumblingStats(Events.load(spark, dir))
       .orderBy("window_start", "event_type").collect().toSeq
-    assert(want.nonEmpty && got == want)
-  }
 
-  test("tumblingProcessingTime (real always-on trigger) equals batch " +
-      "tumblingStats (r15)") {
-    // recentProgress is capped at spark.sql.streaming.numRecentProgressUpdates
-    // (default 100) — far above the ~4 batches the two-file staging plus
-    // empty firings produce before the guard stops the query, so the
-    // consumed-row sum in the stop guard cannot silently undercount
-    val got = StreamRuns.tumblingProcessingTime(spark, dir)
-      .collect().toSeq
-    val want = Events.tumblingStats(Events.load(spark, dir))
-      .select(col("window_start"), col("event_type"), col("n_events"),
-        round(col("avg_value"), 6).as("avg_value"))
-      .orderBy("window_start", "event_type").collect().toSeq
-    assert(want.nonEmpty && got == want)
-  }
-
-  test("hoppingProcessingTime (real always-on trigger) equals batch " +
-      "hoppingStats (r16)") {
-    val got = StreamRuns.hoppingProcessingTime(spark, dir).collect().toSeq
-    val want = Events.hoppingStats(Events.load(spark, dir))
+  private def hoppingWant =
+    Events.hoppingStats(Events.load(spark, dir))
       .orderBy("window_start_sec", "event_type").collect().toSeq
-    assert(want.nonEmpty && got == want)
-  }
 
-  test("sessionizeProcessingTime (real always-on trigger) equals batch " +
-      "sessionize (r16)") {
-    // same multi-event-session precondition as the AvailableNow test:
-    // without it the longest-session cut degrades to the no-merge
-    // midpoint fallback and the wall-clock-boundary merge goes untested
+  /** The batch sessionizer (session_id dropped), after asserting the
+    * precondition for cross-batch-merge coverage: the corpus must have a
+    * multi-event session, so the longest-session cut lands INSIDE a
+    * session and its rows arrive in different data batches. If this ever
+    * fails the run silently degrades to the no-merge range-midpoint
+    * fallback — fail loudly instead. */
+  private def sessionizeWant = {
     val maxDur = Events.sessionize(Events.load(spark, dir))
       .agg(max($"duration_sec")).head().getDouble(0)
     assert(maxDur > 0,
       s"no multi-event session at $dir — the sessionize stream run would " +
         "not exercise a cross-batch session merge")
-    val got = StreamRuns.sessionizeProcessingTime(spark, dir).collect().toSeq
-    val want = Events.sessionize(Events.load(spark, dir))
+    Events.sessionize(Events.load(spark, dir))
       .select($"user_id", $"n_events", $"start_sec", $"duration_sec")
       .orderBy("user_id", "start_sec").collect().toSeq
-    assert(want.nonEmpty && got == want)
   }
 
-  test("sessionizeAvailableNow equals batch sessionize (session_id dropped)") {
-    // Precondition for the cross-batch-merge coverage the r12 split adds:
-    // the corpus must have a multi-event session, so the longest-session
-    // cut lands INSIDE a session and its rows arrive in different data
-    // batches. If this ever fails the run silently degrades to the
-    // no-merge range-midpoint fallback — fail loudly here instead.
-    val maxDur = Events.sessionize(Events.load(spark, dir))
-      .agg(max($"duration_sec")).head().getDouble(0)
-    assert(maxDur > 0,
-      s"no multi-event session at $dir — the sessionize stream run would " +
-        "not exercise a cross-batch session merge")
-    val got = StreamRuns.sessionizeAvailableNow(spark, dir).collect().toSeq
-    val want = Events.sessionize(Events.load(spark, dir))
-      .select($"user_id", $"n_events", $"start_sec", $"duration_sec")
-      .orderBy("user_id", "start_sec").collect().toSeq
-    assert(want.nonEmpty && got == want)
-  }
-
-  test("hoppingAvailableNow equals batch hoppingStats") {
-    val got = StreamRuns.hoppingAvailableNow(spark, dir).collect().toSeq
-    val want = Events.hoppingStats(Events.load(spark, dir))
-      .orderBy("window_start_sec", "event_type").collect().toSeq
-    assert(want.nonEmpty && got == want)
-  }
-
-  test("dedupExactProcessingTime (real always-on trigger) equals the " +
-      "batch stream twin — key state retained across wall-clock " +
-      "batch boundaries (r17)") {
-    // Precondition for the retention coverage: at least one dedup key
-    // must appear on BOTH sides of the median-ts cut, or batch 2 never
-    // consults batch-1 state and the test silently degrades to two
-    // independent dedups. Fail loudly instead.
+  /** The batch stream twin of the exact dedup, after asserting the
+    * precondition for the retention coverage: at least one dedup key
+    * must appear on BOTH sides of the median-ts cut, or batch 2 never
+    * consults batch-1 state and the run silently degrades to two
+    * independent dedups. */
+  private def dedupWant = {
     val ev = Events.load(spark, dir)
       .select($"user_id", $"event_type", unix_micros($"ts").as("us"))
     val midUs = ev.agg(expr("percentile_approx(us, 0.5)")).head().getLong(0)
@@ -101,25 +58,67 @@ class StreamRunsSpec extends SparkSpec {
       .where($"lo" <= midUs && $"hi" > midUs).count()
     assert(straddling > 0,
       s"no dedup key straddles the median-ts cut at $dir — the " +
-        "processing-time run would not exercise cross-batch state retention")
-    val got = StreamRuns.dedupExactProcessingTime(spark, dir).collect().toSeq
-    val want = graft.ops.Dedup
+        "stream run would not exercise cross-batch state retention")
+    graft.ops.Dedup
       .streamTwinExact(Events.load(spark, dir), "ts",
         Seq("user_id", "event_type"), "event_id")
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy("user_id", "event_type").collect().toSeq
+  }
+
+  test("tumblingAvailableNow equals batch tumblingStats") {
+    val got = StreamRuns.tumbling(spark, dir).collect().toSeq
+    val want = tumblingWant
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("tumblingProcessingTime (real always-on trigger) equals batch " +
+      "tumblingStats (r15)") {
+    val got = StreamRuns.tumbling(spark, dir, trigger = always).collect().toSeq
+    val want = tumblingWant
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("hoppingProcessingTime (real always-on trigger) equals batch " +
+      "hoppingStats (r16)") {
+    val got = StreamRuns.hopping(spark, dir, trigger = always).collect().toSeq
+    val want = hoppingWant
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("sessionizeProcessingTime (real always-on trigger) equals batch " +
+      "sessionize (r16)") {
+    val want = sessionizeWant
+    val got = StreamRuns.sessionize(spark, dir, trigger = always)
+      .collect().toSeq
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("sessionizeAvailableNow equals batch sessionize (session_id dropped)") {
+    val want = sessionizeWant
+    val got = StreamRuns.sessionize(spark, dir).collect().toSeq
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("hoppingAvailableNow equals batch hoppingStats") {
+    val got = StreamRuns.hopping(spark, dir).collect().toSeq
+    val want = hoppingWant
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("dedupExactProcessingTime (real always-on trigger) equals the " +
+      "batch stream twin — key state retained across wall-clock " +
+      "batch boundaries (r17)") {
+    val want = dedupWant
+    val got = StreamRuns.dedupExact(spark, dir, trigger = always)
+      .collect().toSeq
     assert(want.nonEmpty && got == want)
   }
 
   test("dedupExactAvailableNow equals the batch stream twin") {
-    val got = StreamRuns.dedupExactAvailableNow(spark, dir).collect().toSeq
-    val want = graft.ops.Dedup
-      .streamTwinExact(Events.load(spark, dir), "ts",
-        Seq("user_id", "event_type"), "event_id")
-      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("user_id"), col("event_type"), col("value"))
-      .orderBy("user_id", "event_type").collect().toSeq
+    val want = dedupWant
+    val got = StreamRuns.dedupExact(spark, dir).collect().toSeq
     assert(want.nonEmpty && got == want)
   }
 
@@ -131,8 +130,8 @@ class StreamRunsSpec extends SparkSpec {
       try s.count() finally s.close()
     }
     def pair(): Unit = {
-      StreamRuns.sessionizeAvailableNow(spark, dir).collect()
-      StreamRuns.dedupExactAvailableNow(spark, dir).collect()
+      StreamRuns.sessionize(spark, dir).collect()
+      StreamRuns.dedupExact(spark, dir).collect()
     }
     pair() // first run opens the jars, pools and local dirs it keeps
     val before = openFds()

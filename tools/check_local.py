@@ -5,7 +5,10 @@ Usage: python3 tools/check_local.py <outDir> [query ...]
 
 Expects `sbt "runMain graft.Verify <sfDir> <outDir>"` (optionally with
 SPARK_GRAFT_ONLY=<names>) to have populated <outDir>/<name>/ parquet and
-<outDir>/oracle_sql.json. Re-runs each oracle SQL in DuckDB over the same
+<outDir>/oracle_sql.json. With no query names it checks every
+oracle_sql.json key and every output dir; a name without an output dir
+is a MISSING_OUTPUT failure (after a SPARK_GRAFT_ONLY run, pass the same
+names). Re-runs each oracle SQL in DuckDB over the same
 sf tables and compares rows/schema/values the way the driver does: columns
 sorted by name, values stringified with float rounding, then hashed.
 
@@ -118,9 +121,12 @@ def main():
     out_dir = sys.argv[1]
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
-    names = sys.argv[2:] or sorted(
+    # With no names: every oracle key plus every output dir. Verify leaves
+    # no dir for a query whose build failed, so listing only the dirs
+    # would drop that query from the report instead of failing it.
+    names = sys.argv[2:] or sorted(set(oracles) | {
         d for d in os.listdir(out_dir)
-        if os.path.isdir(os.path.join(out_dir, d)))
+        if os.path.isdir(os.path.join(out_dir, d))})
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():
@@ -130,6 +136,11 @@ def main():
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     fails = 0
     for name in names:
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"{name}: MISSING_OUTPUT no {name}/ dir under {out_dir} "
+                  f"(its Verify build failed or never ran)")
+            fails += 1
+            continue
         if name not in oracles:
             print(f"{name}: NO_ORACLE (rows-only check)")
             continue

@@ -8,6 +8,8 @@ asserts the failure mode can never regress silently:
 
   1. an array-typed output column must FAIL (DRIVER_CRASH, exit 1)
   2. the same data projected to a scalar (to_json) must PASS (exit 0)
+  3. with no query names, an oracle key whose output dir is missing
+     (its Verify build failed) must FAIL (MISSING_OUTPUT, exit 1)
 
 Run: python3 tools/check_local_selftest.py   (exits non-zero on failure)
 """
@@ -19,18 +21,20 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 CHECK = os.path.join(HERE, "check_local.py")
 
 
-def run_case(tmp, name, spark_sql, oracle_sql):
+def run_case(tmp, name, spark_sql, oracle_sql, extra_oracles=None,
+             names=None):
     """Write <tmp>/<name>/part.parquet from spark_sql and an
-    oracle_sql.json, then run check_local on it."""
+    oracle_sql.json ({name: oracle_sql} plus extra_oracles), then run
+    check_local on it with `names` (default: [name])."""
     qdir = os.path.join(tmp, name)
     os.makedirs(qdir, exist_ok=True)
     con = duckdb.connect()
     con.execute(f"COPY ({spark_sql}) TO '{qdir}/part.parquet' (FORMAT PARQUET)")
     con.close()
     with open(os.path.join(tmp, "oracle_sql.json"), "w") as f:
-        json.dump({name: oracle_sql}, f)
+        json.dump({name: oracle_sql, **(extra_oracles or {})}, f)
     return subprocess.run(
-        [sys.executable, CHECK, tmp, name],
+        [sys.executable, CHECK, tmp] + ([name] if names is None else names),
         capture_output=True, text=True)
 
 
@@ -82,6 +86,23 @@ def main():
             ok = False
         else:
             print("ok: to_json scalar projection passes")
+
+    with tempfile.TemporaryDirectory() as tmp:
+        # Case 3: no names given; q_failed has an oracle but no output dir
+        # (Verify deletes a failed query's dir). It must fail the run, not
+        # drop out of the report.
+        r = run_case(tmp, "q_ok", "SELECT 1::BIGINT AS id",
+                     "SELECT 1::BIGINT AS id",
+                     extra_oracles={"q_failed": "SELECT 1::BIGINT AS id"},
+                     names=[])
+        if (r.returncode == 0 or "q_failed: MISSING_OUTPUT" not in r.stdout
+                or "q_ok: OK (1 rows)" not in r.stdout):
+            print("FAIL: an oracle key without an output dir did not trip "
+                  "MISSING_OUTPUT")
+            print(r.stdout, r.stderr)
+            ok = False
+        else:
+            print("ok: oracle key without output dir trips MISSING_OUTPUT")
 
     sys.exit(0 if ok else 1)
 

@@ -27,10 +27,10 @@ object Dedup {
     * `keys` is the duplicate identity — e.g. a content fingerprint
     * column ([[graft.text.TextAnalysis.fingerprint]]) for near-exact
     * document dedup at ingest time. Calls
-    * [[graft.streaming.Checkpoints.install]] for the stream's session. */
+    * [[graft.streaming.StreamSetup.install]] for the stream's session. */
   def streamingExact(stream: DataFrame, tsCol: String, watermark: String,
       keys: Seq[String]): DataFrame = {
-    graft.streaming.Checkpoints.install(stream.sparkSession)
+    graft.streaming.StreamSetup.install(stream.sparkSession)
     stream.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keys)
   }

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types._
   * The batch forms here are SQL-expressible (oracle-able); the same
   * transforms run under Structured Streaming via [[streamingTumbling]]
   * (groupBy window + watermark) — identical logical plan, incremental
-  * execution. Every streaming builder calls [[Checkpoints.install]], so
-  * the session's queries checkpoint through
-  * [[LocalCheckpointFileManager]] unless the session names another
-  * manager.
+  * execution. Every streaming builder calls [[StreamSetup.install]], so
+  * unless the session sets them itself, its queries checkpoint through
+  * [[LocalCheckpointFileManager]] and run without per-session class
+  * loaders (a restarted stream reuses the classes an earlier one
+  * compiled).
   */
 object Events {
 
@@ -79,7 +80,7 @@ object Events {
     * the caller's sink choice. */
   def streamingTumbling(stream: DataFrame, width: String = "1 hour",
       watermark: String = "2 hours"): DataFrame = {
-    Checkpoints.install(stream.sparkSession)
+    StreamSetup.install(stream.sparkSession)
     stream.withWatermark("ts", watermark)
       .groupBy(window(col("ts"), width).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), avg(col("value")).as("avg_value"))
@@ -93,7 +94,7 @@ object Events {
     * states; late data inside the watermark merges into both). */
   def streamingHopping(stream: DataFrame, width: String = "1 hour",
       slide: String = "30 minutes", watermark: String = "2 hours"): DataFrame = {
-    Checkpoints.install(stream.sparkSession)
+    StreamSetup.install(stream.sparkSession)
     stream.withWatermark("ts", watermark)
       .groupBy(window(col("ts"), width, slide).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), avg(col("value")).as("avg_value"))
@@ -113,7 +114,7 @@ object Events {
       : org.apache.spark.sql.Dataset[SessionOut] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = stream.sparkSession
-    Checkpoints.install(spark)
+    StreamSetup.install(spark)
     import spark.implicits._
     def emit(uid: Long, st: SessionState): SessionOut =
       SessionOut(uid, st.n, st.start / 1e6, (st.last - st.start) / 1e6)

@@ -11,28 +11,9 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem,
   LocalFileSystem, Path, PathFilter, RawLocalFileSystem,
   UnsupportedFileSystemException}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileContextBasedCheckpointFileManager,
   FileSystemBasedCheckpointFileManager}
-
-/** Streaming checkpoint setup shared by every streaming builder. */
-object Checkpoints {
-
-  /** Spark's pluggable checkpoint-manager setting, read by
-    * `CheckpointFileManager.create` for the offsets/commits logs and the
-    * state store alike. */
-  val ManagerClassKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Select [[LocalCheckpointFileManager]] for the session's streaming
-    * queries, unless the session already names a manager. Idempotent; a
-    * query latches the setting when it starts, so call it before
-    * `start()` (the builders in [[Events]] and
-    * [[graft.ops.Dedup.streamingExact]] do). */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ManagerClassKey).isEmpty)
-      spark.conf.set(ManagerClassKey, classOf[LocalCheckpointFileManager].getName)
-}
 
 /** A `CheckpointFileManager` that writes local checkpoints without
   * starting OS processes.

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Bounded runs of the streaming operators over the real events table,
   * shaped as batch-returning query functions so the DRIVER ORACLE sees
@@ -59,7 +60,7 @@ object StreamRuns {
     * runs end in a MEMORY sink and the checkpoint is discarded with the
     * query, so durability buys nothing; a production always-on stream
     * keeps its checkpoint on durable storage. The streaming builders
-    * install [[LocalCheckpointFileManager]] ([[Checkpoints.install]]),
+    * install [[LocalCheckpointFileManager]] ([[StreamSetup.install]]),
     * which writes the checkpoint files without starting a process. */
   private def checkpointBase: String =
     if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
@@ -76,18 +77,20 @@ object StreamRuns {
     }
   }
 
-  /** Stage the events of `dir` with `stage(in)`, then run `build(stream)`
-    * over a file-source stream of `in`'s parquet files — one file per
-    * micro-batch — into a memory sink under `trigger`, drain it with
-    * `processAllAvailable()` and return the sink table. */
+  /** Stage the events of `dir` with `stage(in)`, which returns the schema
+    * of the files it wrote, then run `build(stream)` over a file-source
+    * stream of `in`'s parquet files — one file per micro-batch — into a
+    * memory sink under `trigger`, drain it with `processAllAvailable()`
+    * and return the sink table. The stream reads nullable fields whatever
+    * the staged schema says (`spark.sql.streaming.fileSource.schema.
+    * forceNullable`), as it would with a schema read back from the files. */
   private def run(spark: SparkSession, dir: String, kind: String,
-      trigger: Trigger, outputMode: String)(stage: Path => Unit)(
+      trigger: Trigger, outputMode: String)(stage: Path => StructType)(
       build: DataFrame => DataFrame): DataFrame = {
     val in = scratch("/tmp", s"stream_$kind", dir)
     val ckpt = scratch(checkpointBase, s"ckpt_$kind", dir)
     try {
-      stage(in)
-      val schema = spark.read.parquet(in.toString).schema
+      val schema = stage(in)
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(in.toString)
       val name = s"graft_stream_sink_${calls.incrementAndGet()}"
@@ -141,9 +144,10 @@ object StreamRuns {
     * move each batch's single part-file into `destDir` under its target
     * name/mtime. A batch value with no rows (possible only on degenerate
     * corpora) still stages an EMPTY file of `df`'s schema — the
-    * micro-batch decomposition must not silently lose a planned batch. */
+    * micro-batch decomposition must not silently lose a planned batch.
+    * Returns the schema of the staged files: `df`'s without `__b`. */
   private def stagePartitioned(df: DataFrame, destDir: Path, scratchName: String,
-      batches: Seq[(Int, (String, Long))], sortBy: Seq[String] = Nil): Unit = {
+      batches: Seq[(Int, (String, Long))], sortBy: Seq[String] = Nil): StructType = {
     Files.createDirectories(destDir)
     val d = destDir.resolve(scratchName)
     df.repartition(1).sortWithinPartitions(("__b" +: sortBy).map(col): _*)
@@ -158,6 +162,7 @@ object StreamRuns {
       }
     }
     deleteRec(d)
+    df.drop("__b").schema
   }
 
   /** Stage the events table's (ts, event_type, value) projection into
@@ -169,10 +174,9 @@ object StreamRuns {
     * fixed cost per extra micro-batch (measured); the deeper
     * 4-shuffled-batch equivalence is StreamingSpec's job. */
   private def stageTwoShuffledBatches(spark: SparkSession, dir: String)(
-      in: Path): Unit = {
-    Events.load(spark, dir)
-      .select("ts", "event_type", "value")
-      .repartition(2).write.parquet(in.toString)
+      in: Path): StructType = {
+    val events = Events.load(spark, dir).select("ts", "event_type", "value")
+    events.repartition(2).write.parquet(in.toString)
     val s = Files.list(in)
     val parts =
       try s.filter(_.getFileName.toString.startsWith("part-"))
@@ -182,6 +186,7 @@ object StreamRuns {
     parts.zipWithIndex.foreach { case (p, i) =>
       Files.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 10000L))
     }
+    events.schema
   }
 
   /** [[Events.streamingTumbling]] over two shuffled micro-batches
@@ -254,7 +259,7 @@ object StreamRuns {
     * inside the longest batch-side session, then two far-future sentinel
     * batches. */
   private def stageSessionizeBatches(spark: SparkSession, dir: String,
-      gapSeconds: Long)(in: Path): Unit = {
+      gapSeconds: Long)(in: Path): StructType = {
     import spark.implicits._
     val base = Events.load(spark, dir).select("user_id", "ts", "event_id")
     // ONE sessionizer pass yields the min event time = min(start_sec),
@@ -282,7 +287,7 @@ object StreamRuns {
     // micro-batch — only the FILE split (ts vs midMs) and the mtime order
     // carry semantics.
     val mid = new java.sql.Timestamp(midMs)
-    stagePartitioned(
+    val schema = stagePartitioned(
       base.withColumn("__b", when(col("ts") <= mid, 1).otherwise(2)),
       in, "__data",
       Seq(1 -> ("data1.parquet", t0), 2 -> ("data2.parquet", t0 + 10000L)))
@@ -297,6 +302,7 @@ object StreamRuns {
     stagePartitioned(sentinels, in, "__s",
       Seq(1 -> ("sentinel1.parquet", t0 + 20000L),
         2 -> ("sentinel2.parquet", t0 + 30000L)))
+    schema
   }
 
   /** [[graft.ops.Dedup.streamingExact]] replayed in event-time arrival
@@ -325,7 +331,7 @@ object StreamRuns {
     val (minUs, maxUs, midUs) = (r.getLong(0), r.getLong(1), r.getLong(2))
     // watermark > full event-time span => zero evictions mid-replay
     val wmSec = (maxUs - minUs) / 1000000L + 3600L
-    def stage(in: Path): Unit = {
+    def stage(in: Path): StructType = {
       val t0 = System.currentTimeMillis()
       stagePartitioned(base.withColumn("__b", when(us <= midUs, 1).otherwise(2)),
         in, "__data",

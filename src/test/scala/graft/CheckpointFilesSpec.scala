@@ -12,6 +12,7 @@ import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException,
   Path => HPath}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileContextBasedCheckpointFileManager}
@@ -20,14 +21,18 @@ import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ops.Dedup
-import graft.streaming.{Checkpoints, Events, LocalCheckpointFileManager}
+import graft.streaming.{Events, LocalCheckpointFileManager, StreamSetup}
 
-/** Pins [[LocalCheckpointFileManager]]: local streaming checkpoints start
-  * no `chmod`/`readlink` process, and hold the same files, rows, restart
-  * and checksum behaviour as under Spark's default `FileContext` manager. */
+/** Pins the streaming builders' session setup ([[StreamSetup]]). Under
+  * [[LocalCheckpointFileManager]], local streaming checkpoints start no
+  * `chmod`/`readlink` process, and hold the same files, rows, restart and
+  * checksum behaviour as under Spark's default `FileContext` manager.
+  * With class-loader isolation off, a restarted stream compiles no class
+  * its first run compiled. */
 class CheckpointFilesSpec extends SparkSpec {
 
-  private val key = Checkpoints.ManagerClassKey
+  private val key = StreamSetup.ManagerClassKey
+  private val isolation = StreamSetup.IsolationKey
   private val fileContext = classOf[FileContextBasedCheckpointFileManager].getName
   private val local = classOf[LocalCheckpointFileManager].getName
   private val queries = new AtomicInteger(0)
@@ -98,13 +103,13 @@ class CheckpointFilesSpec extends SparkSpec {
     finally spark.catalog.dropTempView(name)
   }
 
-  /** Runs `body` with the session's manager setting at `cls` (unset for
-    * `None`), then restores the previous value. */
-  private def withManager[A](cls: Option[String])(body: => A): A = {
-    val prev = spark.conf.getOption(key)
-    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  /** Runs `body` with the session's setting `k` at `v` (unset for
+    * `None`), then restores the session's own value, or none. */
+  private def withConf[A](k: String, v: Option[String])(body: => A): A = {
+    val prev = spark.conf.getAll.get(k)
+    v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
   private def dedup(in: Path): DataFrame =
@@ -131,7 +136,7 @@ class CheckpointFilesSpec extends SparkSpec {
     val in = inputDir(3)
     val ckpt = Files.createTempDirectory("graft_ckpt_spec_spawn")
     val jfr = Files.createTempFile("graft_ckpt_spec", ".jfr")
-    try withManager(None) {
+    try withConf(key, None) {
       // only this JVM's process starts are recorded
       val rec = new Recording()
       try {
@@ -163,7 +168,7 @@ class CheckpointFilesSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_ckpt_spec_parity")
     try {
       val runs = Seq(fileContext, local).map { cls =>
-        withManager(Some(cls)) {
+        withConf(key, Some(cls)) {
           val dir = ckpt.resolve(cls.split('.').last)
           val (rows, _) = drain(dedup(in), dir)
           (rows, checkpointFiles(dir))
@@ -181,7 +186,7 @@ class CheckpointFilesSpec extends SparkSpec {
     val in = inputDir(3)
     val ckpt = Files.createTempDirectory("graft_ckpt_spec_restart")
     try Seq(fileContext, local).foreach { cls =>
-      withManager(Some(cls)) {
+      withConf(key, Some(cls)) {
         val dir = ckpt.resolve(cls.split('.').last)
         drain(windowCounts(Events.streamingTumbling(stream(in))), dir, "complete")
         stage(in, 3)
@@ -203,7 +208,7 @@ class CheckpointFilesSpec extends SparkSpec {
     val in = inputDir(3)
     val ckpt = Files.createTempDirectory("graft_ckpt_spec_corrupt")
     try Seq(fileContext -> false, local -> true).foreach { case (cls, checksum) =>
-      withManager(Some(cls)) {
+      withConf(key, Some(cls)) {
         val dir = ckpt.resolve(cls.split('.').last)
         def run() = drain(windowCounts(Events.streamingTumbling(stream(in))),
           dir, "complete")
@@ -251,15 +256,47 @@ class CheckpointFilesSpec extends SparkSpec {
 
   test("install keeps a session's own manager and fills an unset one") {
     val in = Files.createTempDirectory("graft_ckpt_spec_keep")
-    try withManager(Some(fileContext)) {
+    try withConf(key, Some(fileContext)) {
       Events.streamingTumbling(stream(in))
       assert(spark.conf.get(key) == fileContext)
     } finally deleteTree(in)
-    withManager(None) {
-      Checkpoints.install(spark)
-      Checkpoints.install(spark)
+    withConf(key, None) {
+      StreamSetup.install(spark)
+      StreamSetup.install(spark)
       assert(spark.conf.get(key) == local)
     }
+  }
+
+  test("install turns class-loader isolation off unless the session set it") {
+    withConf(isolation, Some("true")) {
+      StreamSetup.install(spark)
+      assert(spark.conf.get(isolation) == "true")
+    }
+    withConf(isolation, None) {
+      // an unset key reads as Spark's default, so only getAll tells
+      // "unset" from an explicit true
+      assert(spark.conf.getOption(isolation).contains("true"))
+      StreamSetup.install(spark)
+      StreamSetup.install(spark)
+      assert(spark.conf.getAll.get(isolation).contains("false"))
+    }
+  }
+
+  test("a restarted stream compiles no class its first run compiled") {
+    val in = inputDir(3)
+    val ckpt = Files.createTempDirectory("graft_ckpt_spec_codegen")
+    // same files, fresh checkpoint: each start runs on a new cloned session
+    def compiles(run: Int): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      drain(Events.streamingSessionize(stream(in), 1800).toDF(),
+        ckpt.resolve(s"run$run"))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    try withConf(isolation, None) {
+      val first = compiles(1)
+      val second = compiles(2)
+      assert(second == 0, s"the restart compiled $second classes (first run $first)")
+    } finally Seq(in, ckpt).foreach(deleteTree)
   }
 
   test("the local route is chosen by the resolved scheme") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.JobCount
+
 import graft.dedup.NearDup
 
 /** Property check for cluster resolution: on random pair graphs, the
@@ -80,5 +82,22 @@ class ClustersPropSpec extends SparkSpec {
       assert(got == expected,
         s"distributed=$forceDistributed: $got")
     }
+  }
+
+  test("driver-path clusters over a cached pair frame runs 6 jobs") {
+    // the routing count (2 jobs), the edge collect (1) and the count that
+    // materializes the driver-built labels (3). Dropping that count, so
+    // the cache fills on the caller's first action, measured slower on
+    // the llm_corpus benchmark pass, though it saves 3 jobs here.
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b").persist()
+    try {
+      pairs.count()
+      val (labels, jobs) = JobCount(spark.sparkContext)(NearDup.clusters(pairs))
+      try {
+        assert(jobs == 6, s"$jobs jobs")
+        assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      } finally labels.unpersist(false)
+    } finally pairs.unpersist(false)
   }
 }

@@ -73,15 +73,10 @@ object StageProbe {
         jobCount.incrementAndGet()
     })
 
-    // r22 attribution: cumulative whole-stage-codegen compile cost
-    // (count × mean over the metrics histogram — close enough for deltas)
-    // so "cold run is slow but its stages are fast" separates into janino
-    // compile vs driver planning vs task work.
-    def codegenMs(): Long = {
-      val h = org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME
-      (h.getCount * h.getSnapshot.getMean).toLong
-    }
+    // generated classes compiled so far, JVM-wide: the per-phase delta
+    // tells a cold run's Janino work from its planning and task work.
+    // Counts only: count × the histogram's mean is not a time (the mean
+    // is over a decaying sample, so deltas of it can go negative).
     def codegenN(): Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
 
@@ -90,12 +85,12 @@ object StageProbe {
       // the construction phase is TIMED (r22): self-materializing queries
       // (pair operators, streaming runs) execute their pipeline here, so
       // for them this is the true first-run cost in this JVM
-      val c0n = codegenN(); val c0 = codegenMs(); val j0 = jobCount.get()
+      val c0n = codegenN(); val j0 = jobCount.get()
       val tC = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, dir)
       val constructS = (System.nanoTime() - tC) / 1e9
       println(f"[probe] $name%-28s construct ${constructS}%8.3f s " +
-        f"(codegen +${codegenMs() - c0}%d ms/${codegenN() - c0n}%d units, " +
+        f"(codegen +${codegenN() - c0n}%d compiles, " +
         f"jobs +${jobCount.get() - j0}%d)")
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(
@@ -105,7 +100,7 @@ object StageProbe {
         val before = graft.util.CacheHygiene.snapshot(spark)
         collecting = i == iters
         if (collecting) stages.clear()
-        val cgN0 = codegenN(); val cg0 = codegenMs(); val jb0 = jobCount.get()
+        val cgN0 = codegenN(); val jb0 = jobCount.get()
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
@@ -113,7 +108,7 @@ object StageProbe {
         collecting = false
         graft.util.CacheHygiene.releaseNew(spark, before)
         println(f"[probe] $name%-28s iter$i ${last}%8.3f s " +
-          f"(codegen +${codegenMs() - cg0}%d ms/${codegenN() - cgN0}%d units, " +
+          f"(codegen +${codegenN() - cgN0}%d compiles, " +
           f"jobs +${jobCount.get() - jb0}%d)")
       }
       import scala.jdk.CollectionConverters._

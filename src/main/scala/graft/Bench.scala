@@ -165,18 +165,22 @@ object Bench {
     * (targeted regex — only q_-prefixed keys can match a query name).
     * `requireSf` rejects a results file recorded at a different sf, and
     * `requireCpus` one recorded on a different core count (or with no
-    * `cpus` field).
+    * `cpus` field), and `requireXmx` one recorded with a different driver
+    * heap ceiling in MiB (or with no `xmx_mb` field).
     * Entries named in the file's "failed" list are EXCLUDED: a results
     * file records a crashed query's elapsed-to-crash in its queries map,
     * and a failure time must never become a re-time baseline (min-only
     * history updates could never recover from it). */
   private[graft] def parseQueryTimes(txt: String,
       requireSf: Option[String],
-      requireCpus: Option[String] = None): Map[String, Double] = {
+      requireCpus: Option[String] = None,
+      requireXmx: Option[Long] = None): Map[String, Double] = {
     def field(name: String) =
       ("\"" + name + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt).map(_.group(1))
     val sfOk = requireSf.forall(sf => field("sf").contains(sf))
     val cpusOk = requireCpus.forall(c => field("cpus").contains(c))
+    val xmxOk = requireXmx.forall(x => "\"xmx_mb\"\\s*:\\s*(\\d+)".r
+      .findFirstMatchIn(txt).exists(_.group(1).toLong == x))
     // Codec guard (r19 ADVICE): a file that self-declares a non-default
     // shuffle codec (SPARK_GRAFT_CODEC=zstd runs) must never seed an lz4
     // baseline — zstd's tighter spill compression makes the pair monsters
@@ -186,7 +190,7 @@ object Bench {
     // written by lz4 runs, see main()) pass.
     val codecOk = "\"codec\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
       .forall(_.group(1) == "lz4")
-    if (!sfOk || !cpusOk || !codecOk) Map.empty
+    if (!sfOk || !cpusOk || !xmxOk || !codecOk) Map.empty
     else {
       val crashed: Set[String] =
         "\"failed\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
@@ -315,6 +319,7 @@ object Bench {
     // must not read as load)
     SparkEntry.sweepDeadScratch(sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val xmxMb = Runtime.getRuntime.maxMemory >> 20
     val codec = sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -425,13 +430,13 @@ object Bench {
     })
     val prev: Map[String, Double] = {
       def parse(path: String, requireSf: Option[String],
-          requireCpus: Option[String] = None) =
+          requireCpus: Option[String] = None, requireXmx: Option[Long] = None) =
         try parseQueryTimes(
           java.nio.file.Files.readString(java.nio.file.Paths.get(path)),
-          requireSf, requireCpus)
+          requireSf, requireCpus, requireXmx)
         catch { case _: Throwable => Map.empty[String, Double] }
       val h = parse(histFile, None)
-      if (h.nonEmpty) h else parse(outFile, Some(sfDir), Some(cpus))
+      if (h.nonEmpty) h else parse(outFile, Some(sfDir), Some(cpus), Some(xmxMb))
     }
 
     val loadBefore = loadAvg()
@@ -667,7 +672,7 @@ object Bench {
         s""""persistent_rdds_end":$rddsLeft,"cpus":"$cpus",""" +
         // driver heap ceiling (-Xmx): history from differently sized
         // drivers must not be compared as one host shape
-        s""""xmx_mb":${Runtime.getRuntime.maxMemory >> 20},"sf":"$sfDir"}"""
+        s""""xmx_mb":$xmxMb,"sf":"$sfDir"}"""
     }
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fileJson)
     catch { case e: Throwable =>

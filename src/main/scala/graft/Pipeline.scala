@@ -62,7 +62,11 @@ final case class PipelineReport(stages: Seq[StageReport]) {
   * A request small enough to be one input split is planned as a single
   * partition first ([[graft.util.Parallelize.singleSplit]]), so each fit
   * job, the dedup and the caller's final action run as one stage with no
-  * exchange; a larger input is planned as it comes.
+  * exchange; a larger input is planned as it comes. A request under the
+  * gate's interpreted bound also runs with no code generation: the
+  * returned frame belongs to its session's interpreted child
+  * ([[org.apache.spark.sql.InterpretedSession]]), so the fits and the
+  * caller's write over it execute interpreted as well.
   */
 object Pipeline {
   def run(df: DataFrame, config: PipelineConfig): (DataFrame, PipelineReport) = {

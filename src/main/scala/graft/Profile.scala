@@ -21,7 +21,9 @@ import graft.util.Parallelize
   * count a map-stage job for the dedup exchange, one for the count's gather
   * and a result job, the sample one job. A one-split input is planned as a
   * single partition ([[graft.util.Parallelize.singleSplit]]), so no
-  * exchange is planned and the profile is 3 single-stage jobs.
+  * exchange is planned and the profile is 3 single-stage jobs; under the
+  * gate's interpreted bound those jobs also run without whole-stage or
+  * expression code generation.
   */
 object Profile {
   /** Sentinel strings the reference treats as missing (`pipeline.py:437-441`). */

@@ -41,7 +41,8 @@ object Csv {
     * The coalesce is narrow: the write's last stage runs as one task,
     * after any exchange the plan already has. A frame from
     * [[graft.Pipeline.run]] over a one-split request is already one
-    * partition with no exchange, so its write is one single-stage job. */
+    * partition with no exchange, so its write is one single-stage job,
+    * interpreted under the gate's interpreted bound. */
   def write(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
     out.write.mode("overwrite").option("header", "true").csv(path)

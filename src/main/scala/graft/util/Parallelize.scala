@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, InterpretedSession}
 import org.apache.spark.sql.functions.col
 
 /** Size gates that choose a frame's partitioning from the optimizer's
@@ -35,6 +35,20 @@ import org.apache.spark.sql.functions.col
   * runs as one single-stage job instead of a map-stage job plus a result
   * job. The cleaning entry points ([[graft.Pipeline.run]],
   * [[graft.Profile.apply]]) apply it to the raw request.
+  *
+  * A one-split frame whose estimate is also at most [[InterpretedBytes]]
+  * is rebound to its session's interpreted child
+  * ([[org.apache.spark.sql.InterpretedSession]]), so it and every frame
+  * derived from it (each fit, the sanitizer, the cleaned result and the
+  * caller's write) run with no code generation. On a request this small
+  * Spark's fixed compile cost dominates: each fit job compiled a
+  * 1,800–2,100-line whole-stage class for the replayed prefix and the
+  * final write 3,800–4,800 lines, each compiled on the driver and again in
+  * the task, for a few thousand rows of work. The bound is not
+  * `openCostInBytes`: at Spark's 4 MB default a nine-operator request runs
+  * slower interpreted than compiled (the crossover table is in ROADMAP,
+  * "Cut the fixed cost per query"). It is a constant, not a conf key, and
+  * a session whose open cost is lower applies the lower of the two.
   */
 object Parallelize {
 
@@ -64,16 +78,26 @@ object Parallelize {
   }
 
   /** `df.coalesce(1)` when the size estimate is at most one file open
-    * cost (see object doc); `df` itself otherwise. */
+    * cost, rebound to the session's interpreted child when it is also at
+    * most [[InterpretedBytes]] (see object doc); `df` itself otherwise. */
   def singleSplit(df: DataFrame): DataFrame = {
     val openCost = df.sparkSession.sessionState.conf.filesOpenCostInBytes
     val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val fire = estBytes <= BigInt(openCost)
-    log.info(s"singleSplit gate ${if (fire) "FIRES" else "skips"}: est=$estBytes" +
-      s" vs $openCost")
-    if (fire) df.coalesce(1)
+    val interpret = estBytes <= BigInt(math.min(openCost, InterpretedBytes))
+    val side = if (interpret) "FIRES, interpreted" else if (fire) "FIRES, compiled" else "skips"
+    log.info(s"singleSplit gate $side: est=$estBytes vs $openCost" +
+      s" (interpreted up to $InterpretedBytes)")
+    if (interpret) InterpretedSession(df.coalesce(1))
+    else if (fire) df.coalesce(1)
     else df
   }
+
+  /** The largest one-split estimate that runs without code generation.
+    * Measured crossover of the nine-operator request (ROADMAP, "Cut the
+    * fixed cost per query"): interpreting won every run at this size,
+    * split the runs at 512 KiB and lost from 1 MiB on. */
+  private[graft] val InterpretedBytes: Long = 256L << 10
 
   private lazy val log =
     org.slf4j.LoggerFactory.getLogger(Parallelize.getClass)

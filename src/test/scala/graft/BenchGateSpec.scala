@@ -168,4 +168,21 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.parseQueryTimes(file(""), sf, Some("4")).isEmpty,
       "a results file without a host shape cannot prove its core count")
   }
+
+  test("the results-file fallback only seeds from the same driver heap " +
+      "ceiling") {
+    def file(xmxField: String) =
+      """{"metric":"total","value":9,"unit":"sec",""" +
+        """"queries":{"q_a":2.0},"failed":[],"cpus":"4",""" + xmxField +
+        """"sf":"/data/sf0.1"}"""
+    val sf = Some("/data/sf0.1")
+    assert(Bench.parseQueryTimes(file("\"xmx_mb\":7168,"), sf, Some("4"),
+      Some(7168L)) == Map("q_a" -> 2.0))
+    assert(Bench.parseQueryTimes(file("\"xmx_mb\":49152,"), sf, Some("4"),
+      Some(7168L)).isEmpty, "a 48 GB driver's times must not seed a 7 GB baseline")
+    assert(Bench.parseQueryTimes(file(""), sf, Some("4"), Some(7168L)).isEmpty,
+      "a results file without xmx_mb cannot prove its heap ceiling")
+    // histories carry no host shape and are read without the requirement
+    assert(Bench.parseQueryTimes(file(""), sf, Some("4")) == Map("q_a" -> 2.0))
+  }
 }

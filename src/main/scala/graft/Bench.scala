@@ -155,11 +155,13 @@ object Bench {
   }
 
   /** Default history file name for a run: keyed by the sf directory's
-    * name AND the core count. Histories min-merge cold first runs, so a
-    * run on fewer cores must neither read nor lower another host
-    * shape's floors. */
-  private[graft] def historyFileName(sfDir: String, cpus: String): String =
-    s"bench_history_${new java.io.File(sfDir).getName}_c$cpus.json"
+    * name, the core count AND the driver heap ceiling in MiB (the
+    * `xmx_mb` the results file records). Histories min-merge cold first
+    * runs, so a run on fewer cores or a smaller heap must neither read
+    * nor lower another host shape's floors. */
+  private[graft] def historyFileName(sfDir: String, cpus: String,
+      xmxMb: Long): String =
+    s"bench_history_${new java.io.File(sfDir).getName}_c${cpus}_x$xmxMb.json"
 
   /** Per-query seconds from a history or results-file JSON text we wrote
     * (targeted regex — only q_-prefixed keys can match a query name).
@@ -321,22 +323,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val xmxMb = Runtime.getRuntime.maxMemory >> 20
     val codec = sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Split size scaled to the corpus (the knob a real deployment
-      // tunes per table size): the bench tables are 0.5 MB-350 MB, so
-      // the 128 MB default put whole tables in ONE scan task and
-      // serialized every no-shuffle stage (r15 finding — text-kernel
-      // scaling ratios measured a single task's GC, not the engine).
-      // 2 MB yields 5-170 splits on the multi-row-group bench files; at
-      // real 100 TB scale files are 256 MB-1 GB and the default is
-      // right — this is a local-bench-scale setting, not a library one.
-      .config("spark.sql.files.maxPartitionBytes", (2L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (256L << 10).toString)
+    val spark = graft.util.Sessions.local(cpus.toInt)
       // Shuffle/spill codec override (r19): the sf10 pair monsters
       // spill 69+ GB of lz4 shuffle at 32 cores — more than this
       // host's free disk. zstd compresses the highly-redundant pair
@@ -404,10 +391,10 @@ object Bench {
 
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // Reference times for the contention re-time below: the best-known
-    // per-query seconds at this sf and core count, persisted IN THE REPO
+    // per-query seconds at this sf, core count and heap, persisted IN THE REPO
     // (so it survives across rounds even when each round gets a fresh
     // results path) and seeded/updated after every run. Falls back to a
-    // previous results file of the same sf and core count. We wrote both
+    // previous results file of the same sf, core count and heap. We wrote both
     // formats, so a targeted regex is a safe parse; only q_-prefixed keys
     // can match a query name.
     // The default history path is repo-root-anchored, not CWD-relative:
@@ -426,7 +413,7 @@ object Bench {
           s"[bench] no build.sbt above $cwd; bench history is CWD-relative")
         cwd
       }
-      new java.io.File(root, historyFileName(sfDir, cpus)).getPath
+      new java.io.File(root, historyFileName(sfDir, cpus, xmxMb)).getPath
     })
     val prev: Map[String, Double] = {
       def parse(path: String, requireSf: Option[String],

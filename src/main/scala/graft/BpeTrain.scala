@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI BPE trainer: learn a merge list from a parquet corpus and print
   * it one `left right` pair per line ([[graft.text.Bpe.parseMergeLines]]
   * format). This is how frozen vocabularies are minted — the
@@ -24,12 +22,8 @@ object BpeTrain {
     val sfDir = args(0)
     val numMerges = args(1).toInt
     val bigrams = args.contains("--bigrams")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.util.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")

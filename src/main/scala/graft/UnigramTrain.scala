@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI unigram-LM cost trainer: Viterbi-EM piece costs over a parquet
   * corpus, printed one `piece<TAB>cost` line per piece
   * ([[graft.text.UnigramLearned]]'s resource format). This is how the
@@ -23,12 +21,8 @@ object UnigramTrain {
     val sfDir = args(0)
     val iters = args(1).toInt
     val bigrams = args.contains("--bigrams")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.util.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")

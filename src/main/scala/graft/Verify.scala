@@ -27,16 +27,11 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     SparkEntry.sweepDeadScratch(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.util.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional query-name filter (same contract as Bench) for re-dumping

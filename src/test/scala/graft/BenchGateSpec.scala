@@ -150,12 +150,12 @@ class BenchGateSpec extends AnyFunSuite {
 
   test("the default history is keyed by sf AND core count, and the " +
       "results-file fallback only seeds from the same core count") {
-    assert(Bench.historyFileName("/data/sf0.1", "4")
-      == "bench_history_sf0.1_c4.json")
-    assert(Bench.historyFileName("/tmp/sf1", "32")
-      == "bench_history_sf1_c32.json")
-    assert(Bench.historyFileName("/tmp/sf1", "8")
-      != Bench.historyFileName("/tmp/sf1", "32"))
+    assert(Bench.historyFileName("/data/sf0.1", "4", 7168)
+      == "bench_history_sf0.1_c4_x7168.json")
+    assert(Bench.historyFileName("/tmp/sf1", "32", 49152)
+      == "bench_history_sf1_c32_x49152.json")
+    assert(Bench.historyFileName("/tmp/sf1", "8", 49152)
+      != Bench.historyFileName("/tmp/sf1", "32", 49152))
     def file(cpusField: String) =
       """{"metric":"total","value":9,"unit":"sec",""" +
         """"queries":{"q_a":2.0},"failed":[],""" + cpusField +
@@ -167,6 +167,12 @@ class BenchGateSpec extends AnyFunSuite {
       .isEmpty, "a 32-core results file must not seed a 4-core baseline")
     assert(Bench.parseQueryTimes(file(""), sf, Some("4")).isEmpty,
       "a results file without a host shape cannot prove its core count")
+  }
+
+  test("the default history is keyed by the driver heap ceiling too") {
+    assert(Bench.historyFileName("/data/sf0.1", "4", 7168)
+      != Bench.historyFileName("/data/sf0.1", "4", 49152),
+      "a 48 GB driver's cold floors must not seed a 7 GB run's re-time gate")
   }
 
   test("the results-file fallback only seeds from the same driver heap " +

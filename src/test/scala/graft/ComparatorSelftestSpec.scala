@@ -13,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ComparatorSelftestSpec extends AnyFunSuite {
 
   test("tools/check_local_selftest.py exists and passes") {
-    // repo root = first ancestor holding build.sbt (tests may run from a
-    // forked working dir)
-    def findRoot(d: java.io.File): Option[java.io.File] =
-      if (d == null) None
-      else if (new java.io.File(d, "build.sbt").exists()) Some(d)
-      else findRoot(d.getParentFile)
-    val root = findRoot(new java.io.File(".").getAbsoluteFile)
-      .getOrElse(fail("no build.sbt above CWD — cannot locate tools/"))
+    val root = SparkSpec.repoRoot
     val script = new java.io.File(root, "tools/check_local_selftest.py")
     assert(script.exists(),
       s"$script is missing — the comparator selftest must exist and run")

@@ -15,17 +15,8 @@ class PlanDigestSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def repoRoot: java.io.File = {
-    def find(d: java.io.File): Option[java.io.File] =
-      if (d == null) None
-      else if (new java.io.File(d, "build.sbt").exists()) Some(d)
-      else find(d.getParentFile)
-    find(new java.io.File(".").getAbsoluteFile)
-      .getOrElse(fail("no build.sbt above CWD"))
-  }
-
   test("optimized plans of the 20 pinned queries match plan_digests.json") {
-    val file = new java.io.File(repoRoot, "plan_digests.json")
+    val file = new java.io.File(SparkSpec.repoRoot, "plan_digests.json")
     val computed: Seq[(String, String)] = PlanDigest.Queries.map { name =>
       name -> cleanBuildDigest(name)
     }

@@ -6,14 +6,19 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session keeps the
   * suite runtime dominated by actual work, not session startup). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    graft.util.Sessions.local(4).appName("graft-test").getOrCreate()
+
+  /** The repo root: the first ancestor of the working directory holding
+    * build.sbt (forked tests may run from another directory). */
+  def repoRoot: java.io.File = {
+    def find(d: java.io.File): Option[java.io.File] =
+      if (d == null) None
+      else if (new java.io.File(d, "build.sbt").exists()) Some(d)
+      else find(d.getParentFile)
+    find(new java.io.File(".").getAbsoluteFile)
+      .getOrElse(throw new IllegalStateException("no build.sbt above CWD"))
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {

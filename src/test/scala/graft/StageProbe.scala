@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 // Optimization-round measurement probe — test scope only, never ships in
@@ -29,14 +28,8 @@ object StageProbe {
     val names = args.drop(2).toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROBE_ITERS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", (2L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (256L << 10).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.util.Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional conf overrides for A/B probes: SPARK_GRAFT_PROBE_CONF=k=v;k=v
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(';').foreach { kv =>

@@ -19,10 +19,7 @@ final case class PipelineConfig(
     outliers: Option[Outliers] = None,
     typoFix: Option[TypoFix] = None,
     encode: Option[Encode] = None,
-    normalize: Option[Normalize] = None,
-    /** Run the inter-stage sanitizer (reference P2). On by default to match
-      * reference semantics; turn off for pure op composition. */
-    sanitize: Boolean = true) {
+    normalize: Option[Normalize] = None) {
 
   /** Enabled ops in the reference's FIXED execution order
     * (`pipeline.py:142-152`). */
@@ -71,12 +68,12 @@ final case class PipelineReport(stages: Seq[StageReport]) {
 object Pipeline {
   def run(df: DataFrame, config: PipelineConfig): (DataFrame, PipelineReport) = {
     val in = Parallelize.singleSplit(df)
-    val start = if (config.sanitize) Sanitize.transform(in) else in
+    val start = Sanitize.transform(in)
     val (out, stages) = config.ops.foldLeft((start, Vector.empty[StageReport])) {
       case ((cur, reports), op) =>
         Try(op(cur)) match {
           case Success(res) =>
-            val next = if (config.sanitize) Sanitize.transform(res.df, cur) else res.df
+            val next = Sanitize.transform(res.df, cur)
             (next, reports :+ StageReport(op.name, ok = true, res.updates, None))
           case Failure(e) =>
             (cur, reports :+ StageReport(op.name, ok = false, Nil,

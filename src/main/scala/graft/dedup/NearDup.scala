@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{TextKernels, VectorKernels}
+import graft.util.Exprs.mix64
 
 /** Deduplication for LLM training corpora (SURVEY.md §7.6; BASELINE.json
   * north star): exact, MinHash+LSH near-dup, SimHash, n-gram Jaccard.
@@ -51,17 +52,6 @@ object NearDup {
   def shingles(c: Column, k: Int = 5): Column =
     TextKernels.shingles(normalize(c), k)
 
-  /** Distinct word n-gram shingles — more discriminative than character
-    * shingles on small-vocabulary text and ~10× smaller sets; the standard
-    * choice for corpus-scale near-dup detection. Token array bound once,
-    * same as [[shingles]]. */
-  def wordShingles(c: Column, n: Int = 3): Column =
-    element_at(transform(array(split(normalize(c), " ")), toks =>
-      when(size(toks) >= n,
-        array_distinct(transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n))))))
-        .otherwise(array().cast(ArrayType(StringType)))), 1)
-
   /** Exact Jaccard similarity of two shingle SETS (inputs must be
     * distinct arrays — every producer here applies array_distinct).
     * Uses |a ∪ b| = |a| + |b| − |a ∩ b| with the intersection size bound
@@ -104,23 +94,6 @@ object NearDup {
       .withColumn("__mh_hashes", transform(col(shCol), s => xxhash64(s)))
       .withColumn(sigCol, minhashFromHashes(col("__mh_hashes"), numHashes))
       .drop("__mh_hashes")
-
-  /** MinHash-LSH candidate pairs with exact-Jaccard verification.
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
-    *
-    * banding: signature split into `bands` rows of `numHashes/bands`; any
-    * equal band → candidate. Bucket join shuffles candidates only; the
-    * exact verification joins the two shingle sets back by id (broadcast
-    * when small, hash join at scale).
-    */
-  /** splitmix64 finalizer — public-domain bit mixer (Steele/Lea/Flood,
-    * "Fast Splittable Pseudorandom Number Generators", OOPSLA 2014). */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** FNV-1a 64 over UTF-8 bytes + splitmix64 finalize: a well-mixed,
     * deterministic 64-bit string hash with no Spark-internal dependency. */
@@ -229,7 +202,15 @@ object NearDup {
       .select(col("__id"), col("__s._1").as("__sig"), col("__s._2").as("__sh"))
   }
 
-  /** @param maxBucket LSH skew guard, the one remaining way this
+  /** MinHash-LSH candidate pairs with exact-Jaccard verification.
+    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
+    *
+    * banding: signature split into `bands` rows of `numHashes/bands`; any
+    * equal band → candidate. Bucket join shuffles candidates only; the
+    * exact verification joins the two shingle sets back by id (broadcast
+    * when small, hash join at scale).
+    *
+    * @param maxBucket LSH skew guard, the one remaining way this
     *   pipeline could go quadratic at corpus scale: a boilerplate
     *   document with millions of copies puts every copy in the SAME
     *   band-bucket, and the all-pairs candidate join inside that bucket

@@ -25,13 +25,8 @@ final class DoubleCounts(initialCapacity: Int = 1 << 10) {
 
   def size: Int = used
 
-  private def mix(k: Long): Int = {
-    // splitmix64 finalizer, truncated to the table mask
-    var z = k + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    (z ^ (z >>> 31)).toInt & (cap - 1)
-  }
+  // splitmix64 finalizer, truncated to the table mask
+  private def mix(k: Long): Int = graft.util.Exprs.mix64(k).toInt & (cap - 1)
 
   def add(bits: Long, n: Long): Unit = {
     var i = mix(bits)

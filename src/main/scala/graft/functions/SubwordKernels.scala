@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumn}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.types._
@@ -101,22 +100,17 @@ object SubwordTable {
 
 /** The Encode/Count pair over a [[SubwordTable]]: string in, null in →
   * null out. The generated code calls the table's `encode`/`count`. */
-sealed trait SubwordKernel extends UnaryExpression {
+sealed trait SubwordKernel extends UnaryExpression with RowKernel {
   def table: SubwordTable
   protected def op: String
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string argument, got $t")
-  }
+  override def inputTypes = Seq(StringType)
   override def prettyName: String = s"graft_${table.family}_$op"
 
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
+  override protected def callee(ctx: CodegenContext): String = {
     val ref = ctx.addReferenceObj("graftSubwordTable", table,
       classOf[SubwordTable].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.$op($c);")
+    s"$ref.$op"
   }
 }
 

@@ -3,35 +3,26 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, GraftColumn}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Native codegen'd text kernels — the r14 VectorKernels treatment
-  * applied to the remaining per-row string UDFs (r14 verdict #2):
-  * character shingling (feeds the MinHash family and n-gram Jaccard),
-  * the SimHash ±1 vote fold, and the Gopher repetition signals.
+/** Text kernels — the [[VectorKernels]] treatment applied to the
+  * remaining per-row string UDFs (r14 verdict #2): character shingling
+  * (feeds the MinHash family and n-gram Jaccard), the SimHash ±1 vote
+  * fold, the Gopher repetition signals, the TypeConvert probe mask and
+  * the Bloom membership probe.
   *
-  * Same design contract as [[VectorKernels]]: each expression is the
-  * BIT-IDENTICAL twin of the Scala UDF it replaces (same algorithm,
-  * same fold order — the oracle hashes cannot move), evaluates without
-  * the UDF's catalyst-converter boxing (Seq/case-class allocation per
-  * row per argument), and keeps the surrounding projection inside one
-  * WholeStageCodegen span. The string-heavy kernels ([[ShingleSet]],
-  * [[RepetitionStruct]], [[RepetitionKeep]]) generate a single static
-  * call into the compiled Scala kernel rather than inline Java — the
-  * work is hash-map/string building where Janino-compiled source has no
-  * edge over JIT'd bytecode, and the win is dropping the converter
-  * layer and the codegen-span break, not re-expressing a HashMap in
-  * generated Java. [[SimhashVote]] is a pure primitive loop and is
-  * generated inline.
+  * Each expression runs the function here that replaced its Scala UDF
+  * (same algorithm, same fold order — the oracle hashes cannot move),
+  * without the UDF's catalyst-converter boxing (Seq/case-class
+  * allocation per row per argument), and keeps the surrounding
+  * projection inside one WholeStageCodegen span ([[RowKernel]]).
   *
   * Null contracts mirror the UDFs exactly: shingles(null) = empty
   * array, repetition(null) = the zero struct, keep(null) = true (a
@@ -81,6 +72,26 @@ object TextKernels {
     graft.text.QualityFilters.keep(if (s == null) null else s.toString,
       maxDupWordFrac, maxTopBigramCharFrac, maxTopTrigramCharFrac,
       maxDupFivegramCharFrac)
+
+  /** The SimHash ±1 vote fold behind [[SimhashVote]]: per token, then
+    * per bit. */
+  def simhashVoteKernel(hs: ArrayData, bits: Int): Long = {
+    val votes = new Array[Long](bits)
+    val n = hs.numElements()
+    var t = 0
+    while (t < n) {
+      val h = hs.getLong(t)
+      var b = 0
+      while (b < bits) {
+        votes(b) += (if (((h >>> b) & 1L) == 1L) 1L else -1L); b += 1
+      }
+      t += 1
+    }
+    var sig = 0L
+    var b = 0
+    while (b < bits) { if (votes(b) > 0) sig |= 1L << b; b += 1 }
+    sig
+  }
 
   /** [[graft.ops.TypeConvert.probeMask]] over a UTF8String — the kernel
     * behind [[ProbeMask]] (r15 verdict next-#1: the probe ran as a
@@ -214,159 +225,90 @@ object TextKernels {
     GraftColumn(BloomMightContainLong(expression(hash), bloom))
 }
 
-/** Distinct character k-shingles — codegen twin of the former
+/** Distinct character k-shingles, replacing the former
   * `NearDup.shingleUdf`. NULL IN → EMPTY ARRAY out (the UDF contract:
-  * a null text simply has no shingles), so the expression handles its
-  * own null instead of riding nullSafeEval. */
-case class ShingleSet(child: Expression, k: Int) extends UnaryExpression {
+  * a null text simply has no shingles), so the kernel takes the null
+  * itself. */
+case class ShingleSet(child: Expression, k: Int)
+    extends UnaryExpression with RowKernel {
   require(k >= 1, s"shingle size must be >= 1, got $k")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles needs a string argument, got $t")
-  }
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
+  override protected def nullTotal: Boolean = true
   override def prettyName: String = "graft_shingles"
 
   override def eval(input: InternalRow): Any =
     TextKernels.shingleKernel(
       child.eval(input).asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      ArrayData ${ev.value} = graft.functions.TextKernels.shingleKernel(
-        ${c.isNull} ? null : ${c.value}, $k);
-      """, isNull = FalseLiteral)
-  }
+  override protected def callee(ctx: CodegenContext): String =
+    "graft.functions.TextKernels.shingleKernel"
+  override protected def constArgs(ctx: CodegenContext): Seq[Any] = Seq(k)
 
   override protected def withNewChildInternal(
       newChild: Expression): ShingleSet = copy(child = newChild)
 }
 
-/** SimHash ±1 vote fold over a token-hash array — codegen twin of the
-  * former `NearDup.simhashVoteUdf`'s loop, same per-token then per-bit
+/** SimHash ±1 vote fold over a token-hash array, replacing the former
+  * `NearDup.simhashVoteUdf`'s loop, same per-token then per-bit
   * accumulation order. Null array → null signature (the UDF contract). */
 case class SimhashVote(child: Expression, bits: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RowKernel {
   require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash_vote needs an array<bigint> argument, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash_vote"
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val hs = a.asInstanceOf[ArrayData]
-    val votes = new Array[Long](bits)
-    val n = hs.numElements()
-    var t = 0
-    while (t < n) {
-      val h = hs.getLong(t)
-      var b = 0
-      while (b < bits) {
-        votes(b) += (if (((h >>> b) & 1L) == 1L) 1L else -1L); b += 1
-      }
-      t += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < bits) { if (votes(b) > 0) sig |= 1L << b; b += 1 }
-    sig
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val votes = ctx.freshName("votes")
-      val n = ctx.freshName("n")
-      val t = ctx.freshName("t")
-      val h = ctx.freshName("h")
-      val b = ctx.freshName("b")
-      val b2 = ctx.freshName("b2")
-      val sig = ctx.freshName("sig")
-      s"""
-         |long[] $votes = new long[$bits];
-         |int $n = $a.numElements();
-         |for (int $t = 0; $t < $n; $t++) {
-         |  long $h = $a.getLong($t);
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    $votes[$b] += ((($h >>> $b) & 1L) == 1L) ? 1L : -1L;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b2 = 0; $b2 < $bits; $b2++) {
-         |  if ($votes[$b2] > 0) $sig |= 1L << $b2;
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any): Any =
+    TextKernels.simhashVoteKernel(a.asInstanceOf[ArrayData], bits)
+  override protected def callee(ctx: CodegenContext): String =
+    "graft.functions.TextKernels.simhashVoteKernel"
+  override protected def constArgs(ctx: CodegenContext): Seq[Any] = Seq(bits)
 
   override protected def withNewChildInternal(
       newChild: Expression): SimhashVote = copy(child = newChild)
 }
 
-/** Gopher repetition signals as a struct — codegen twin of the former
+/** Gopher repetition signals as a struct, replacing the former
   * `QualityFilters.repetitionUdf`. Null text → the ZERO struct (the
   * UDF contract: no words, no repetition), never a null struct. */
-case class RepetitionStruct(child: Expression) extends UnaryExpression {
+case class RepetitionStruct(child: Expression)
+    extends UnaryExpression with RowKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_repetition needs a string argument, got $t")
-  }
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = TextKernels.repetitionSchema
-  override def nullable: Boolean = false
+  override protected def nullTotal: Boolean = true
   override def prettyName: String = "graft_repetition"
 
   override def eval(input: InternalRow): Any =
     TextKernels.repetitionKernel(
       child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      InternalRow ${ev.value} = graft.functions.TextKernels.repetitionKernel(
-        ${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
+  override protected def callee(ctx: CodegenContext): String =
+    "graft.functions.TextKernels.repetitionKernel"
 
   override protected def withNewChildInternal(
       newChild: Expression): RepetitionStruct = copy(child = newChild)
 }
 
-/** The Gopher keep-predicate as one boolean kernel call — codegen twin
-  * of the former `QualityFilters.keepUdf` (thresholds folded INTO the
-  * kernel so the plan carries ONE evaluation per row by construction;
-  * see gopherRepetitionFilter's scaladoc). Null text → true. */
+/** The Gopher keep-predicate as one boolean kernel call, replacing the
+  * former `QualityFilters.keepUdf` (thresholds folded INTO the kernel so
+  * the plan carries ONE evaluation per row by construction; see
+  * gopherRepetitionFilter's scaladoc). Null text → true. */
 case class RepetitionKeep(child: Expression, maxDupWordFrac: Double,
     maxTopBigramCharFrac: Double, maxTopTrigramCharFrac: Double,
-    maxDupFivegramCharFrac: Double) extends UnaryExpression {
-  // thresholds are interpolated into generated Java source (same
-  // constraint as SignatureAgreement.minFrac)
+    maxDupFivegramCharFrac: Double) extends UnaryExpression with RowKernel {
+  // thresholds are literals in the generated call (same constraint as
+  // SignatureAgreement.minFrac)
   require(java.lang.Double.isFinite(maxDupWordFrac) &&
     java.lang.Double.isFinite(maxTopBigramCharFrac) &&
     java.lang.Double.isFinite(maxTopTrigramCharFrac) &&
     java.lang.Double.isFinite(maxDupFivegramCharFrac),
     "repetition thresholds must be finite")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_rep_keep needs a string argument, got $t")
-  }
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
+  override protected def nullTotal: Boolean = true
   override def prettyName: String = "graft_rep_keep"
 
   override def eval(input: InternalRow): Any =
@@ -374,95 +316,68 @@ case class RepetitionKeep(child: Expression, maxDupWordFrac: Double,
       child.eval(input).asInstanceOf[UTF8String],
       maxDupWordFrac, maxTopBigramCharFrac, maxTopTrigramCharFrac,
       maxDupFivegramCharFrac)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.value} = graft.functions.TextKernels.repetitionKeepKernel(
-        ${c.isNull} ? null : ${c.value}, $maxDupWordFrac,
-        $maxTopBigramCharFrac, $maxTopTrigramCharFrac,
-        $maxDupFivegramCharFrac);
-      """, isNull = FalseLiteral)
-  }
+  override protected def callee(ctx: CodegenContext): String =
+    "graft.functions.TextKernels.repetitionKeepKernel"
+  override protected def constArgs(ctx: CodegenContext): Seq[Any] =
+    Seq(maxDupWordFrac, maxTopBigramCharFrac, maxTopTrigramCharFrac,
+      maxDupFivegramCharFrac)
 
   override protected def withNewChildInternal(
       newChild: Expression): RepetitionKeep = copy(child = newChild)
 }
 
-/** The TypeConvert five-probe bitmask — codegen twin of the former
+/** The TypeConvert five-probe bitmask, replacing the former
   * `TypeConvert.probeMask` Scala UDF (the per-cell probe on every string
-  * column of the auto-detection scan). One static kernel call per cell
+  * column of the auto-detection scan). One kernel call per cell
   * ([[TextKernels.probeMaskUtf8]] — ASCII cells scan the UTF-8 bytes in
   * place, no String allocation), no converter boxing, and the detection
   * projection stays inside one WholeStageCodegen span. Null text → 0L
-  * (bit 0 clear), the UDF contract, so the expression handles its own
-  * null. */
-case class ProbeMask(child: Expression) extends UnaryExpression {
+  * (bit 0 clear), the UDF contract, so the kernel takes the null
+  * itself. */
+case class ProbeMask(child: Expression) extends UnaryExpression with RowKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_probe_mask needs a string argument, got $t")
-  }
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
+  override protected def nullTotal: Boolean = true
   override def prettyName: String = "graft_probe_mask"
 
   override def eval(input: InternalRow): Any =
     TextKernels.probeMaskUtf8(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      long ${ev.value} = graft.functions.TextKernels.probeMaskUtf8(
-        ${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
+  override protected def callee(ctx: CodegenContext): String =
+    "graft.functions.TextKernels.probeMaskUtf8"
 
   override protected def withNewChildInternal(
       newChild: Expression): ProbeMask = copy(child = newChild)
 }
 
-/** Bloom membership probe over a 64-bit hash — codegen twin of the
-  * former `Decontaminate.flagContaminatedBloom` Long→Boolean UDF. The
-  * filter rides as a BROADCAST handle (not a child expression): a
+/** Bloom membership probe over a 64-bit hash, replacing the former
+  * `Decontaminate.flagContaminatedBloom` Long→Boolean UDF. The filter
+  * rides as a BROADCAST handle (not a child expression): a
   * serialized-bytes literal child would embed megabytes in the plan
   * string and re-ship per stage, while the broadcast ships once per
-  * executor — the 100 TB shape. Codegen materializes the filter from
-  * the broadcast ONCE per codegen instance (a mutable-state init, the
-  * `addReferenceObj` route [[HyperplaneSignature]] established) and
-  * probes with a primitive long per row — no boxing, no codegen-span
-  * break.
+  * executor — the 100 TB shape. The generated code materializes the
+  * filter from the broadcast ONCE per codegen instance (a mutable-state
+  * init) and probes with a primitive long per row — no boxing, no
+  * codegen-span break.
   *
   * Built by [[TextKernels.bloomContains]]
   * ([[graft.text.Decontaminate.flagContaminatedBloom]] is the caller). */
 case class BloomMightContainLong(child: Expression,
-    bloom: Broadcast[BloomFilter]) extends UnaryExpression {
+    bloom: Broadcast[BloomFilter]) extends UnaryExpression with RowKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom_contains needs a bigint argument, got $t")
-  }
+  override def inputTypes = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_contains"
 
   override protected def nullSafeEval(h: Any): Any =
     bloom.value.mightContainLong(h.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
+  override protected def callee(ctx: CodegenContext): String = {
     val bcRef = ctx.addReferenceObj("graftBloomBc", bloom,
       "org.apache.spark.broadcast.Broadcast")
     val filter = ctx.addMutableState(
       "org.apache.spark.util.sketch.BloomFilter", "graftBloomFilter",
       v => s"$v = (org.apache.spark.util.sketch.BloomFilter) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, h =>
-      s"${ev.value} = $filter.mightContainLong($h);")
+    s"$filter.mightContainLong"
   }
 
   override protected def withNewChildInternal(

@@ -455,13 +455,6 @@ object Multimodal {
     withSha.select(col("*") +: feats: _*).drop("_sha_hex")
   }
 
-  /** Frame-sample stand-in: pick every `stride`-th byte as a "frame"
-    * (the real operator samples video frames; same slicing plumbing). */
-  def sampleBytes(df: DataFrame, stride: Int = 100): DataFrame =
-    df.withColumn("sampled",
-      transform(sequence(lit(1), greatest(length(col("content")), lit(1)),
-        lit(stride)), i => substr(col("content"), i, lit(1))))
-
   /** Frame sampling over an opaque binary payload: fixed `frameBytes`-size
     * frames (a partial tail frame counts), keep every `every`-th, emit one
     * row per kept frame with its md5 — the shape a video frame-sampler

@@ -18,9 +18,10 @@ import graft.util.Exprs._
   *    updates only; StringType is kept (parquet dictionary encoding is the
   *    storage analogue of pandas' `category`, SURVEY.md §1.2)
   *
-  * Cost: one ratio-statistics job over all string columns + (only when a
-  * datetime shape-candidate survives) one parse-ratio job over those
-  * columns + one projection. Column-count independent.
+  * Cost: one ratio-statistics job over all string columns (the datetime
+  * parse count inside it gated per row on a cheap shape probe) + one
+  * projection. Column-count independent. Datetimes parse through
+  * [[TypeConvert.DefaultFormats]].
   *
   * Manual conversions: `manual` maps column → target ("int" | "float" |
   * "str" | "datetime" | "bool"); failures coerce to null (the reference's
@@ -29,7 +30,6 @@ import graft.util.Exprs._
 final case class TypeConvert(
     auto: Boolean = true,
     manual: Map[String, String] = Map.empty,
-    datetimeFormats: Seq[String] = TypeConvert.DefaultFormats,
     /** pandas `errors=` semantics for manual conversions
       * (`dataTypeConversion.py:43-73`): "coerce" nulls failed values;
       * "raise" fails the op if ANY non-null value does not convert;
@@ -56,7 +56,7 @@ final case class TypeConvert(
         else {
           val aggs = manual.toSeq.map { case (c, t) =>
             count(when(col(c).isNotNull &&
-              TypeConvert.manualCast(col(c), t, datetimeFormats).isNull, 1)).as(c)
+              TypeConvert.manualCast(col(c), t).isNull, 1)).as(c)
           }
           val row = fitDf.agg(aggs.head, aggs.tail: _*).head()
           val failing = manual.keys.filter(c =>
@@ -71,7 +71,7 @@ final case class TypeConvert(
     }
     def withManual(d0: DataFrame): DataFrame =
       manualKept.foldLeft(d0) { case (d, (c, t)) =>
-        d.withColumn(c, TypeConvert.manualCast(col(c), t, datetimeFormats))
+        d.withColumn(c, TypeConvert.manualCast(col(c), t))
       }
     val manualDf = withManual(df)
     lazy val fitManualDf = if (fitDf eq df) manualDf else withManual(fitDf)
@@ -81,9 +81,6 @@ final case class TypeConvert(
     if (strCols.isEmpty) return OpResult(manualDf, Seq("no string columns to detect"))
 
     // job 1: parse ratios + cardinality for every string column at once.
-    // Datetime detection is two-phase: a cheap shape probe here (every
-    // pattern in the format chain matches it), the expensive multi-format
-    // parse only over surviving candidates (job 1b, usually zero columns).
     // approx_count_distinct instead of countDistinct: exact at the small
     // cardinalities the thresholds care about, and avoids the Expand
     // operator a multi-countDistinct agg would force over the whole scan.
@@ -97,19 +94,14 @@ final case class TypeConvert(
     // r16: the scan runs as the graft_probe_mask codegen kernel
     // ([[graft.functions.ProbeMask]] — ASCII cells scan UTF-8 bytes in
     // place), not the Scala UDF it started as; same bitmask bit for bit.
-    // r21: with the DEFAULT format chain, the true parse-ratio count runs
-    // INSIDE job 1, per-row-gated on the shape bit — bit 3 unset costs one
-    // bitmask test, bit 3 set runs the same regex-gated chain job 1b ran
-    // for every row of a candidate column. Equal counts by construction:
-    // every chain pattern's shape regex implies the bit-3 probe
-    // ([[DatetimeShapeRegex]] is a necessary condition for all six default
-    // formats), so gating on the bit drops only rows the chain nulls
-    // anyway. This removes job 1b — one whole scan+agg job — from every
-    // auto() call on default formats (guide §1.2: fewer passes first).
-    // Custom format chains keep the separate job-1b path below: no cheap
-    // per-row gate exists for them, and fusing would charge every
-    // non-datetime string cell the full multi-format regex chain.
-    val gated = datetimeFormats == TypeConvert.DefaultFormats
+    // r21: the true datetime parse-ratio count runs INSIDE job 1,
+    // per-row-gated on the shape bit — bit 3 unset costs one bitmask
+    // test, bit 3 set runs the regex-gated format chain. Equal counts by
+    // construction: every chain pattern's shape regex implies the bit-3
+    // probe ([[DatetimeShapeRegex]] is a necessary condition for all six
+    // [[TypeConvert.DefaultFormats]]), so gating on the bit drops only
+    // rows the chain nulls anyway — no separate parse job over candidate
+    // columns (guide §1.2: fewer passes first).
     val flagCols = strCols.flatMap { c =>
       Seq(graft.functions.TextKernels.probeMask(col(c)).as(s"${c}__m"),
         col(c).as(s"${c}__v"))
@@ -123,12 +115,12 @@ final case class TypeConvert(
       bit(c, 2).as(s"${c}__int"),
       bit(c, 3).as(s"${c}__dtc"),
       bit(c, 4).as(s"${c}__bool"),
-      approx_count_distinct(col(s"${c}__v")).as(s"${c}__card")) ++
-      (if (gated) Seq(count(when(
+      approx_count_distinct(col(s"${c}__v")).as(s"${c}__card"),
+      count(when(
         shiftright(col(s"${c}__m"), 3).bitwiseAND(lit(1L)) === 1L &&
-          tryTimestampChain(trim(col(s"${c}__v")), datetimeFormats).isNotNull,
+          tryTimestampChain(trim(col(s"${c}__v")),
+            TypeConvert.DefaultFormats).isNotNull,
         1)).as(s"${c}__dtp"))
-       else Nil)
     }
     val row = flags.agg(aggs.head, aggs.tail: _*).head()
     def l(n: String): Long = {
@@ -136,29 +128,12 @@ final case class TypeConvert(
       if (row.isNullAt(i)) 0L else row.getLong(i) // sum over 0 rows is null
     }
 
-    // job 1b (custom chains only — default chains fused the count above)
-    val dtCandidates =
-      if (gated) Nil
-      else strCols.filter { c =>
-        val n = l(s"${c}__n")
-        n > 0 && l(s"${c}__num") <= 0.7 * n
-      }
-    val dtParsed: Map[String, Long] =
-      if (gated) strCols.map(c => c -> l(s"${c}__dtp")).toMap
-      else if (dtCandidates.isEmpty) Map.empty
-      else {
-        val a = dtCandidates.map(c => count(when(tryTimestampChain(
-          trim(col(c).cast(StringType)), datetimeFormats).isNotNull, 1)).as(c))
-        val r = fitManualDf.agg(a.head, a.tail: _*).head()
-        dtCandidates.map(c => c -> r.getLong(r.fieldIndex(c))).toMap
-      }
-
     val decisions: Map[String, String] = strCols.flatMap { c =>
       val n = l(s"${c}__n")
       if (n == 0) None
       else if (l(s"${c}__num") > 0.7 * n)
         Some(c -> (if (l(s"${c}__int") == l(s"${c}__num")) "long" else "double"))
-      else if (dtParsed.getOrElse(c, 0L) > 0.5 * n) Some(c -> "datetime")
+      else if (l(s"${c}__dtp") > 0.5 * n) Some(c -> "datetime")
       else if (l(s"${c}__bool") == n && l(s"${c}__card") > 1 && l(s"${c}__card") <= 16)
         Some(c -> "boolcand")
       else if (l(s"${c}__card") < 0.5 * n && l(s"${c}__card") < 100)
@@ -176,7 +151,8 @@ final case class TypeConvert(
       decisions.get(c) match {
         case Some("long") => tryLong(col(c)).as(c)
         case Some("double") => tryDouble(col(c)).as(c)
-        case Some("datetime") => tryTimestampChain(trim(col(c)), datetimeFormats).as(c)
+        case Some("datetime") =>
+          tryTimestampChain(trim(col(c)), TypeConvert.DefaultFormats).as(c)
         case Some("boolcand") =>
           when(lower(trim(col(c))).isin(TypeConvert.TrueTokens: _*), lit(true))
             .when(lower(trim(col(c))).isin(TypeConvert.FalseTokens: _*), lit(false))
@@ -301,11 +277,11 @@ object TypeConvert {
   val FalseTokens = Seq("false", "0", "no", "n", "f")
   val BoolTokens: Seq[String] = TrueTokens ++ FalseTokens
 
-  def manualCast(c: Column, target: String, formats: Seq[String]): Column = target match {
+  def manualCast(c: Column, target: String): Column = target match {
     case "int" | "long" => tryLong(c)
     case "float" | "double" => tryDouble(c)
     case "str" | "string" => c.cast(StringType)
-    case "datetime" => tryTimestampChain(trim(c.cast(StringType)), formats)
+    case "datetime" => tryTimestampChain(trim(c.cast(StringType)), DefaultFormats)
     case "bool" | "boolean" =>
       when(lower(trim(c.cast(StringType))).isin(TrueTokens: _*), lit(true))
         .when(lower(trim(c.cast(StringType))).isin(FalseTokens: _*), lit(false))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.TypoFix
+import graft.util.Exprs.mix64
 
 /** Distributed fuzzy value-matching — the 100 TB path for the reference's
   * `fuzzy_match` (`/root/reference/methods/spellingFix.py:145-199`,
@@ -35,13 +36,6 @@ import graft.ops.TypoFix
   * similar short strings share most bigrams).
   */
 object DistributedFuzzy {
-
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   /** DENSE MinHash signature over character bigrams of the lowercased
     * value (single-char values use the one unigram): sig(i) = min over

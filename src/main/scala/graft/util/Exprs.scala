@@ -94,9 +94,14 @@ object Exprs {
   def tryTimestampChain(c: Column, patterns: Seq[String]): Column =
     coalesce(patterns.map(p => tryTimestamp(c, p)): _*)
 
-  /** IEEE-safe division: null (not error/Infinity) when denominator is 0. */
-  def safeDiv(num: Column, den: Column): Column =
-    when(den =!= lit(0.0), num / den)
+  /** splitmix64 finalizer — public-domain bit mixer (Steele/Lea/Flood,
+    * "Fast Splittable Pseudorandom Number Generators", OOPSLA 2014). */
+  def mix64(z0: Long): Long = {
+    var z = z0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
 
   /** ±Infinity → null (numeric sanitizer building block,
     * `/root/reference/pipeline.py:83`). */

@@ -146,7 +146,7 @@ class OpsSpec extends SparkSpec {
     val df = nums
     val (out, report) = Pipeline.run(df, PipelineConfig(
       missingValues = Some(MissingValues("no_such_strategy")),
-      dedup = true, sanitize = false))
+      dedup = true))
     assert(report.stages.exists(s => !s.ok))
     assert(out.count() == df.count()) // dedup ran on the carried-forward df
   }

@@ -93,15 +93,14 @@ class TextOpsSpec extends SparkSpec {
 
   test("fused datetime detection count equals the two-job path on " +
       "adversarial shapes (r21 ADVICE parity)") {
-    // The default-format path fuses the parse-ratio count into job 1,
-    // gated on the bit-3 shape probe. Parity argument: every default
-    // format is gated by an EXACT shape regex (patternShapeRegex: yyyy →
-    // \d{4}), so SMART-mode over-acceptance (5-digit years, 1-digit
-    // month/day) cannot occur, and every format regex implies the bit-3
-    // probe. This test executes both paths — the fused default chain vs
-    // the same chain with the last format DUPLICATED (coalesce-identical
-    // parse results, but != DefaultFormats so the old job-1b path runs) —
-    // over exactly the adversarial values the advice named.
+    // Detection counts datetime parses inside job 1, gated on the bit-3
+    // shape probe. Parity argument: every default format is gated by an
+    // EXACT shape regex (patternShapeRegex: yyyy → \d{4}), so SMART-mode
+    // over-acceptance (5-digit years, 1-digit month/day) cannot occur,
+    // and every format regex implies the bit-3 probe. The separate
+    // parse job this test once compared against is gone; the reference
+    // is now the format chain's own parse count over every row, with no
+    // shape gate, over exactly the adversarial values the advice named.
     val rows = Seq(
       "12345-01-01", // 5-digit year: both probe and chain must reject
       "2021-1-1",    // 1-digit month/day: bit-3 yes, every format regex no
@@ -112,15 +111,16 @@ class TextOpsSpec extends SparkSpec {
       "2024-11-12", "2024-12-13")
     val df = rows.toDF("d")
     val fused = TypeConvert(auto = true)(df)
-    val twoJob = TypeConvert(auto = true,
-      datetimeFormats =
-        TypeConvert.DefaultFormats :+ TypeConvert.DefaultFormats.last)(df)
-    assert(fused.df.schema("d").dataType == twoJob.df.schema("d").dataType,
-      "fused and two-job detection must reach the same type decision")
+    val chain = graft.util.Exprs.tryTimestampChain(trim($"d"),
+      TypeConvert.DefaultFormats)
+    val parsed = df.where(chain.isNotNull).count()
+    assert(parsed > 0.5 * rows.size, "the fixture must detect as datetime")
+    assert(fused.df.schema("d").dataType.typeName == "timestamp",
+      s"$parsed of ${rows.size} rows parse: the decision must be datetime")
     val a = fused.df.collect().map(_.toString).sorted
-    val b = twoJob.df.collect().map(_.toString).sorted
+    val b = df.select(chain.as("d")).collect().map(_.toString).sorted
     assert(a.sameElements(b),
-      "fused and two-job conversion outputs must be identical")
+      "the conversion output must be the format chain's parse")
   }
 
   test("numeric probe matches pandas token acceptance, not Java's parser") {
